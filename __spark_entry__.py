@@ -6,7 +6,7 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in ``bytesme_etl_batch_pipeline_spark``; this module is
-a thin adapter over its query catalog (``plans/queries.py``; ~150 named
+a thin adapter over its query catalog (``plans/queries.py``; 244 named
 queries, all but a few sketch queries with DuckDB oracle twins —
 ``len(queries())`` / ``len(oracle_sql())`` are the live counts).
 COVERAGE.md maps every SURVEY §2

@@ -7,9 +7,9 @@ partitioning is pinned, which a 100 TB shuffle never guarantees. The robust
 contract: derive every random value from a *stable row key* + an explicit
 seed via a hash — reproducible on any cluster, any partitioning, any retry.
 
-Hash = md5-derived 48 bits (functions shared with textops) so DuckDB oracles
-replay values exactly; production would swap xxhash64 for speed without
-changing semantics.
+Hash = md5-derived 48 bits (``md5_hash48``, shared with textops) so DuckDB
+oracles replay values exactly; production would swap xxhash64 for speed
+without changing semantics.
 """
 
 from __future__ import annotations
@@ -17,9 +17,13 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..operators.textops import md5_hash48
-
 TWO_48 = float(2**48)
+
+
+def md5_hash48(col: Column) -> Column:
+    """First 12 hex chars of md5 as a 48-bit int — exact in both Spark
+    (``conv``) and DuckDB (hex-digit polynomial), and < 2^53 so float-safe."""
+    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
 
 
 def hash_uniform(key: Column, seed: int | str) -> Column:
@@ -59,11 +63,3 @@ def ratings_column(key: Column, seed: int | str = 42, scale: float = 50.0) -> Co
 def orders_column(key: Column, seed: int | str = 42) -> Column:
     """Reference orders model (``generate_mock_data.py:39-40``): U{0..499}."""
     return hash_uniform_int(key, f"{seed}-ord", 0, 500)
-
-
-def price_ladder(base: Column, step: Column, n_sizes: int = 3) -> Column:
-    """Size-ladder price derivation (``generate_mock_data.py:67-79``):
-    ``[base + i*step for i in range(n)]`` as a pipe-joined string."""
-    seq = F.sequence(F.lit(0), F.lit(n_sizes - 1))
-    prices = F.transform(seq, lambda i: (base + i * step).cast("long").cast("string"))
-    return F.array_join(prices, "|")

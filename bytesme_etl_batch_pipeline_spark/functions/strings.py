@@ -58,18 +58,6 @@ def parse_unit_price(col: Column | str, schema: StructType) -> Column:
     return F.when(is_json, F.from_json(normalize_quoted_json(c), schema))
 
 
-def pipe_array(col: Column | str) -> Column:
-    """``split('|')`` (reference ``seperate_tables.py:82-83``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(c, r"\|")
-
-
-def pipe_join(col: Column | str) -> Column:
-    """``'|'.join(list)`` (reference ``generate_mock_data.py:77-78``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.array_join(c, "|")
-
-
 class ParseUnitPriceUDTF:
     """Python UDTF (Spark 4 table-function surface, SURVEY §2.13): explode
     the reference's single-quoted size/price struct

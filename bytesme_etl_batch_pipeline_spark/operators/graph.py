@@ -36,10 +36,10 @@ from pyspark.sql import functions as F
 
 class ConvergenceError(RuntimeError):
     """Raised when a bounded iterative algorithm hits ``max_iter`` without
-    reaching its fixpoint. A dedicated type so adaptive callers
-    (``connected_components_auto``) can distinguish "needs more rounds /
-    a different strategy" from unrelated runtime failures (Arrow, conf,
-    codegen) that must surface, not trigger a silent re-run."""
+    reaching its fixpoint. A dedicated type so callers can distinguish
+    "needs more rounds / a different strategy" from unrelated runtime
+    failures (Arrow, conf, codegen) that must surface, not trigger a
+    silent re-run."""
 
 
 def connected_components(
@@ -59,9 +59,8 @@ def connected_components(
     NULL-endpoint edges and self-loops are dropped, so a node whose every
     edge is junk does not appear in the output. Without this the two
     variants diverge on dirty input (propagation would emit a NULL node
-    labeled by its neighbors, and self-loop-only singletons), and
-    ``connected_components_auto``'s escalation would silently change the
-    result shape mid-query.
+    labeled by its neighbors, and self-loop-only singletons), and a
+    caller switching variants would silently change the result shape.
     """
     e = (
         edges.select(src, dst)
@@ -293,34 +292,6 @@ def connected_components_star(
             # no DataFrame escapes on the error path (ConvergenceError or a
             # mid-round failure) — the last round's checkpoint blocks would
             # otherwise stay pinned for the SparkContext lifetime, one
-            # edge-table copy per failed attempt (the auto variant catches
-            # ConvergenceError and keeps the session running).
+            # edge-table copy per failed attempt (a caller may catch
+            # ConvergenceError and keep the session running).
             free_checkpoint(b.sparkSession, held_ids)
-
-
-def connected_components_auto(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    propagation_rounds: int = 5,
-    max_iter: int = 25,
-) -> DataFrame:
-    """One entry point that picks the CC strategy adaptively (VERDICT r3
-    item 8): run min-label propagation first — its rounds are the cheapest
-    (one label-sized shuffle join + map-side min) and near-dup candidate
-    graphs are almost always shallow — and ESCALATE to the alternating
-    star contraction only if the graph hasn't converged within
-    ``propagation_rounds`` (the signature of a high-diameter component,
-    where propagation needs Θ(diameter) rounds but star needs O(log²)).
-
-    A cheap a-priori diameter estimate would itself cost a multi-round
-    computation, so the proxy IS the bounded propagation attempt: shallow
-    graphs (the common case) never pay the star variant's heavier
-    two-join rounds, and pathological chains abandon propagation after a
-    fixed, small spend. Both branches return the identical fixpoint
-    (property-tested), so the choice is invisible to callers.
-    """
-    try:
-        return connected_components(edges, src, dst, max_iter=propagation_rounds)
-    except ConvergenceError:
-        return connected_components_star(edges, src, dst, max_iter=max_iter)

@@ -33,30 +33,6 @@ def mock_generator(prompt: str) -> str:
     return f"Auto-description [{tag}]"
 
 
-def http_generator(endpoint: str, model: str, timeout_s: float = 30.0) -> GenerateFn:
-    """Production backend factory (reference ``POST /api/generate``,
-    ``generate_mock_data.py:52-58``): one session per executor, retry once,
-    '' on failure — same error contract as the reference."""
-
-    def gen(prompt: str) -> str:  # pragma: no cover - needs a live endpoint
-        import json
-        import urllib.request
-
-        body = json.dumps({"model": model, "prompt": prompt, "stream": False}).encode()
-        for _ in range(2):
-            try:
-                req = urllib.request.Request(
-                    endpoint, data=body, headers={"Content-Type": "application/json"}
-                )
-                with urllib.request.urlopen(req, timeout=timeout_s) as r:
-                    return json.loads(r.read()).get("response", "")
-            except Exception:
-                continue
-        return ""
-
-    return gen
-
-
 def enrich_descriptions(
     df: DataFrame,
     text_col: str,

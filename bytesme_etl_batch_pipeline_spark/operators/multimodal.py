@@ -370,105 +370,3 @@ def phash_media_arrow(
         ]
     )
     return media.mapInArrow(run, schema=schema)
-
-
-def fake_phash_expr(payload) -> "F.Column":
-    """JVM-expression twin of ``FakeCodec.pixels_hash`` (``ahash64`` over
-    ``_fake_pixels``) — the synthetic codec is pure md5 arithmetic, so the
-    whole decode+hash collapses into codegen'd built-ins with NO Python
-    boundary (guide §4.1: built-ins over UDFs). Production codecs
-    (PIL/ffmpeg) keep the ``phash_media``/``phash_media_arrow`` Arrow
-    stages; this path exists because evaluating the deterministic stand-in
-    row-at-a-time in Python was the dominant cost of the catalog's media
-    dedup query (64 hashlib.md5 calls per row).
-
-    Exactness notes (asserted element-wise against the Python codec in
-    tests/test_operators.py):
-
-    * 64-byte payloads ARE the pixel grid — read via hex() 2-char slices;
-      anything else expands from md5 hex chaining exactly like
-      ``_fake_pixels`` (Spark ``md5()`` hex output == hexdigest(); string
-      inputs cast to UTF-8 binary == ``str.encode()``).
-    * the mean threshold compares INTEGERS: ``p > sum/64.0`` ⟺
-      ``64*p > sum`` (sum ≤ 64·255, so the double division is exact and
-      the rational comparison is equivalent) — no float in the plan.
-    * bit 63 via Java ``1L << 63`` = Long.MIN_VALUE reproduces the
-      two's-complement fold ``h - 2**64`` of the Python path; disjoint
-      bit ORs equal the Python accumulation.
-    * the pixel array is bound as a LAMBDA VARIABLE (``transform`` over a
-      one-element array) so Catalyst cannot inline the 64-md5 projection
-      into each of the 64 bit terms — the expensive expression evaluates
-      once per row by construction, not by optimizer grace.
-
-    NULL payload → NULL phash (callers drop NULL payloads first, matching
-    ``phash_media``'s dead-letter contract)."""
-    p = F.col(payload) if isinstance(payload, str) else payload
-    idx = F.sequence(F.lit(0), F.lit(63))
-    # pixels: raw bytes for a 64-byte payload, md5-hex chain otherwise
-    hexs = F.hex(p)  # uppercase; conv() is case-insensitive
-    px_raw = F.transform(
-        idx, lambda i: F.conv(F.substr(hexs, i * 2 + 1, F.lit(2)), 16, 10).cast("int")
-    )
-    # seed md5 bound as a lambda variable (same one-element-array trick as
-    # below) so the payload is hashed once per row, not once per pixel
-    px_md5 = F.element_at(
-        F.transform(
-            F.array(F.md5(p)),
-            lambda seed_hex: F.transform(
-                idx,
-                lambda i: F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                seed_hex, F.lit("|"), i.cast("string")
-                            ).cast("binary")
-                        ),
-                        1,
-                        2,
-                    ),
-                    16,
-                    10,
-                ).cast("int"),
-            ),
-        ),
-        1,
-    )
-    px = F.when(F.length(p) == 64, px_raw).otherwise(px_md5)
-    zero = F.lit(0).cast("long")
-    # 1<<i for i in 0..63 as a single JVM-parsed literal; bit 63 is
-    # Long.MIN_VALUE — the two's-complement value the Python path's
-    # ``h - 2**64`` fold produces for a set sign bit
-    bitvals = F.expr(
-        "array(" + ",".join(str((1 << i) - (1 << 64 if i == 63 else 0)) + "L" for i in range(64)) + ")"
-    )
-
-    def _hash_of(arr):
-        s = F.aggregate(arr, F.lit(0), lambda acc, x: acc + x)
-        bits = F.zip_with(
-            arr,
-            bitvals,
-            lambda pv, bv: F.when(pv * 64 > s, bv).otherwise(zero),
-        )
-        return F.aggregate(bits, zero, lambda acc, x: acc.bitwiseOR(x))
-
-    # transform-over-one-element-array: binds px to a lambda variable so the
-    # 64-md5 pixel projection is evaluated exactly once per row
-    return F.element_at(F.transform(F.array(px), _hash_of), 1)
-
-
-def phash_media_expr(
-    media: DataFrame,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """(id, phash) via the pure-expression FakeCodec twin — same output
-    contract as ``phash_media`` (NULL-id / NULL-payload rows dropped),
-    zero Python stages. Use when the codec is the deterministic stand-in;
-    swap back to the Arrow stages for real decoders."""
-    return (
-        media.filter(F.col(id_col).isNotNull() & F.col(payload_col).isNotNull())
-        .select(
-            F.col(id_col),
-            fake_phash_expr(F.col(payload_col)).alias("phash"),
-        )
-    )

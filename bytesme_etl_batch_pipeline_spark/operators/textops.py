@@ -17,6 +17,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
+from ..functions.seeded import md5_hash48
+
 # Distinctive stopwords per language, ordered — order is the deterministic
 # tie-break for argmax (first max wins).
 LANG_STOPWORDS: list[tuple[str, list[str]]] = [
@@ -113,12 +115,6 @@ def quality_features(df: DataFrame, text_col: str, id_cols: list[str]) -> DataFr
         stop_ratio.alias("stop_ratio"),
         score.alias("quality_score"),
     )
-
-
-def md5_hash48(col: Column) -> Column:
-    """First 12 hex chars of md5 as a 48-bit int — exact in both Spark
-    (``conv``) and DuckDB (hex-digit polynomial), and < 2^53 so float-safe."""
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
 
 
 def fingerprint(df: DataFrame, text_col: str, id_cols: list[str], k_words: int = 8) -> DataFrame:

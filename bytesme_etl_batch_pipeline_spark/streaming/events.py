@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.queries import _dec
+from ..functions import dec
 
 
 def read_events_stream(
@@ -74,7 +74,7 @@ def windowed_counts(
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(_dec("value")).cast("double").alias("sum_value"),
+            F.sum(dec("value")).cast("double").alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),

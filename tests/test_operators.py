@@ -867,46 +867,13 @@ def test_incremental_rollup_equals_one_shot(spark, tmp_path):
         assert abs(decimal.Decimal(r0[k][0]) - s) <= decimal.Decimal("0.01") * n
 
 
-def test_connected_components_auto_matches_both_variants(spark):
-    """The adaptive entry point must return the same fixpoint as each
-    explicit variant on both a shallow dup-cluster graph (propagation
-    path) and a long chain (escalates to star)."""
-    from bytesme_etl_batch_pipeline_spark.operators.graph import (
-        connected_components,
-        connected_components_auto,
-        connected_components_star,
-    )
-
-    def run(fn, edges, **kw):
-        df = spark.createDataFrame(edges, "src long, dst long")
-        return {
-            (r.node, r.cluster_id) for r in fn(df, "src", "dst", **kw).collect()
-        }
-
-    # shallow: two triangles + an isolated pair
-    shallow = [(1, 2), (2, 3), (1, 3), (10, 11), (11, 12), (20, 21)]
-    assert (
-        run(connected_components_auto, shallow)
-        == run(connected_components, shallow)
-        == run(connected_components_star, shallow)
-    )
-
-    # pathological: a 40-node chain — diameter 40 forces the escalation
-    # (propagation_rounds=3 cannot converge), star must still finish
-    chain = [(i, i + 1) for i in range(40)]
-    got = run(connected_components_auto, chain, propagation_rounds=3)
-    assert got == run(connected_components_star, chain)
-    assert {c for _, c in got} == {0}
-
-
 def test_connected_components_variants_agree_on_junk_edges(spark):
     """NULL-endpoint edges and self-loops must be normalized away by BOTH
-    variants identically — otherwise the auto entry point's escalation
-    silently changes the result shape (propagation used to emit a NULL
-    node labeled by its neighbors, plus self-loop-only singletons)."""
+    variants identically — otherwise switching variants silently changes
+    the result shape (propagation used to emit a NULL node labeled by its
+    neighbors, plus self-loop-only singletons)."""
     from bytesme_etl_batch_pipeline_spark.operators.graph import (
         connected_components,
-        connected_components_auto,
         connected_components_star,
     )
 
@@ -915,8 +882,7 @@ def test_connected_components_variants_agree_on_junk_edges(spark):
         "src long, dst long",
     )
     want = {(1, 1), (2, 1)}
-    for fn in (connected_components, connected_components_star,
-               connected_components_auto):
+    for fn in (connected_components, connected_components_star):
         got = {(r.node, r.cluster_id) for r in fn(edges).collect()}
         assert got == want, fn.__name__
 
@@ -1119,46 +1085,6 @@ def test_boilerplate_removal_null_source_keeps_text(spark):
     assert got[1]["n_kept"] == 2 and got[1]["n_dropped"] == 0
     assert got[1]["clean_text"].startswith("unique words")
     assert got[2]["n_kept"] == 1
-
-
-def test_fake_phash_expr_matches_python_codec(spark):
-    """The pure-expression FakeCodec twin (r11: removes the Python boundary
-    from the media dedup query) must be BIT-IDENTICAL to
-    phash_media(FakeCodec) on every payload class: md5-expanded payloads of
-    assorted lengths, the raw-grid 64-byte branch, empty payloads, and the
-    NULL-id/NULL-payload dead-letter drops. Also pins single evaluation:
-    the 64-md5 pixel projection must appear once in the optimized plan,
-    not be inlined per bit term."""
-    import random
-
-    from bytesme_etl_batch_pipeline_spark.operators.multimodal import (
-        phash_media,
-        phash_media_expr,
-    )
-
-    rng = random.Random(11)
-    rows = []
-    for i in range(60):
-        n = rng.choice([0, 1, 5, 17, 63, 64, 65, 100])
-        rows.append((i, "image", bytes(rng.randrange(256) for _ in range(n))))
-    rows.append((100, "image", None))  # dead-letter: NULL payload
-    rows.append((None, "image", b"x"))  # dead-letter: NULL id
-    media = spark.createDataFrame(
-        rows, "media_id long, kind string, payload binary"
-    )
-    a = {r.media_id: r.phash for r in phash_media(media).collect()}
-    b = {r.media_id: r.phash for r in phash_media_expr(media).collect()}
-    assert a == b and len(a) == 60
-    # single-evaluation guard: one md5-per-pixel chain (64 calls) plus the
-    # seed hash — NOT 64x64 from Catalyst inlining the pixel array into
-    # each bit term of the mean comparison
-    plan = (
-        phash_media_expr(media)
-        ._jdf.queryExecution()
-        .optimizedPlan()
-        .toString()
-    )
-    assert plan.count("md5(") <= 130, plan.count("md5(")
 
 
 def test_blocked_shingle_commons_matches_string_join(spark):

@@ -102,6 +102,22 @@ def test_no_direct_decimal_sum_to_double_casts():
     )
 
 
+# sha256 of json.dumps(sorted(ORACLE_SQL.items())), taken before the
+# catalog's Python side was refactored: any edit to an oracle's text (or
+# an oracle added or dropped) changes it.
+ORACLE_SQL_SHA256 = "8a83c1fd82fbc7f430cf83c645bd3e566125accf2d7873f00d1484ad569ede54"
+
+
+def test_oracle_sql_text_is_pinned():
+    """Spark-free: refactors of the query bodies leave every oracle's SQL
+    byte-identical. Update the pin only with a deliberate oracle change."""
+    import hashlib
+    import json
+
+    blob = json.dumps(sorted(catalog.ORACLE_SQL.items())).encode()
+    assert hashlib.sha256(blob).hexdigest() == ORACLE_SQL_SHA256
+
+
 @pytest.mark.skipif(
     os.environ.get("SPARK_GRAFT_FULL_SF") != "1",
     reason="slow full-catalog sweep at sf0.1; set SPARK_GRAFT_FULL_SF=1",

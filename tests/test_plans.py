@@ -198,7 +198,7 @@ def test_catalog_plan_lint(spark, sf_dir):
     assert not offenders, offenders
 
 
-def test_driver_window_holds_rotation_priority():
+def test_driver_window_holds_rotation_priority(monkeypatch):
     """The driver records correctness rows for the FIRST 50 catalog
     entries. Round 11's window (VERDICT r10 item 1): the r10 window was
     rotated before the r10 optimization work existed, so the queries r10
@@ -206,22 +206,23 @@ def test_driver_window_holds_rotation_priority():
     the union of the r10-rewritten set named in VERDICT r10 and every
     query round 11 itself touches; slots 30-50 refresh the 21 stalest
     remaining rows (newest driver evidence r03). All 50 are oracle-paired
-    - a full-hash window. _apply_catalog_order puts UNLISTED
-    registrations at the very front - so (a) the window is bit-for-bit
-    the planned rotation, and (b) every registered query MUST be
-    explicitly pinned in _CATALOG_ORDER (an unlisted one would evict the
-    window tail silently)."""
+    - a full-hash window. _apply_catalog_order puts the window first and
+    every other query after it, so (a) the window is bit-for-bit the
+    planned rotation, and (b) a newly registered query sorts after slot
+    50 instead of evicting the window tail."""
+    from bytesme_etl_batch_pipeline_spark.plans import queries as catalog
     from bytesme_etl_batch_pipeline_spark.plans.queries import (
-        _CATALOG_ORDER,
         ORACLE_SQL,
         SPARK_QUERIES,
     )
 
-    assert set(_CATALOG_ORDER) == set(SPARK_QUERIES), (
-        "every query must be pinned in _CATALOG_ORDER; unpinned: "
-        f"{sorted(set(SPARK_QUERIES) - set(_CATALOG_ORDER))}; stale: "
-        f"{sorted(set(_CATALOG_ORDER) - set(SPARK_QUERIES))}"
-    )
+    monkeypatch.setattr(catalog, "SPARK_QUERIES", dict(SPARK_QUERIES))
+    monkeypatch.setattr(catalog, "ORACLE_SQL", dict(ORACLE_SQL))
+    catalog.register("zz_unlisted_probe")(lambda spark, sf_dir: None)
+    catalog._apply_catalog_order()
+    probed = list(catalog.SPARK_QUERIES)
+    assert probed[:50] == list(SPARK_QUERIES)[:50]
+    assert probed.index("zz_unlisted_probe") >= 50
     r11_window = [
         # slots 1-29: r10-rewritten (VERDICT r10 item 1) + r11-touched
         "minhash_signatures", "minhash_lsh_candidates",

@@ -351,12 +351,11 @@ _NODE = st.sampled_from([0, 1, 2, 3, 4, 5, 6, 7, None])
 @_SETTINGS
 def test_connected_components_match_union_find(spark, edges):
     """For ANY edge list (self-loops, NULL endpoints, duplicates, long
-    chains), all three CC variants emit exactly the union-find labeling:
+    chains), both CC variants emit exactly the union-find labeling:
     node -> min reachable node id over the junk-cleaned edge set, with
     junk-only nodes absent."""
     from bytesme_etl_batch_pipeline_spark.operators.graph import (
         connected_components,
-        connected_components_auto,
         connected_components_star,
     )
 
@@ -381,8 +380,7 @@ def test_connected_components_match_union_find(spark, edges):
         roots.setdefault(find(n), []).append(n)
     want = {n: min(mem) for mem in roots.values() for n in mem}
 
-    for variant in (connected_components, connected_components_star,
-                    connected_components_auto):
+    for variant in (connected_components, connected_components_star):
         got = {r.node: r.cluster_id
                for r in variant(df, max_iter=40).collect()}
         assert got == want, (variant.__name__, got, want)

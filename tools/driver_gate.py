@@ -2,7 +2,7 @@
 """Pre-flight replica of the driver's correctness gate.
 
 The driver records CORRECTNESS rows for the FIRST 50 catalog entries
-(``plans/queries._CATALOG_ORDER``) at sf0.01: per query it runs the Spark
+(``plans/queries._DRIVER_WINDOW``) at sf0.01: per query it runs the Spark
 side AND the DuckDB oracle, then compares row count, column names, and an
 order-insensitive value hash. This tool runs the SAME gate locally (via
 the harness in ``tests/oracle.py``, which replicates the driver's
@@ -111,7 +111,7 @@ def main() -> int:
     if not os.path.isdir(args.sf_dir):
         p.error(f"--sf-dir does not exist: {args.sf_dir}")
 
-    order = list(catalog.SPARK_QUERIES)  # catalog dict is _CATALOG_ORDER-sorted
+    order = list(catalog.SPARK_QUERIES)  # driver window first
     if args.names:
         unknown = [n for n in args.names if n not in catalog.SPARK_QUERIES]
         if unknown:
