@@ -320,53 +320,3 @@ def phash_media(
         ]
     )
     return media.mapInPandas(run, schema=schema)
-
-
-def phash_media_arrow(
-    media: DataFrame,
-    codec_factory=FakeCodec,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """``mapInArrow`` twin of ``phash_media`` — the PySpark 4 Arrow-native
-    UDF surface: RecordBatches in, RecordBatches out, no pandas
-    materialization between Arrow and Python (for binary-heavy columns
-    the pandas hop costs an extra copy of every payload). Same output,
-    proven identical in tests; pick by profiling, not preference. Same
-    dead-letter contract: NULL-id / NULL-payload rows are dropped."""
-    import pyarrow as pa
-
-    state: dict = {}
-    media = media.filter(
-        F.col(id_col).isNotNull() & F.col(payload_col).isNotNull()
-    )
-
-    def run(batches):
-        if "c" not in state:
-            state["c"] = codec_factory()
-        codec = state["c"]
-        for batch in batches:
-            ids = batch.column(batch.schema.get_field_index(id_col))
-            payloads = batch.column(batch.schema.get_field_index(payload_col))
-            hashes = []
-            for p in payloads:
-                raw = p.as_py() or b""
-                if isinstance(raw, str):
-                    raw = raw.encode()
-                h = codec.pixels_hash(raw)
-                hashes.append(h - (1 << 64) if h >= (1 << 63) else h)
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(hashes, type=pa.int64())],
-                names=[id_col, "phash"],
-            )
-
-    # same id_col contract as the pandas twin: caller's name, type and
-    # nullability flow through
-    f = media.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, f.dataType, f.nullable),
-            StructField("phash", LongType(), True),
-        ]
-    )
-    return media.mapInArrow(run, schema=schema)

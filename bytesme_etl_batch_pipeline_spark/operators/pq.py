@@ -513,7 +513,6 @@ def train_ivfpq(
             vectors,
             k=k_coarse,
             vec_col=vec_col,
-            engine="exact",
             id_col=id_col,
             sample_fraction=sample_fraction,
         )

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import lit_doubles, lit_doubles_2d
+from .ml import kmeans
 from .textops import md5_hash48
 
 
@@ -587,31 +588,18 @@ def train_ivf_centroids(
     vec_col: str = "embedding",
     seed: int = 42,
     sample_fraction: float = 1.0,
-    engine: str = "mllib",
     id_col: str = "vec_id",
 ) -> list[list[float]]:
-    """Train the IVF coarse quantizer. ``engine="mllib"`` uses MLlib KMeans
-    (seeded — fast, but results vary with partitioning); ``engine="exact"``
-    uses the engine's own trainer (``operators/ml.kmeans``) whose means and
-    inertia fold through DECIMAL, so the quantizer — and therefore every
-    IVF cell assignment downstream — is bit-identical on any cluster
-    layout. At 100 TB, train on a sample (``sample_fraction``) — quantizer
-    quality saturates long before full-data training pays off — then
-    assign the full corpus map-side via ``ivf_assign``."""
+    """Train the IVF coarse quantizer with the engine's own k-means
+    (``operators/ml.kmeans``): its means and inertia fold through DECIMAL,
+    so the quantizer — and therefore every IVF cell assignment downstream —
+    is bit-identical on any cluster layout. At 100 TB, train on a seeded
+    sample (``sample_fraction``, ``seed``) — quantizer quality saturates
+    long before full-data training pays off — then assign the full corpus
+    map-side via ``ivf_assign``."""
     train = vectors if sample_fraction >= 1.0 else vectors.sample(sample_fraction, seed)
-    if engine == "exact":
-        from .ml import kmeans
-
-        _, centroids, _ = kmeans(
-            train, k=k, vec_col=vec_col, id_col=id_col, max_iter=20
-        )
-        return centroids
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = train.select(array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"))
-    model = KMeans(k=k, seed=seed, maxIter=20).fit(feats)
-    return [c.tolist() for c in model.clusterCenters()]
+    _, centroids, _ = kmeans(train, k=k, vec_col=vec_col, id_col=id_col, max_iter=20)
+    return centroids
 
 
 def quantize_int8(

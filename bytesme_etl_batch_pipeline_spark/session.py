@@ -19,6 +19,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .sources.pysource import register_python_sources
+from .sources.tables import ensure_session_confs
+
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
@@ -46,18 +49,9 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # Testdata's events.ts is Parquet TIMESTAMP(NANOS) which Spark cannot
-        # represent natively; read it as raw nanos (sources/tables.py converts
-        # to TimestampType losslessly via integer division).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # events.ts is written with isAdjustedToUTC=false; surface it as a
-        # session-TZ (UTC-pinned) timestamp rather than TIMESTAMP_NTZ so
-        # unix_micros()/TIMESTAMP-typed operator paths resolve.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # Python DataSource scans (sources/pysource.py) prune their input
         # work-list via pushFilters(); off by default in Spark 4.1.
         .config("spark.sql.python.filterPushdown.enabled", "true")
@@ -69,32 +63,13 @@ def get_spark(
         # re-shuffle per round anyway, so the cached partitioning is not a
         # co-location contract anywhere in this engine.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        # InferFiltersFromGenerate synthesizes `size(child) > 0 AND
-        # isnotnull(child)` ahead of every non-outer explode and predicate
-        # pushdown then inlines the generator's WHOLE child expression into
-        # that filter (twice — once per conjunct). For this engine's
-        # explodes the child is always a COMPUTED array (shingle sets,
-        # quantization codes, LSH bands — higher-order functions that run
-        # interpreted, outside codegen), so the "optimization" re-evaluates
-        # the most expensive expression in the query 2× per input row and,
-        # where the lambda references per-row aggregates like array_min/max,
-        # expands them per ELEMENT (measured 5.8× on
-        # embedding_quantize_int8 at sf0.1). The inferred filter can never
-        # change results (a non-outer Generate drops empty/NULL rows by
-        # itself) and never reaches the parquet scan here (the arrays are
-        # not stored columns), so exclusion is pure win at every scale.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    ensure_session_confs(spark)
     # Python DataSource formats ship registered (idempotent) so
     # spark.read.format("bytesme_pages") / readStream.format(
     # "bytesme_event_replay") work out of the box on engine sessions.
-    from .sources.pysource import register_python_sources
-
     register_python_sources(spark)
     return spark

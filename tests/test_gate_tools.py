@@ -317,3 +317,78 @@ def test_floor_compare_per_probe_host_factor_and_host_basis(tmp_path: Path) -> N
     got = json.loads(out)
     assert got["canary_disagreement"] is not None
     assert got["canary_disagreement"]["spread"] == 3.0
+
+
+def _profile_tool():
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location("query_profile", TOOLS / "query_profile.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+# the benchmark's event-log fixture: op p0.q1 has build job 1 (1002.0-1002.5)
+# and action job 2 (1003.0-1004.0); job 0 is "warmup:warmup", job 3 "check:check"
+EVENTLOG = TOOLS.parent / "perfbench" / "tests" / "fixtures" / "eventlog.jsonl"
+
+
+def test_profile_splits_one_query_by_job_group() -> None:
+    prof = _profile_tool()
+    log = prof.parse_event_log(str(EVENTLOG))
+    build, end = (1001.5, 1002.8), 1004.5
+    fields = prof.repeat_fields(log, "p0.q1", build, end, 0.25, 2.0)
+    assert fields["exec.jobs"] == 2 and fields["exec.stages"] == 3
+    assert fields["exec.tasks"] == 4
+    assert fields["queries.build_jobs"] == 1
+    assert fields["queries.build_s"] == 1.3
+    assert fields["queries.build_pure_s"] == 0.8  # build minus its 0.5 s job
+    assert fields["wall_s"] == 3.0
+    assert fields["ckpt.s"] == 0.25 and fields["ckpt.calls"] == 2
+    assert fields["spark.slowest_stage_s"] == 0.8
+    assert fields["spark.shuffle_read_bytes"] == 1000
+    assert fields["spark.shuffle_write_bytes"] == 1000  # check job's 99999 excluded
+    assert fields["spark.spill_bytes"] == 96
+    mine = prof.op_log(log, "p0.q1", build, end)
+    build_metrics = prof.spark_metrics(mine, phases=("build",))
+    assert build_metrics["spark.executor_run_s"] == 0.6
+    # a window over the whole log still leaves out the warm-up and check jobs
+    assert set(prof.op_log(log, "p0.q1", (999.0, 1003.0), 1010.0).jobs) == {1, 2}
+    assert set(fields) == {
+        "wall_s",
+        "queries.build_s",
+        "queries.build_pure_s",
+        "queries.build_jobs",
+        "ckpt.s",
+        "ckpt.calls",
+        "exec.s",
+        "exec.jobs",
+        "exec.stages",
+        "exec.tasks",
+        "spark.slowest_stage_s",
+        "spark.shuffle_read_bytes",
+        "spark.shuffle_write_bytes",
+        "spark.spill_bytes",
+    }
+
+
+def test_profile_attributes_untagged_jobs_by_time() -> None:
+    """A streaming micro-batch runs under its query's run id as job group;
+    inside a build window it is a build job of that repeat, outside any
+    window nobody's."""
+    prof = _profile_tool()
+    log = prof.parse_event_log(str(EVENTLOG))
+    Job = type(log.jobs[1])
+    log.jobs[10] = Job(10, "0682c1f8-stream-run-id", 1002.6, 1002.7, stage_ids=[])
+    log.jobs[11] = Job(11, None, 1005.0, 1005.5, stage_ids=[])
+    fields = prof.repeat_fields(log, "p0.q1", (1001.5, 1002.8), 1004.5, 0.0, 0.0)
+    assert fields["queries.build_jobs"] == 2
+    assert fields["queries.build_pure_s"] == 0.7
+    assert fields["exec.jobs"] == 3
+
+
+def test_no_empty_gate_evidence() -> None:
+    """An interrupted sweep commits its log, never an empty summary."""
+    gates = TOOLS.parent / "gates"
+    empty = sorted(p.name for p in gates.rglob("*") if p.is_file() and p.stat().st_size == 0)
+    assert empty == []

@@ -77,7 +77,7 @@ def test_exact_trained_ivf_recall(spark, emb):
         train_ivf_centroids,
     )
 
-    cents = train_ivf_centroids(emb, k=4, engine="exact")
+    cents = train_ivf_centroids(emb, k=4)
     assert len(cents) == 4
     query = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q"))
 

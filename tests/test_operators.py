@@ -800,31 +800,28 @@ def hamming_pairs_banded_import(df):
     return hamming_pairs_banded(df, "id", "h", max_hamming=3)
 
 
-def test_phash_arrow_and_pandas_paths_identical(spark):
-    """The mapInArrow and mapInPandas codec paths must produce the same
-    hashes — callers choose by profile, never by semantics."""
-    from bytesme_etl_batch_pipeline_spark.operators.multimodal import (
-        phash_media,
-        phash_media_arrow,
-    )
+def test_phash_media_id_col_contract(spark):
+    """The caller's id column name, type AND nullability flow through to
+    the output (ADVICE r3), and the hashes do not depend on its name."""
+    from bytesme_etl_batch_pipeline_spark.operators.multimodal import phash_media
 
     rows = [(i, "image", f"payload-{i}".encode()) for i in range(40)]
     media = spark.createDataFrame(rows, "media_id long, kind string, payload binary")
-    a = {r.media_id: r.phash for r in phash_media(media).collect()}
-    b = {r.media_id: r.phash for r in phash_media_arrow(media).collect()}
-    assert a == b and len(a) == 40
-    # the twins must also agree on the id_col contract: caller's column
-    # name AND type flow through to the output (ADVICE r3 fix applies to
-    # BOTH paths — the arrow path once hardcoded media_id/long)
+    by_id = {r.media_id: r.phash for r in phash_media(media).collect()}
+    assert len(by_id) == 40
     named = media.withColumnRenamed("media_id", "doc_key").withColumn(
         "doc_key", F.col("doc_key").cast("string")
     )
-    pa_cols = phash_media(named, id_col="doc_key").columns
-    ar = phash_media_arrow(named, id_col="doc_key")
-    assert pa_cols == ar.columns == ["doc_key", "phash"]
-    assert dict(ar.dtypes)["doc_key"] == "string"
-    assert {r.doc_key: r.phash for r in ar.collect()} == {
-        str(k): v for k, v in b.items()
+    out = phash_media(named, id_col="doc_key")
+    assert out.columns == ["doc_key", "phash"]
+    assert dict(out.dtypes)["doc_key"] == "string"
+    assert out.schema["doc_key"].nullable == named.schema["doc_key"].nullable
+    strict = spark.createDataFrame(
+        rows, "media_id long NOT NULL, kind string, payload binary"
+    )
+    assert not phash_media(strict).schema["media_id"].nullable
+    assert {r.doc_key: r.phash for r in out.collect()} == {
+        str(k): v for k, v in by_id.items()
     }
 
 

@@ -139,6 +139,8 @@ def test_ivf_with_trained_centroids_beats_random(spark, sf_dir):
     assert r_trained >= 0.5
     retrained = train_ivf_centroids(e, k=4, seed=42)
     assert retrained == trained  # seeded training is reproducible
+    # and partition-invariant
+    assert train_ivf_centroids(e.repartition(3), k=4, seed=42) == trained
 
 
 def test_quantize_int8_error_bound_and_recall(spark, sf_dir):
