@@ -60,7 +60,6 @@ from .similarity import (  # noqa: F401
 )
 from .template import product_document, template_document  # noqa: F401
 from .sampling import (  # noqa: F401
-    deterministic_sample,
     shuffle_shards,
     stratified_sample,
     train_val_test_split,

@@ -1,34 +1,23 @@
-"""Distributed BPE tokenizer training (engine extension).
+"""BPE tokenizer training and encoding (engine extension).
 
 Byte-pair encoding (Sennrich et al. 2016) is the tokenizer-training step
-of every LLM data pipeline. The classic trainer is single-machine; the
-distributed shape used here is the one production trainers converge on
-(HF tokenizers does the same in-process): corpora repeat words heavily, so
+of every LLM data pipeline. Training uses the shape production trainers
+converge on (HF tokenizers, fastBPE): corpora repeat words heavily, so
 train on the distinct-WORD dictionary weighted by frequency — the corpus
-touches the cluster once (one word-count aggregation), and every merge
-round then runs on dictionary-sized data.
+touches the cluster once (one word-count aggregation) and the merge loop
+runs driver-side over the collected, vocabulary-bounded dictionary.
 
-Per merge round:
-  1. adjacent symbol pairs explode from each dictionary word (weighted by
-     word frequency) and aggregate to pair counts — one dictionary-sized
-     shuffle;
-  2. the argmax pair comes back via TakeOrderedAndProject (ties broken
-     deterministically by count desc, then pair lexicographically — NOT
-     hash order, so training is reproducible on any cluster);
-  3. the merge applies MAP-SIDE as a pure array fold (greedy
-     left-to-right, standard BPE application: "aaa" + (a,a) → ["aa","a"]);
-     no UDF, stays in codegen.
+Each merge picks the most frequent adjacent symbol pair, ties broken
+deterministically by count desc, then pair lexicographically — NOT hash
+order, so training is reproducible on any cluster — and applies it greedy
+left-to-right (standard BPE application: "aaa" + (a,a) → ["aa","a"]).
 
-Driver state per round is ONE (left, right, count) row; the dictionary is
-``localCheckpoint``ed every few rounds because the fold nests one lambda
-layer per merge and the pair-count branch would otherwise replay every
-previous round's transform (the iterative-lineage lesson from
-``graph.connected_components_star``).
+Encoding replays the learned merges MAP-SIDE as pure array folds: no UDF,
+stays in codegen, zero shuffles.
 
-At 100 TB: the distinct-word dictionary is ~10^8 rows — pair explosion is
-~10^9 rows/round, a routine aggregation; ``min_freq`` prunes the long tail
-exactly like production trainers' ``min_frequency``. The corpus-sized scan
-happens once, not per round.
+At 100 TB: the distinct-word dictionary is ~10^8 rows; ``min_freq``
+prunes the long tail exactly like production trainers' ``min_frequency``.
+The corpus-sized scan happens once.
 """
 
 from __future__ import annotations
@@ -90,12 +79,12 @@ def _apply_merge(syms: Column, left: str, right: str) -> Column:
 def word_dictionary(
     docs: DataFrame, text_col: str = "text", min_freq: int = 1
 ) -> DataFrame:
-    """(word, freq, syms) dictionary — the corpus's only full pass."""
+    """(word, freq) dictionary — the corpus's only full pass."""
     tok = docs.select(F.explode(words(text_col)).alias("word"))
     d = tok.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
     if min_freq > 1:
         d = d.filter(F.col("freq") >= min_freq)
-    return d.select("word", "freq", _char_symbols(F.col("word")).alias("syms"))
+    return d
 
 
 def train_bpe(
@@ -103,86 +92,26 @@ def train_bpe(
     text_col: str = "text",
     n_merges: int = 10,
     min_freq: int = 1,
-    engine: str = "driver",
 ) -> list[tuple[int, str, str, str, int]]:
     """Learn ``n_merges`` BPE merges; returns
     ``[(rank, left, right, merged, pair_count), ...]`` in training order.
     Stops early when no adjacent pair remains.
 
-    ``engine="driver"`` (default): ONE distributed word-count pass, then
-    the merge loop runs driver-side over the collected (word, freq)
-    dictionary — the shape every production trainer uses (HF tokenizers,
-    fastBPE): the dictionary is vocabulary-bounded, not corpus-bounded,
-    and ``min_freq`` caps it like their ``min_frequency``. 30k merges of
-    driver loop beat 30k cluster jobs by orders of magnitude.
-
-    ``engine="distributed"``: every round's pair count and argmax run on
-    the cluster — for dictionaries that exceed driver memory (no
-    ``min_freq`` possible). Identical output (both tie-break on count
-    desc, then pair lexicographic); proven equal in ``tests/test_bpe.py``.
+    ONE distributed word-count pass, then the merge loop runs driver-side
+    over the collected (word, freq) dictionary: the dictionary is
+    vocabulary-bounded, not corpus-bounded, and ``min_freq`` caps it like
+    production trainers' ``min_frequency``. 30k merges of driver loop beat
+    30k cluster jobs by orders of magnitude.
     """
-    if engine == "driver":
-        rows = word_dictionary(docs, text_col, min_freq).select("word", "freq").collect()
-        return _train_in_driver([(r["word"], int(r["freq"])) for r in rows], n_merges)
-    if engine != "distributed":
-        raise ValueError(f"unknown engine {engine!r}")
-    from ..ckpt import free_checkpoint, tracked_local_checkpoint
-
-    dictionary, held_ids = tracked_local_checkpoint(
-        word_dictionary(docs, text_col, min_freq)
-    )
-    merges: list[tuple[int, str, str, str, int]] = []
-    try:
-        for rank in range(n_merges):
-            pairs = dictionary.select(
-                "freq",
-                F.explode(
-                    F.expr(
-                        "transform(slice(syms, 1, size(syms) - 1), "
-                        "(s, i) -> struct(s as left, syms[i + 1] as right))"
-                    )
-                ).alias("p"),
-            )
-            best = (
-                pairs.groupBy(F.col("p.left").alias("left"), F.col("p.right").alias("right"))
-                .agg(F.sum("freq").alias("cnt"))
-                .orderBy(F.col("cnt").desc(), F.col("left").asc(), F.col("right").asc())
-                .limit(1)
-                .collect()
-            )
-            if not best:
-                break
-            row = best[0]
-            left, right, cnt = row["left"], row["right"], int(row["cnt"])
-            merges.append((rank, left, right, left + right, cnt))
-            dictionary = dictionary.withColumn(
-                "syms", _apply_merge(F.col("syms"), left, right)
-            )
-            # truncate lineage every few rounds, not every round — the fold
-            # nests one lambda per un-checkpointed round (replaying 3 folds on
-            # dictionary-sized data is cheaper than an extra eager job each
-            # round), but unbounded nesting blows the plan up like any
-            # iterative loop. Superseded checkpoint blocks are freed at the
-            # RDD level — DataFrame.unpersist is a no-op for localCheckpoint
-            # (ckpt.py) and would leak one dictionary-sized copy per round.
-            if (rank + 1) % 3 == 0:
-                dictionary, new_ids = tracked_local_checkpoint(dictionary)
-                free_checkpoint(dictionary, held_ids)
-                held_ids = new_ids
-        return merges
-    finally:
-        # the dictionary itself is not returned — release the last
-        # checkpoint even when a round fails mid-loop (a leaked block
-        # set per failed call would outlive the caller's retry)
-        free_checkpoint(dictionary, held_ids)
+    rows = word_dictionary(docs, text_col, min_freq).collect()
+    return _train_in_driver([(r["word"], int(r["freq"])) for r in rows], n_merges)
 
 
 def _train_in_driver(
     word_freqs: list[tuple[str, int]], n_merges: int
 ) -> list[tuple[int, str, str, str, int]]:
     """Merge loop over a collected dictionary — incremental pair-count
-    maintenance (only words containing the merged pair are re-counted), the
-    same tie-break as the distributed path.
+    maintenance (only words containing the merged pair are re-counted).
 
     Argmax is a lazy-deletion heap keyed ``(-cnt, left, right)`` — the
     order `min(pair_counts.items())` would compute — so each round costs

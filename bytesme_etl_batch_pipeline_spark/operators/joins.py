@@ -34,7 +34,11 @@ def lookup_map_join(df: DataFrame, mapping: dict[str, str], key_col: str, out_co
     """J5: literal map lookup (reference ``dict(zip(...))`` probes,
     ``generate_embeddings.py:499-501``). For small static maps a
     ``create_map`` literal beats even a broadcast join: zero extra scan,
-    folded into the projection."""
+    folded into the projection. An empty mapping gives an all-NULL string
+    column (``create_map()`` alone is ``map<void,void>``, which a string
+    key cannot index)."""
+    if not mapping:
+        return df.withColumn(out_col, F.lit(None).cast("string"))
     pairs: list = []
     for k, v in mapping.items():
         pairs += [F.lit(k), F.lit(v)]

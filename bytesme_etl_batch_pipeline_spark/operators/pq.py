@@ -6,11 +6,10 @@ scalar int8 compression (``similarity.quantize_int8``).
 Engine extension (the reference stops at pgvector brute-force top-k).
 
 Scale design:
-* TRAIN (driver-coordinated, sample-sized): the vector space splits into
-  ``m`` subspaces; each gets its own k-codeword codebook from the engine's
-  deterministic k-means (``operators/ml.kmeans``) run on the column SLICE —
-  m small trainings over a sample, centroids held driver-side (m·k·(d/m) =
-  d·k floats — KBs).
+* TRAIN (driver-side, sample-sized): the vector space splits into ``m``
+  subspaces; each gets its own k-codeword codebook from a deterministic
+  numpy Lloyd run on the column SLICE of ONE collected sample — m small
+  trainings, centroids held driver-side (m·k·(d/m) = d·k floats — KBs).
 * ENCODE (map-side, zero shuffles): per subspace, argmin over the k
   codewords as a pure array expression — each vector compresses to m small
   ints (m bytes at k ≤ 256), a 32× compression at d=64/m=8 vs float32.
@@ -32,7 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import lit_doubles, lit_doubles_2d
-from .ml import kmeans
 
 
 def _subvector(vec_col, j: int, d_sub: int):
@@ -66,7 +64,7 @@ def _local_lloyd(X, k: int, max_iter: int) -> list[list[float]]:
 
 
 def _collect_sample(train: DataFrame, vec_col: str, id_col: str):
-    """One collect shared by the local training paths: rows sorted by id
+    """One collect shared by the training paths: rows sorted by id
     (partition-invariant), vectors as float64. Returns the (n, dim) numpy
     matrix; raises a clear error on an empty input instead of the opaque
     NoneType crash a bare ``first()[0]`` would give.
@@ -103,11 +101,37 @@ def _collect_sample(train: DataFrame, vec_col: str, id_col: str):
     return np.asarray(vecs, dtype=np.float64)[order]
 
 
-def _infer_dim(vectors: DataFrame, vec_col: str) -> int:
-    row = vectors.select(vec_col).first()
-    if row is None or row[0] is None:
-        raise ValueError("no vectors to train on (empty input or NULL first row)")
-    return len(row[0])
+def _training_sample(
+    vectors: DataFrame,
+    vec_col: str,
+    id_col: str,
+    m: int,
+    sample_fraction: float,
+    seed: int,
+):
+    """The collected training matrix and its subspace width ``dim // m``."""
+    train = (
+        vectors
+        if sample_fraction >= 1.0
+        else vectors.sample(sample_fraction, seed)
+    )
+    X = _collect_sample(train, vec_col, id_col)
+    dim = X.shape[1]
+    if dim % m != 0:
+        raise ValueError(f"dim {dim} not divisible by m={m}")
+    return X, dim // m
+
+
+def _subspace_books(X, m: int, d_sub: int, k: int, max_iter: int):
+    """One Lloyd codebook per column slice of ``X``."""
+    import numpy as np
+
+    return [
+        _local_lloyd(
+            np.ascontiguousarray(X[:, j * d_sub : (j + 1) * d_sub]), k, max_iter
+        )
+        for j in range(m)
+    ]
 
 
 def train_pq(
@@ -119,58 +143,20 @@ def train_pq(
     max_iter: int = 5,
     sample_fraction: float = 1.0,
     seed: int = 42,
-    local: bool = True,
 ) -> list[list[list[float]]]:
     """Train m per-subspace codebooks of k codewords each.
 
-    ``local=True`` (default — the production shape): collect the training
-    SAMPLE to the driver once (PQ quantizers train on thousands of rows,
-    KBs–MBs; pass ``sample_fraction`` to bound it) and run a deterministic
-    numpy Lloyd per subspace — one job total, rows sorted by id so the
-    result is identical under any partitioning. ``local=False`` runs the
-    engine's distributed k-means per subspace (``operators/ml.kmeans``,
-    decimal-exact) for training sets too big to collect — m × max_iter
-    Spark jobs, same determinism guarantee.
+    Collects the training SAMPLE to the driver once (PQ quantizers train
+    on thousands of rows, KBs–MBs; pass ``sample_fraction`` to bound it)
+    and runs a deterministic numpy Lloyd per subspace — one job total,
+    rows sorted by id so the result is identical under any partitioning.
 
     Returns ``codebooks[m][k][d/m]``. The vector dimensionality must be
     divisible by ``m``."""
-    train = (
-        vectors
-        if sample_fraction >= 1.0
-        else vectors.sample(sample_fraction, seed)
-    )
-    if local:
-        import numpy as np
-
-        X = _collect_sample(train, vec_col, id_col)
-        dim = X.shape[1]
-        if dim % m != 0:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        d_sub = dim // m
-        if len(X) < k:
-            raise ValueError(f"k={k} exceeds sample size {len(X)}")
-        return [
-            _local_lloyd(
-                np.ascontiguousarray(X[:, j * d_sub : (j + 1) * d_sub]),
-                k,
-                max_iter,
-            )
-            for j in range(m)
-        ]
-    dim = _infer_dim(vectors, vec_col)
-    if dim % m != 0:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    d_sub = dim // m
-    codebooks = []
-    for j in range(m):
-        sub = train.select(
-            F.col(id_col), _subvector(F.col(vec_col), j, d_sub).alias("__sub")
-        )
-        _, cents, _ = kmeans(
-            sub, k=k, vec_col="__sub", id_col=id_col, max_iter=max_iter
-        )
-        codebooks.append(cents)
-    return codebooks
+    X, d_sub = _training_sample(vectors, vec_col, id_col, m, sample_fraction, seed)
+    if len(X) < k:
+        raise ValueError(f"k={k} exceeds sample size {len(X)}")
+    return _subspace_books(X, m, d_sub, k, max_iter)
 
 
 def _sq_l2_lit(vec_expr, centroid: list[float]):
@@ -457,89 +443,48 @@ def train_ivfpq(
     max_iter: int = 5,
     sample_fraction: float = 1.0,
     seed: int = 42,
-    local: bool = True,
-    encode: bool = True,
-) -> tuple[list[list[float]], list[list[list[float]]], DataFrame | None]:
+) -> tuple[list[list[float]], list[list[list[float]]]]:
     """Train the two-level IVF-PQ index (Jégou et al. 2011 §IV): a coarse
     quantizer partitions the space into cells, then PQ codebooks train on
     the RESIDUALS (vector − cell centroid) — residuals concentrate around
     the origin, so the same codebook budget quantizes them far better than
-    raw vectors. ``local=True`` trains both quantizers driver-side on one
-    collected sample (the production shape; see ``train_pq``);
-    ``local=False`` uses the distributed exact k-means throughout. Returns
-    ``(coarse_centroids, codebooks, encoded)`` where ``encoded`` carries
-    (id, cell, codes) — the m-byte-per-vector index payload. Everything
-    after training is map-side; past ``similarity.IVF_EXPRESSION_MAX_K``
-    coarse cells, assignment + residual run on the Arrow path (O(1) plan
-    size) instead of embedding k×dim literals. ``encode=False`` skips
-    building the train-slice code frame (returns ``None`` third) — callers
-    that immediately encode a DIFFERENT frame (the full table) otherwise
-    pay ~1 s of py4j expression construction for a plan nobody runs."""
-    from .similarity import IVF_EXPRESSION_MAX_K, ivf_assign, train_ivf_centroids
+    raw vectors. One collected sample powers BOTH trainings (coarse Lloyd
+    on the sample, then per-subspace Lloyd on its residuals) — zero Spark
+    jobs beyond the collect. Returns ``(coarse_centroids, codebooks)``;
+    ``ivfpq_encode`` turns any frame into the index payload."""
+    import numpy as np
 
-    if local:
-        # one collect powers BOTH trainings: coarse Lloyd on the sample,
-        # then per-subspace Lloyd on the sample's residuals — zero Spark
-        # jobs beyond the collect (the distributed path costs
-        # (1 + m) × max_iter jobs; measured ~9 s of the catalog query)
-        import numpy as np
+    X, d_sub = _training_sample(vectors, vec_col, id_col, m, sample_fraction, seed)
+    if len(X) < max(k_coarse, k_pq):
+        raise ValueError(f"sample size {len(X)} below k")
+    coarse = _local_lloyd(X, k_coarse, max_iter)
+    C = np.asarray(coarse)
+    cells = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+    return coarse, _subspace_books(X - C[cells], m, d_sub, k_pq, max_iter)
 
-        train = (
-            vectors
-            if sample_fraction >= 1.0
-            else vectors.sample(sample_fraction, seed)
-        )
-        X = _collect_sample(train, vec_col, id_col)
-        dim = X.shape[1]
-        if dim % m != 0:
-            raise ValueError(f"dim {dim} not divisible by m={m}")
-        d_sub = dim // m
-        if len(X) < max(k_coarse, k_pq):
-            raise ValueError(f"sample size {len(X)} below k")
-        coarse = _local_lloyd(X, k_coarse, max_iter)
-        C = np.asarray(coarse)
-        cells = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
-        R = X - C[cells]
-        books = [
-            _local_lloyd(
-                np.ascontiguousarray(R[:, j * d_sub : (j + 1) * d_sub]),
-                k_pq,
-                max_iter,
-            )
-            for j in range(m)
-        ]
-    else:
-        coarse = train_ivf_centroids(
-            vectors,
-            k=k_coarse,
-            vec_col=vec_col,
-            id_col=id_col,
-            sample_fraction=sample_fraction,
-        )
-        books = train_pq(
-            ivf_assign(vectors, coarse, vec_col).withColumn(
-                "__res", _residual(vec_col, coarse)
-            ),
-            vec_col="__res",
-            id_col=id_col,
-            m=m,
-            k=k_pq,
-            max_iter=max_iter,
-            sample_fraction=sample_fraction,
-            seed=seed,
-            local=False,
-        )
-    if not encode:
-        return coarse, books, None
+
+def ivfpq_encode(
+    vectors: DataFrame,
+    coarse: list[list[float]],
+    codebooks: list[list[list[float]]],
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """(id, cell, codes) — the m-byte-per-vector IVF-PQ index payload.
+    Map-side only; past ``similarity.IVF_EXPRESSION_MAX_K`` coarse cells,
+    assignment + residual run on the Arrow path (O(1) plan size) instead
+    of embedding k×dim literals."""
+    from .similarity import IVF_EXPRESSION_MAX_K, ivf_assign
+
     if len(coarse) > IVF_EXPRESSION_MAX_K:
         with_res = _assign_and_residual_pandas(vectors, coarse, vec_col)
     else:
-        assigned = ivf_assign(vectors, coarse, vec_col)
-        with_res = assigned.withColumn("__res", _residual(vec_col, coarse))
-    encoded = pq_encode(with_res, books, vec_col="__res").select(
+        with_res = ivf_assign(vectors, coarse, vec_col).withColumn(
+            "__res", _residual(vec_col, coarse)
+        )
+    return pq_encode(with_res, codebooks, vec_col="__res").select(
         id_col, "cell", "codes"
     )
-    return coarse, books, encoded
 
 
 def ivfpq_search(

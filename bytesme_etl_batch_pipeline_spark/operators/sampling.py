@@ -18,14 +18,6 @@ from pyspark.sql import functions as F
 from ..functions.seeded import hash_uniform
 
 
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction: float, seed: int | str = 42
-) -> DataFrame:
-    """Keep ~fraction of rows, chosen by row-key hash — reproducible under
-    any partitioning/retry (unlike ``DataFrame.sample``)."""
-    return df.filter(hash_uniform(F.col(key_col), seed) < fraction)
-
-
 def stratified_sample(
     df: DataFrame,
     key_col: str,

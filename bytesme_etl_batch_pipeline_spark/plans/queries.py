@@ -65,7 +65,7 @@ from ..operators.neardup import (
     word_ngrams,
 )
 from ..operators.pq import (
-    _residual,
+    ivfpq_encode,
     ivfpq_search,
     pq_encode,
     pq_search,
@@ -85,7 +85,6 @@ from ..operators.similarity import (
     _dots,
     _hyperplane,
     _norm,
-    ivf_assign,
     lsh_signature,
     quantize_int8,
     topk_brute_force,
@@ -8709,10 +8708,8 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     em = load_table(spark, sf_dir, "embeddings")
     # fixed-slice training sample: constant train cost at any corpus scale
-    coarse, books, _ = train_ivfpq(
-        em.filter(F.col("vec_id") < 500), k_coarse=4, m=8, k_pq=16,
-        encode=False,  # the full table is encoded below; skip the unused
-        # train-slice code frame (~1 s of py4j expression construction)
+    coarse, books = train_ivfpq(
+        em.filter(F.col("vec_id") < 500), k_coarse=4, m=8, k_pq=16
     )
 
     # assign + encode the FULL table with the sample-trained quantizers.
@@ -8720,13 +8717,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1 — the embeddings table is small enough that the repartition
     # shuffle + 32 Arrow worker round trips cost more than the single-task
     # encode; the scan splits naturally at scale anyway. NOT landed.
-
-    assigned = ivf_assign(em, coarse)
-    full_encoded = pq_encode(
-        assigned.withColumn("__res", _residual("embedding", coarse)),
-        books,
-        vec_col="__res",
-    ).select("vec_id", "cell", "codes")
+    full_encoded = ivfpq_encode(em, coarse, books)
     qrow = list(em.filter(F.col("vec_id") == 0).first()["embedding"])
     hits = ivfpq_search(
         em, full_encoded, qrow, coarse, books, k=10, n_probe=2, candidates=50

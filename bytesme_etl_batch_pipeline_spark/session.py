@@ -19,7 +19,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .sources.pysource import register_python_sources
 from .sources.tables import ensure_session_confs
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -52,9 +51,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # Python DataSource scans (sources/pysource.py) prune their input
-        # work-list via pushFilters(); off by default in Spark 4.1.
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         # Let AQE re-plan (coalesce/skew-split) the subtree that feeds a
         # .cache() — off by default, which made materializing the cached
         # LSH edge list 3× slower than the identical uncached plan (every
@@ -68,8 +64,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     ensure_session_confs(spark)
-    # Python DataSource formats ship registered (idempotent) so
-    # spark.read.format("bytesme_pages") / readStream.format(
-    # "bytesme_event_replay") work out of the box on engine sessions.
-    register_python_sources(spark)
     return spark

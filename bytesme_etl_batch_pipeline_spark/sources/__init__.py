@@ -1,8 +1,3 @@
 """Sources & sinks (SURVEY §2.1, S1–S12)."""
 
-from .pysource import (  # noqa: F401
-    EventReplayDataSource,
-    PageFetchDataSource,
-    register_python_sources,
-)
-from .tables import TABLE_NAMES, load_table, load_tables  # noqa: F401
+from .tables import TABLE_NAMES, load_table  # noqa: F401

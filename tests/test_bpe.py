@@ -88,13 +88,6 @@ def test_train_matches_python_twin(spark):
     assert got == want
 
 
-def test_driver_and_distributed_engines_agree(spark):
-    docs = spark.createDataFrame(list(enumerate(CORPUS)), "doc_id long, text string")
-    a = train_bpe(docs, "text", n_merges=10, engine="driver")
-    b = train_bpe(docs, "text", n_merges=10, engine="distributed")
-    assert a == b
-
-
 def test_train_deterministic_under_repartition(spark):
     docs = spark.createDataFrame(list(enumerate(CORPUS)), "doc_id long, text string")
     a = train_bpe(docs.repartition(7), "text", n_merges=8)
@@ -132,22 +125,3 @@ def test_min_freq_prunes_tail(spark):
     assert all(m[4] >= 2 for m in merges)
     assert merges[0][:3] == (0, "c", "o")  # lexicographically-first of the ties
 
-
-def test_distributed_train_frees_superseded_checkpoints(spark):
-    """DataFrame.unpersist is a no-op for localCheckpoint blocks — the
-    loop must free superseded checkpoints at the RDD level (ckpt.py) or
-    it pins one dictionary-sized copy per checkpoint for the app's life.
-    After training, no checkpoint blocks from the loop may remain."""
-    from bytesme_etl_batch_pipeline_spark.operators.bpe import train_bpe
-
-    sc = spark.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog " * 3) for i in range(30)],
-        "doc_id long, text string",
-    )
-    merges = train_bpe(docs, n_merges=8, engine="distributed")
-    assert len(merges) == 8
-    after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    leaked = after - before
-    assert not leaked, f"checkpoint blocks leaked: {sorted(leaked)}"

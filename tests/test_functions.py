@@ -444,6 +444,42 @@ def test_zip_join_sep_is_literal_not_regex(spark):
         assert [(p["left"], p["right"]) for p in out] == [("a", "x"), ("b", "y")]
 
 
+def test_lookup_map_join_hit_miss_null_and_empty_mapping(spark):
+    """J5: a hit maps, a miss and a NULL key give NULL, and an empty
+    mapping gives an all-NULL string column instead of failing analysis."""
+    from bytesme_etl_batch_pipeline_spark.operators.joins import lookup_map_join
+
+    df = spark.createDataFrame([(1, "a"), (2, "z"), (3, None)], "id int, k string")
+    out = lookup_map_join(df, {"a": "alpha", "b": "beta"}, "k", "v")
+    assert {r["id"]: r["v"] for r in out.collect()} == {1: "alpha", 2: None, 3: None}
+
+    empty = lookup_map_join(df, {}, "k", "v")
+    assert dict(empty.dtypes)["v"] == "string"
+    assert [r["v"] for r in empty.collect()] == [None, None, None]
+
+
+def test_vi_tokenize_column_fallback_equals_words(spark):
+    """E6: without pyvi the Vietnamese tokenizer hook falls back to the
+    whitespace tokens of ``textops.words``."""
+    import importlib.util
+
+    if importlib.util.find_spec("pyvi") is not None:
+        pytest.skip("pyvi installed: the hook segments words instead")
+    from bytesme_etl_batch_pipeline_spark.operators.textops import (
+        vi_tokenize_column,
+        words,
+    )
+
+    df = spark.createDataFrame(
+        [("Xin chào  các bạn\tHà Nội",), ("",), (None,)], "t string"
+    )
+    rows = df.select(
+        vi_tokenize_column("t").alias("vi"), words("t").alias("ws")
+    ).collect()
+    assert [r["vi"] for r in rows] == [r["ws"] for r in rows]
+    assert rows[0]["vi"] == ["xin", "chào", "các", "bạn", "hà", "nội"]
+
+
 def test_salted_join_handles_map_columns(spark):
     """Salt must not content-hash the skewed side: xxhash64 rejects
     MapType, and the position id alone already spreads identical rows."""

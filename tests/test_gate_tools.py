@@ -392,3 +392,17 @@ def test_no_empty_gate_evidence() -> None:
     gates = TOOLS.parent / "gates"
     empty = sorted(p.name for p in gates.rglob("*") if p.is_file() and p.stat().st_size == 0)
     assert empty == []
+
+
+def test_no_script_shadows_a_stdlib_module() -> None:
+    """Python puts a script's directory first on ``sys.path``, so a
+    ``tools/profile.py`` would replace the stdlib ``profile`` for every
+    script there and break PySpark's ``import cProfile``."""
+    root = TOOLS.parent
+    shadowing = sorted(
+        str(p.relative_to(root))
+        for d in (root, root / "tools", root / "perfbench")
+        for p in d.glob("*.py")
+        if p.stem in sys.stdlib_module_names
+    )
+    assert shadowing == []

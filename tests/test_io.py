@@ -132,6 +132,123 @@ def test_http_fetch_error_isolation(spark):
     assert "boom" in out["http://a/bad"]["error"]
 
 
+def test_extract_category_urls_matches_reference_logic(spark):
+    """S6 menu crawl (menus_crawling.py:21-55): anchors inside matching
+    menu blocks only, '#' hrefs fall back to data-url, keyword filter,
+    urljoin absolutization, set-dedup — checked against urllib.parse's
+    urljoin on every shape the reference can meet."""
+    from urllib.parse import urljoin
+
+    from bytesme_etl_batch_pipeline_spark.sources.http import extract_category_urls
+
+    base = "https://tljus.com/menu/page"
+    hrefs = [
+        "/cakes",                      # root-relative
+        "drinks/tea",                  # path-relative
+        "//cdn.tljus.com/abs",         # protocol-relative
+        "https://other.com/full",      # absolute
+        "/cakes",                      # duplicate -> set-dedup
+    ]
+    anchors = "\n".join(f'<a class="m" href="{h}">x</a>' for h in hrefs)
+    html = (
+        f'<nav class="x dropdown-list-8">{anchors}'
+        f'<a href="#" data-url="https://tljus.com/special">s</a></nav>'
+        f'<div class="not-menu"><a href="/skipped">n</a></div>'
+    )
+    pages = spark.createDataFrame([(base, html)], "url string, body string")
+    got = sorted(
+        r.category_url
+        for r in extract_category_urls(
+            pages, menu_tag="nav", menu_selector="dropdown-list"
+        ).collect()
+    )
+    want = sorted(
+        {urljoin(base, h) for h in hrefs} | {"https://tljus.com/special"}
+    )
+    assert got == want
+    assert "https://tljus.com/skipped" not in got  # non-menu block excluded
+
+
+def test_extract_category_urls_keyword_filter_and_none(spark):
+    """filter_keyword='None' (the reference's YAML literal) and None both
+    keep everything; a real keyword keeps only matching urls (substring
+    test BEFORE absolutization, as the reference does)."""
+    from bytesme_etl_batch_pipeline_spark.sources.http import extract_category_urls
+
+    html = (
+        '<ul class="menu-root">'
+        '<a href="/product-category/tea">t</a>'
+        '<a href="/about">a</a></ul>'
+    )
+    pages = spark.createDataFrame(
+        [("https://b.vn/", html)], "url string, body string"
+    )
+    kw = lambda k: sorted(  # noqa: E731
+        r.category_url
+        for r in extract_category_urls(
+            pages, menu_tag="ul", menu_selector="menu", filter_keyword=k
+        ).collect()
+    )
+    both = ["https://b.vn/about", "https://b.vn/product-category/tea"]
+    assert kw(None) == both
+    assert kw("None") == both
+    assert kw("product-category") == ["https://b.vn/product-category/tea"]
+
+
+def test_extract_category_urls_single_quoted_attributes(spark):
+    """HTML parsers are quote-agnostic; single-quoted class/href/data-url
+    attributes extract identically to double-quoted ones."""
+    from bytesme_etl_batch_pipeline_spark.sources.http import extract_category_urls
+
+    html = (
+        "<nav class='dropdown-list-8'>"
+        "<a href='/cakes'>c</a>"
+        "<a href='#' data-url='https://t.vn/promo'>p</a></nav>"
+    )
+    pages = spark.createDataFrame(
+        [("https://t.vn/menu", html)], "url string, body string"
+    )
+    got = sorted(
+        r.category_url
+        for r in extract_category_urls(
+            pages, menu_tag="nav", menu_selector="dropdown-list"
+        ).collect()
+    )
+    assert got == ["https://t.vn/cakes", "https://t.vn/promo"]
+
+
+def test_extract_category_urls_urljoin_edge_cases(spark):
+    """urljoin parity on the hard shapes: a base url with NO path, a query
+    string containing '/', scheme-prefixed refs (tel:/mailto:/uppercase)
+    passing through, an explicit port surviving absolutization, and
+    data-href never shadowing the real href."""
+    from urllib.parse import urljoin
+
+    from bytesme_etl_batch_pipeline_spark.sources.http import extract_category_urls
+
+    cases = [
+        ("https://example.com", "drinks/tea"),         # pathless base
+        ("https://h.vn/p?a=b/c", "rel"),               # '/' inside query
+        ("https://t.vn/menu", "tel:+84123"),            # non-http scheme
+        ("https://t.vn/menu", "HTTP://OTHER.COM/x"),    # uppercase scheme
+        ("https://t.vn:8443/menu/", "/root-rel"),       # port + root-relative
+        ("https://t.vn:8443/menu/", "kid"),             # port + path-relative
+    ]
+    rows = [
+        (base, f'<nav class="menu"><a data-href="/lazy" href="{h}">x</a></nav>')
+        for base, h in cases
+    ]
+    pages = spark.createDataFrame(rows, "url string, body string")
+    got = {
+        (r.site_url, r.category_url)
+        for r in extract_category_urls(
+            pages, menu_tag="nav", menu_selector="menu"
+        ).collect()
+    }
+    want = {(base, urljoin(base, h)) for base, h in cases}
+    assert got == want  # and no '/lazy' anywhere: data-href never matched
+
+
 def test_load_pipeline_config(tmpdir):
     from bytesme_etl_batch_pipeline_spark.plans.pipeline import load_config
 

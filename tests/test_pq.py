@@ -117,6 +117,7 @@ def test_ivfpq_end_to_end(spark, emb):
     flat-PQ floor (residual quantization is strictly finer), and the query
     vector itself must come back first."""
     from bytesme_etl_batch_pipeline_spark.operators.pq import (
+        ivfpq_encode,
         ivfpq_search,
         train_ivfpq,
     )
@@ -124,7 +125,8 @@ def test_ivfpq_end_to_end(spark, emb):
         topk_brute_force,
     )
 
-    coarse, books, encoded = train_ivfpq(emb, k_coarse=4, m=8, k_pq=16)
+    coarse, books = train_ivfpq(emb, k_coarse=4, m=8, k_pq=16)
+    encoded = ivfpq_encode(emb, coarse, books)
     assert len(coarse) == 4 and len(books) == 8
     enc_rows = encoded.collect()
     assert len(enc_rows) == emb.count()
@@ -157,6 +159,7 @@ def test_ivfpq_probe_pruning_monotone(spark, emb):
     """More probed cells can only widen the candidate pool: recall with
     n_probe=4 must be >= recall with n_probe=1 for the same budget."""
     from bytesme_etl_batch_pipeline_spark.operators.pq import (
+        ivfpq_encode,
         ivfpq_search,
         train_ivfpq,
     )
@@ -164,7 +167,8 @@ def test_ivfpq_probe_pruning_monotone(spark, emb):
         topk_brute_force,
     )
 
-    coarse, books, encoded = train_ivfpq(emb, k_coarse=4, m=8, k_pq=16)
+    coarse, books = train_ivfpq(emb, k_coarse=4, m=8, k_pq=16)
+    encoded = ivfpq_encode(emb, coarse, books)
     qrow = list(emb.filter(F.col("vec_id") == 7).first()["embedding"])
     query = emb.filter(F.col("vec_id") == 7).select(
         F.col("embedding").alias("q")
@@ -239,6 +243,7 @@ def test_ivfpq_arrow_assign_residual_matches_expression_path(spark):
     from bytesme_etl_batch_pipeline_spark.operators.pq import (
         _assign_and_residual_pandas,
         _residual,
+        ivfpq_encode,
         train_ivfpq,
     )
     from bytesme_etl_batch_pipeline_spark.operators.similarity import (
@@ -251,9 +256,8 @@ def test_ivfpq_arrow_assign_residual_matches_expression_path(spark):
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     k_big = IVF_EXPRESSION_MAX_K + 2
-    coarse, books, encoded = train_ivfpq(
-        vecs, k_coarse=k_big, m=2, k_pq=4, max_iter=3
-    )
+    coarse, books = train_ivfpq(vecs, k_coarse=k_big, m=2, k_pq=4, max_iter=3)
+    encoded = ivfpq_encode(vecs, coarse, books)
     assert len(coarse) == k_big
     assert encoded.count() == 120
 
