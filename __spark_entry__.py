@@ -11,8 +11,8 @@ queries, all but a few sketch queries with DuckDB oracle twins —
 ``len(queries())`` / ``len(oracle_sql())`` are the live counts).
 COVERAGE.md maps every SURVEY §2
 operator to its implementation, catalog query, and test. The catalog
-self-heals foreign SparkSessions (nanos-parquet + UTC confs are set at the
-table loader), so any session the driver provides works.
+self-heals foreign SparkSessions (UTC and timestamp-inference confs are set
+at the table loader), so any session the driver provides works.
 """
 
 from __future__ import annotations

@@ -308,9 +308,9 @@ def _rerank_exact(
     from .similarity import topk_brute_force
 
     pruned = vectors.join(F.broadcast(cand_ids), id_col)
-    spark = vectors.sparkSession
-    qdf = spark.createDataFrame(
-        [([float(x) for x in query_vec],)], "q array<double>"
+    # a one-row JVM relation, not createDataFrame(<list>): no Python tasks
+    qdf = vectors.sparkSession.range(1, numPartitions=1).select(
+        lit_doubles(query_vec).alias("q")
     )
     return topk_brute_force(
         pruned, qdf, k=k, id_col=id_col, vec_col=vec_col, metric="l2"

@@ -3775,14 +3775,13 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     if the range table grows)."""
 
     c = load_table(spark, sf_dir, "customer")
-    tiers = spark.createDataFrame(
-        [
-            ("negative", -1e9, 0.0),
-            ("low", 0.0, 3000.0),
-            ("mid", 3000.0, 7000.0),
-            ("high", 7000.0, 1e9),
-        ],
-        "tier string, lo double, hi double",
+    # SQL VALUES is a JVM local relation; createDataFrame(<list>) would be a
+    # Python RDD whose tasks start Python workers
+    tiers = spark.sql(
+        """VALUES ('negative', -1e9D, 0.0D),
+                  ('low', 0.0D, 3000.0D),
+                  ('mid', 3000.0D, 7000.0D),
+                  ('high', 7000.0D, 1e9D) AS t(tier, lo, hi)"""
     )
     out = range_join(c.select("c_custkey", "c_acctbal"), tiers, "c_acctbal", "lo", "hi")
     return out.select("c_custkey", "c_acctbal", "tier")
@@ -4082,8 +4081,8 @@ def _drain_stream_snapshot(spark: SparkSession, agg: DataFrame, tag: str) -> Dat
     fallback then correctly means 'zero batches THIS run'). It must
     outlive the return (the caller collects the lazy scan), so it is
     overwritten in place, not tempdir-scoped; one dir per (app, query)
-    accumulates nothing across bench loops or driver retries."""
-
+    accumulates nothing across bench loops or driver retries. The snapshot
+    is read back with ``agg``'s schema, so the read runs no footer job."""
 
     out = os.path.join(
         tempfile.gettempdir(),
@@ -4096,7 +4095,7 @@ def _drain_stream_snapshot(spark: SparkSession, agg: DataFrame, tag: str) -> Dat
         SE.run_stream_to_parquet_snapshot(agg, out, ckpt)
     if not os.path.isdir(out):  # zero-batch drain (empty source)
         return spark.createDataFrame([], agg.schema)
-    return spark.read.parquet(out)
+    return spark.read.schema(agg.schema).parquet(out)
 
 
 @register(
@@ -4483,8 +4482,9 @@ def q_semantic_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("document"),
     )
     emb = docs.select("p_partkey", "document", embed_column(F.col("document")).alias("embedding"))
-    query = spark.createDataFrame([("large economy widget",)], ["qtext"]).select(
-        embed_column(F.col("qtext")).alias("q")
+    # a one-partition JVM relation: the query text's embed runs one Python task
+    query = spark.range(1, numPartitions=1).select(
+        embed_column(F.lit("large economy widget")).alias("q")
     )
     top = topk_brute_force(emb, query, k=5, id_col="p_partkey")
     # J3: join search hits back to full product details

@@ -130,3 +130,86 @@ MEDIA = StructType(
         StructField("duration_ms", LongType(), True),
     ]
 )
+
+
+def _nullable(*fields: tuple[str, object]) -> StructType:
+    return StructType([StructField(n, t, True) for n, t in fields])
+
+
+# Testdata tables (``{sf_dir}/{table}.parquet``, TESTDATA.md). Every
+# field is nullable, as Parquet schema inference yields, so a declared scan
+# has the very schema an inferred one had — without the footer-reading job
+# inference runs. ``events.ts`` is Parquet TIMESTAMP(MICROS) with
+# isAdjustedToUTC=false, read as a session-TZ timestamp (UTC-pinned by
+# ``sources.tables.ensure_session_confs``). ``tests/test_testdata_schema.py``
+# checks this registry against every testdata scale on both engines.
+TESTDATA_TABLES: dict[str, StructType] = {
+    "region": _nullable(("r_regionkey", IntegerType()), ("r_name", StringType())),
+    "nation": _nullable(
+        ("n_nationkey", IntegerType()),
+        ("n_name", StringType()),
+        ("n_regionkey", IntegerType()),
+    ),
+    "customer": _nullable(
+        ("c_custkey", LongType()),
+        ("c_name", StringType()),
+        ("c_nationkey", IntegerType()),
+        ("c_acctbal", DoubleType()),
+        ("c_mktsegment", StringType()),
+    ),
+    "supplier": _nullable(
+        ("s_suppkey", LongType()),
+        ("s_name", StringType()),
+        ("s_nationkey", IntegerType()),
+        ("s_acctbal", DoubleType()),
+    ),
+    "part": _nullable(
+        ("p_partkey", LongType()),
+        ("p_name", StringType()),
+        ("p_brand", StringType()),
+        ("p_type", StringType()),
+        ("p_size", IntegerType()),
+        ("p_retailprice", DoubleType()),
+    ),
+    "orders": _nullable(
+        ("o_orderkey", LongType()),
+        ("o_custkey", LongType()),
+        ("o_orderstatus", StringType()),
+        ("o_totalprice", DoubleType()),
+        ("o_orderdate", TimestampType()),
+        ("o_orderpriority", StringType()),
+    ),
+    "lineitem": _nullable(
+        ("l_orderkey", LongType()),
+        ("l_partkey", LongType()),
+        ("l_suppkey", LongType()),
+        ("l_linenumber", IntegerType()),
+        ("l_quantity", DoubleType()),
+        ("l_extendedprice", DoubleType()),
+        ("l_discount", DoubleType()),
+        ("l_tax", DoubleType()),
+        ("l_returnflag", StringType()),
+        ("l_linestatus", StringType()),
+        ("l_shipdate", TimestampType()),
+    ),
+    "events": _nullable(
+        ("event_id", LongType()),
+        ("ts", TimestampType()),
+        ("user_id", LongType()),
+        ("event_type", StringType()),
+        ("value", DoubleType()),
+        ("props", StringType()),
+    ),
+    "documents": _nullable(
+        ("doc_id", LongType()),
+        ("text", StringType()),
+        ("lang", StringType()),
+        ("source", StringType()),
+        ("n_chars", LongType()),
+    ),
+    "embeddings": _nullable(
+        ("vec_id", LongType()),
+        ("embedding", ArrayType(FloatType())),
+        ("label", IntegerType()),
+    ),
+}

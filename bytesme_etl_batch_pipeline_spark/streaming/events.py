@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import dec
+from ..schemas import TESTDATA_TABLES
 
 
 def read_events_stream(
@@ -37,15 +38,18 @@ def read_events_stream(
     holds for a live tailing source (Kafka, arriving files) but NOT for an
     unordered replay, which must drain with large batches (or widen the
     watermark past the dump's disorder). Pass an explicit value to exercise
-    multi-batch state merging on inputs whose file order is controlled."""
+    multi-batch state merging on inputs whose file order is controlled.
+
+    ``schema`` defaults to the declared events schema
+    (``schemas.TESTDATA_TABLES``), so starting the stream reads no footer."""
     import os
 
     from ..sources.tables import ensure_session_confs
 
-    ensure_session_confs(spark)  # nanos-parquet + UTC, even on foreign sessions
+    ensure_session_confs(spark)  # UTC, even on foreign sessions
     path = os.path.join(sf_dir, "events.parquet")
     if schema is None:
-        schema = spark.read.parquet(path).schema
+        schema = TESTDATA_TABLES["events"]
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -54,14 +58,11 @@ def read_events_stream(
         # stream the directory itself. (A pathGlobFilter of "events.parquet*"
         # here would match no LEAF file name and silently yield an empty
         # stream.)
-        stream = reader.parquet(path)
+        return reader.parquet(path)
     else:
         # Bare-file layout (driver testdata): the file source wants a
         # directory, so scan sf_dir scoped to this one file by leaf name.
-        stream = reader.option("pathGlobFilter", "events.parquet*").parquet(sf_dir)
-    from ..sources.tables import repair_event_ts
-
-    return repair_event_ts(stream)
+        return reader.option("pathGlobFilter", "events.parquet*").parquet(sf_dir)
 
 
 def windowed_counts(

@@ -7,6 +7,8 @@ avoids a global sort, aggregations combine map-side."""
 
 from __future__ import annotations
 
+import pytest
+
 from bytesme_etl_batch_pipeline_spark.plans import queries as catalog
 
 
@@ -341,3 +343,41 @@ def test_neardup_lsh_edges_memoized_per_app_and_sfdir(spark, sf_dir):
         (app, sf_dir), (app, "/root/testdata/sf0.01")
     }
     Q._LSH_EDGES_MEMO.clear()
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_building_scans_and_queries_runs_no_job(spark, sf_dir):
+    """Declared scan schemas: a cold ``load_table`` reads no Parquet footer,
+    so neither it nor building the benchmark's catalog sample starts a Spark
+    job (a streaming drain's micro-batches run under the stream's own job
+    group, not this one)."""
+    from bytesme_etl_batch_pipeline_spark.sources import tables
+
+    tables._clear_scan_memo()
+    loads = _jobs_in_group(
+        spark, "no-job-test:scans",
+        lambda: [tables.load_table(spark, sf_dir, t) for t in tables.TABLE_NAMES],
+    )
+    tables._clear_scan_memo()
+    names = ["pricing_summary", "tpch_q3_shipping_priority", "streaming_windowed_counts"]
+    builds = _jobs_in_group(
+        spark, "no-job-test:build",
+        lambda: [catalog.SPARK_QUERIES[n](spark, sf_dir) for n in names],
+    )
+    assert (loads, builds) == (0, 0)
+
+
+def test_load_table_rejects_unknown_table(spark, sf_dir):
+    from bytesme_etl_batch_pipeline_spark.sources.tables import load_table
+
+    with pytest.raises(KeyError):
+        load_table(spark, sf_dir, "no_such_table")

@@ -1,9 +1,12 @@
 """Round-start guard: the driver regenerates /root/testdata between rounds
 and has changed column types before (round 2: events.ts went from
-TIMESTAMP(NANOS)-as-bigint to plain Parquet TIMESTAMP). Every oracle in the
-catalog assumes the DuckDB-visible schemas below — if this test fails, the
-testdata changed shape and the session confs / oracles must be revisited
-BEFORE trusting any parity run.
+TIMESTAMP(NANOS)-as-bigint to plain Parquet TIMESTAMP). The engine scans every
+table with its declared schema (``schemas.TESTDATA_TABLES``) and every oracle
+assumes the same shapes — if a test here fails, the testdata changed shape and
+the registry / oracles must be revisited BEFORE trusting any parity run.
+
+One schema source, checked on both engines: the DuckDB expectations are
+derived from the registry, and Spark's own inference must reproduce it.
 """
 
 from __future__ import annotations
@@ -13,75 +16,21 @@ import os
 import duckdb
 import pytest
 
+from bytesme_etl_batch_pipeline_spark.schemas import TESTDATA_TABLES
+
+# Spark simpleString -> DuckDB DESCRIBE type
+_DUCK_TYPE = {
+    "bigint": "BIGINT",
+    "int": "INTEGER",
+    "string": "VARCHAR",
+    "double": "DOUBLE",
+    "timestamp": "TIMESTAMP",
+    "array<float>": "FLOAT[]",
+}
+
 EXPECTED = {
-    "region": [("r_regionkey", "INTEGER"), ("r_name", "VARCHAR")],
-    "nation": [
-        ("n_nationkey", "INTEGER"),
-        ("n_name", "VARCHAR"),
-        ("n_regionkey", "INTEGER"),
-    ],
-    "customer": [
-        ("c_custkey", "BIGINT"),
-        ("c_name", "VARCHAR"),
-        ("c_nationkey", "INTEGER"),
-        ("c_acctbal", "DOUBLE"),
-        ("c_mktsegment", "VARCHAR"),
-    ],
-    "supplier": [
-        ("s_suppkey", "BIGINT"),
-        ("s_name", "VARCHAR"),
-        ("s_nationkey", "INTEGER"),
-        ("s_acctbal", "DOUBLE"),
-    ],
-    "part": [
-        ("p_partkey", "BIGINT"),
-        ("p_name", "VARCHAR"),
-        ("p_brand", "VARCHAR"),
-        ("p_type", "VARCHAR"),
-        ("p_size", "INTEGER"),
-        ("p_retailprice", "DOUBLE"),
-    ],
-    "orders": [
-        ("o_orderkey", "BIGINT"),
-        ("o_custkey", "BIGINT"),
-        ("o_orderstatus", "VARCHAR"),
-        ("o_totalprice", "DOUBLE"),
-        ("o_orderdate", "TIMESTAMP"),
-        ("o_orderpriority", "VARCHAR"),
-    ],
-    "lineitem": [
-        ("l_orderkey", "BIGINT"),
-        ("l_partkey", "BIGINT"),
-        ("l_suppkey", "BIGINT"),
-        ("l_linenumber", "INTEGER"),
-        ("l_quantity", "DOUBLE"),
-        ("l_extendedprice", "DOUBLE"),
-        ("l_discount", "DOUBLE"),
-        ("l_tax", "DOUBLE"),
-        ("l_returnflag", "VARCHAR"),
-        ("l_linestatus", "VARCHAR"),
-        ("l_shipdate", "TIMESTAMP"),
-    ],
-    "events": [
-        ("event_id", "BIGINT"),
-        ("ts", "TIMESTAMP"),
-        ("user_id", "BIGINT"),
-        ("event_type", "VARCHAR"),
-        ("value", "DOUBLE"),
-        ("props", "VARCHAR"),
-    ],
-    "documents": [
-        ("doc_id", "BIGINT"),
-        ("text", "VARCHAR"),
-        ("lang", "VARCHAR"),
-        ("source", "VARCHAR"),
-        ("n_chars", "BIGINT"),
-    ],
-    "embeddings": [
-        ("vec_id", "BIGINT"),
-        ("embedding", "FLOAT[]"),
-        ("label", "INTEGER"),
-    ],
+    table: [(f.name, _DUCK_TYPE[f.dataType.simpleString()]) for f in schema.fields]
+    for table, schema in TESTDATA_TABLES.items()
 }
 
 SF_DIRS = [
@@ -103,3 +52,16 @@ def test_testdata_schemas_match_oracle_assumptions(sf):
         if got != expected:
             bad[table] = {"expected": expected, "got": got}
     assert not bad, f"testdata regenerated with new shapes: {bad}"
+
+
+@pytest.mark.parametrize("sf", SF_DIRS)
+def test_spark_inference_matches_declared_schemas(spark, sf_dir, sf):
+    """A declared scan must have the schema inference would give: every
+    field nullable, ``ts``-style columns TIMESTAMP under the session confs."""
+    root = os.path.dirname(sf_dir)
+    bad = {}
+    for table, declared in TESTDATA_TABLES.items():
+        got = spark.read.parquet(os.path.join(root, sf, f"{table}.parquet")).schema
+        if got != declared:
+            bad[table] = {"declared": str(declared), "got": str(got)}
+    assert not bad, f"declared schemas drifted from the testdata: {bad}"
