@@ -62,12 +62,15 @@ def _sizing(expected_items: int, fpp: float) -> tuple[int, int]:
     return m, k
 
 
+# Cap on first-level bitsets (one per build partition) that enter the merge.
+_MAX_BITSETS = 256
+
+
 def build_bloom(
     df: DataFrame,
     col: str,
     expected_items: int,
     fpp: float = 0.01,
-    max_build_partitions: int = 256,
     merge_fanout: int = 8,
 ) -> BloomFilter:
     """Build the filter over ``df[col]`` distributed: hash JVM-side
@@ -85,8 +88,8 @@ def build_bloom(
     The Arrow path (not an RDD ``mapPartitions``) matters twice: no
     row-at-a-time pickle of the hash column, and it reuses the pandas-UDF
     worker pool every other Python stage already warmed. ``coalesce`` caps
-    the number of first-level bitsets so total merge traffic stays at
-    ≤``max_build_partitions``·m/8 across the cluster."""
+    the first-level bitsets at ``_MAX_BITSETS`` (256), so total merge
+    traffic stays at ≤256·m/8 across the cluster."""
     n_bits, n_hashes = _sizing(expected_items, fpp)
     n_words = n_bits // 64
     # Unconditional coalesce: coalesce() only ever REDUCES partition count
@@ -95,7 +98,7 @@ def build_bloom(
     # upstream query stages as a separate job before the build even starts
     # (r11; guide §1.2 — don't pay a job to learn what a no-op answers).
     hashes = df.select(F.xxhash64(F.col(col)).alias("h")).coalesce(
-        max_build_partitions
+        _MAX_BITSETS
     )
 
     def set_bits(batches):

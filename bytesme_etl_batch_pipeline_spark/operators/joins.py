@@ -17,17 +17,15 @@ def resolve_key(
     dim: DataFrame,
     on: str | list[str],
     how: str = "inner",
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """J1/J2/J3: dimension-key resolution (``category_name -> category_id``
     style, reference ``seperate_tables.py:111-117,141-143``).
 
-    Broadcasting the dim avoids shuffling the 100 TB fact side entirely —
-    the probe runs map-side, exactly like the reference's dict lookup but
-    distributed.
+    The dim is always broadcast: that avoids shuffling the 100 TB fact
+    side entirely — the probe runs map-side, exactly like the reference's
+    dict lookup but distributed.
     """
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
 def lookup_map_join(df: DataFrame, mapping: dict[str, str], key_col: str, out_col: str) -> DataFrame:

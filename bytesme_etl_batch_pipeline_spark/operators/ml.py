@@ -74,9 +74,9 @@ def kmeans(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_iter: int = 20,
-    tol: float = 1e-6,
 ) -> tuple[DataFrame, list[list[float]], list[float]]:
-    """Lloyd's k-means over an embedding column.
+    """Lloyd's k-means over an embedding column: at most ``max_iter``
+    rounds, stopping early once no centroid coordinate moves by 1e-6.
 
     Deterministic end to end: seeds are the k rows with the LOWEST ids,
     assignment ties break on cluster id, and the update means fold through
@@ -163,7 +163,7 @@ def kmeans(
             for a, b in zip(nc, oc)
         )
         centroids = new_centroids
-        if moved < tol:
+        if moved < 1e-6:
             break
 
     return _assign(df, vec_col, centroids), centroids, history

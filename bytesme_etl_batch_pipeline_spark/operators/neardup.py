@@ -152,6 +152,11 @@ def ngram_jaccard_pairs(
     compared); at web scale the block is an LSH bucket instead of a metadata
     column, but the verify math is identical. The shingle pass runs ONCE —
     see ``blocked_shingle_commons``.
+
+    Collision caveat: shingles match on their 64-bit ``xxhash64``, not
+    their text. Two distinct shingles of one block that collide count as
+    shared (p ≈ pairs²/2⁶⁵), which can only raise ``n_common``. There is
+    no exact-match mode.
     """
     sizes_src, common = blocked_shingle_commons(df, id_col, text_col, block_col, n)
     sizes = sizes_src.select(F.col(id_col).alias("doc_a"), F.col("__sz").alias("size_a"))
@@ -495,28 +500,26 @@ def hamming_pairs_banded(
     max_hamming: int = 3,
     n_bands: int = 4,
     band_bits: int = 16,
-    hash_bits: int = 64,
 ) -> DataFrame:
-    """Hamming-distance pairs over a wide (e.g. 64-bit) hash with the
-    hash's OWN bands as the blocking key — pigeonhole: any pair within
+    """Hamming-distance pairs over a 64-bit hash with the hash's OWN
+    bands as the blocking key — pigeonhole: any pair within
     distance d shares at least one of d+1 untouched bands, so
     ``n_bands > max_hamming`` guarantees zero false negatives. Explode
     each row into its (band_index, band_value) keys, equi-join, verify
     the full distance on the survivors. The generalization of
     ``simhash_hamming_pairs`` (whose caller provides one external block);
-    at scale (band, value) is a bucket/partition key.
+    at scale (band, value) is a bucket/partition key. The 16-bit simhash
+    query is not banded: at sf0.1 its lang self-join beat banding, and
+    with 16 bits banding cuts candidates only ~4× (ROADMAP direction 4).
 
-    ``hash_bits`` is the EFFECTIVE width of ``hash_col`` — it defaults to
-    64 (the full width of a Spark long, the widest this column can be)
-    so omitting it is always safe: a caller whose hash genuinely uses
-    fewer bits (e.g. a 16-bit simhash stored in a long) must pass the
-    narrower width explicitly to use fewer/smaller bands."""
+    The bands must cover all 64 bits of ``hash_col`` (the full width of a
+    Spark long), because the operator cannot know that the high bits of
+    a narrower hash are zero."""
     assert n_bands > max_hamming, "need n_bands > max_hamming (pigeonhole)"
-    assert 0 < hash_bits <= 64, "hash_col is a long: hash_bits in (0, 64]"
     # Pigeonhole only holds if the bands COVER the hash: unbanded high
     # bits would silently turn into false negatives.
-    assert n_bands * band_bits >= hash_bits, (
-        f"bands cover only {n_bands * band_bits} of {hash_bits} hash bits"
+    assert n_bands * band_bits >= 64, (
+        f"bands cover only {n_bands * band_bits} of 64 hash bits"
     )
     mask = (1 << band_bits) - 1
     bands = F.array(

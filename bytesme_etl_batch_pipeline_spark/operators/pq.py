@@ -8,8 +8,12 @@ Engine extension (the reference stops at pgvector brute-force top-k).
 Scale design:
 * TRAIN (driver-side, sample-sized): the vector space splits into ``m``
   subspaces; each gets its own k-codeword codebook from a deterministic
-  numpy Lloyd run on the column SLICE of ONE collected sample — m small
-  trainings, centroids held driver-side (m·k·(d/m) = d·k floats — KBs).
+  numpy Lloyd run on the column SLICE of ONE collect of the training
+  frame — m small trainings, centroids held driver-side (m·k·(d/m) = d·k
+  floats — KBs). The trainers use every row they are given: to bound the
+  collect, the caller passes a sample cut by a partition-independent
+  filter (the catalog trains on ``vec_id < 500``), never
+  ``DataFrame.sample``, whose Bernoulli draw is per partition.
 * ENCODE (map-side, zero shuffles): per subspace, argmin over the k
   codewords as a pure array expression — each vector compresses to m small
   ints (m bytes at k ≤ 256), a 32× compression at d=64/m=8 vs float32.
@@ -101,21 +105,9 @@ def _collect_sample(train: DataFrame, vec_col: str, id_col: str):
     return np.asarray(vecs, dtype=np.float64)[order]
 
 
-def _training_sample(
-    vectors: DataFrame,
-    vec_col: str,
-    id_col: str,
-    m: int,
-    sample_fraction: float,
-    seed: int,
-):
+def _training_sample(vectors: DataFrame, vec_col: str, id_col: str, m: int):
     """The collected training matrix and its subspace width ``dim // m``."""
-    train = (
-        vectors
-        if sample_fraction >= 1.0
-        else vectors.sample(sample_fraction, seed)
-    )
-    X = _collect_sample(train, vec_col, id_col)
+    X = _collect_sample(vectors, vec_col, id_col)
     dim = X.shape[1]
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -141,19 +133,18 @@ def train_pq(
     m: int = 8,
     k: int = 16,
     max_iter: int = 5,
-    sample_fraction: float = 1.0,
-    seed: int = 42,
 ) -> list[list[list[float]]]:
     """Train m per-subspace codebooks of k codewords each.
 
-    Collects the training SAMPLE to the driver once (PQ quantizers train
-    on thousands of rows, KBs–MBs; pass ``sample_fraction`` to bound it)
-    and runs a deterministic numpy Lloyd per subspace — one job total,
-    rows sorted by id so the result is identical under any partitioning.
+    Collects ``vectors`` to the driver once (PQ quantizers train on
+    thousands of rows, KBs–MBs; to bound it, pass a sample cut by a
+    partition-independent filter such as ``vec_id < 500``) and runs a
+    deterministic numpy Lloyd per subspace — one job total, rows sorted
+    by id so the result is identical under any partitioning.
 
     Returns ``codebooks[m][k][d/m]``. The vector dimensionality must be
     divisible by ``m``."""
-    X, d_sub = _training_sample(vectors, vec_col, id_col, m, sample_fraction, seed)
+    X, d_sub = _training_sample(vectors, vec_col, id_col, m)
     if len(X) < k:
         raise ValueError(f"k={k} exceeds sample size {len(X)}")
     return _subspace_books(X, m, d_sub, k, max_iter)
@@ -441,20 +432,20 @@ def train_ivfpq(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     max_iter: int = 5,
-    sample_fraction: float = 1.0,
-    seed: int = 42,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """Train the two-level IVF-PQ index (Jégou et al. 2011 §IV): a coarse
     quantizer partitions the space into cells, then PQ codebooks train on
     the RESIDUALS (vector − cell centroid) — residuals concentrate around
     the origin, so the same codebook budget quantizes them far better than
-    raw vectors. One collected sample powers BOTH trainings (coarse Lloyd
-    on the sample, then per-subspace Lloyd on its residuals) — zero Spark
-    jobs beyond the collect. Returns ``(coarse_centroids, codebooks)``;
+    raw vectors. One collect of ``vectors`` powers BOTH trainings (coarse
+    Lloyd on the rows, then per-subspace Lloyd on their residuals) — zero
+    Spark jobs beyond the collect. To train on a sample, filter the frame
+    first with a partition-independent predicate (the catalog uses
+    ``vec_id < 500``). Returns ``(coarse_centroids, codebooks)``;
     ``ivfpq_encode`` turns any frame into the index payload."""
     import numpy as np
 
-    X, d_sub = _training_sample(vectors, vec_col, id_col, m, sample_fraction, seed)
+    X, d_sub = _training_sample(vectors, vec_col, id_col, m)
     if len(X) < max(k_coarse, k_pq):
         raise ValueError(f"sample size {len(X)} below k")
     coarse = _local_lloyd(X, k_coarse, max_iter)

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrays import lit_doubles, lit_doubles_2d
+from ..session import shuffle_width
 from .ml import kmeans
 from .textops import md5_hash48
 
@@ -95,7 +96,6 @@ def pairs_above_threshold(
     vec_col: str,
     block_col: str,
     threshold: float = 0.9,
-    salt_chunks: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs within a blocking key (exact verify
     step of an LSH/IVF pipeline; never run unblocked at scale).
@@ -108,19 +108,19 @@ def pairs_above_threshold(
     salt (``pmod(xxhash64(id), S)``) and the build side replicates S
     ways, spreading each block's pair work over S·|blocks| partitions.
     Pair set is unchanged: each unordered pair surfaces exactly once,
-    through the a-side row's single salt. The trade is S extra copies of
-    the build side through the exchange — linear in the corpus, amortized
-    by the quadratic per-block verify whenever avg block size ≫ S; for
-    fine blocking (blocks ≫ cores) pass ``salt_chunks=1`` to skip it.
+    through the a-side row's single salt.
+
+    Sizing rule: S = max(1, min(shuffle width, ``defaultParallelism``)).
+    A salt past the core count adds a build-side copy but no parallel
+    task, so S never exceeds the cores, and raising
+    ``spark.sql.shuffle.partitions`` does not raise the replication. The
+    cost is S copies of the build side through the exchange — linear in
+    the corpus, amortized by the quadratic per-block verify whenever the
+    average block size ≫ S.
     """
-    if salt_chunks is None:
-        try:
-            salt_chunks = int(
-                vectors.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):
-            salt_chunks = vectors.sparkSession.sparkContext.defaultParallelism
-    salt_chunks = max(1, salt_chunks)
+    spark = vectors.sparkSession
+    width = shuffle_width(spark)
+    salt = max(1, min(width, spark.sparkContext.defaultParallelism))
     # Precompute each vector's norm ONCE (n folds) instead of per pair
     # (2·n² folds) — same arithmetic, ~3× less work on the O(n²) stage.
     with_norm = vectors.select(
@@ -130,24 +130,23 @@ def pairs_above_threshold(
     a = with_norm.select(
         F.col(id_col).alias("id_a"), F.col(vec_col).alias("v_a"),
         F.col("__blk"), F.col("__nrm").alias("n_a"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_chunks)).alias("__salt"),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt)).alias("__salt"),
     )
     b = with_norm.select(
         F.col(id_col).alias("id_b"), F.col(vec_col).alias("v_b"),
         F.col("__blk"), F.col("__nrm").alias("n_b"),
         F.explode(
-            F.sequence(F.lit(0), F.lit(salt_chunks - 1)).cast("array<bigint>")
+            F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<bigint>")
         ).alias("__salt"),
     )
-    # PIN both exchanges at salt_chunks partitions: the shuffled bytes are
-    # tiny (vectors + norms), so AQE's byte-targeted coalescing folds the
-    # join back to ~1 partition — but the work here is the QUADRATIC
-    # per-block fold downstream of the exchange, invisible to the byte
-    # target (same lesson as lsh_band_window_pairs' candidate dedup, r10).
-    # An explicit width keyed to the shuffle setting scales with the
-    # session; the join reuses the pinned partitioning, adding no exchange.
-    a = a.repartition(salt_chunks, "__blk", "__salt")
-    b = b.repartition(salt_chunks, "__blk", "__salt")
+    # PIN both exchanges at the shuffle width: the shuffled bytes are tiny
+    # (vectors + norms), so AQE's byte-targeted coalescing folds the join
+    # back to ~1 partition — but the work here is the QUADRATIC per-block
+    # fold downstream of the exchange, invisible to the byte target (same
+    # lesson as lsh_band_window_pairs' candidate dedup, r10). The join
+    # reuses the pinned partitioning, adding no exchange.
+    a = a.repartition(width, "__blk", "__salt")
+    b = b.repartition(width, "__blk", "__salt")
     return (
         a.join(b, ["__blk", "__salt"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -304,12 +303,7 @@ def lsh_band_window_pairs(
     # Exactness is boundary-agnostic (the two-pass window proof holds for
     # ANY chunking), so pinning sampled boundaries changes nothing.
     if num_chunks is None:
-        try:
-            num_chunks = int(
-                vectors.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except (TypeError, ValueError):  # e.g. "auto" under some AQE setups
-            num_chunks = vectors.sparkSession.sparkContext.defaultParallelism
+        num_chunks = shuffle_width(vectors.sparkSession)
     # Range partitioning on (band, bval, id) makes global order == (chunk,
     # local rank) order and keeps every bucket's rows contiguous across
     # chunk boundaries — the two facts the boundary pass's exactness proof
@@ -586,19 +580,18 @@ def train_ivf_centroids(
     vectors: DataFrame,
     k: int = 8,
     vec_col: str = "embedding",
-    seed: int = 42,
-    sample_fraction: float = 1.0,
     id_col: str = "vec_id",
 ) -> list[list[float]]:
     """Train the IVF coarse quantizer with the engine's own k-means
-    (``operators/ml.kmeans``): its means and inertia fold through DECIMAL,
-    so the quantizer — and therefore every IVF cell assignment downstream —
-    is bit-identical on any cluster layout. At 100 TB, train on a seeded
-    sample (``sample_fraction``, ``seed``) — quantizer quality saturates
-    long before full-data training pays off — then assign the full corpus
-    map-side via ``ivf_assign``."""
-    train = vectors if sample_fraction >= 1.0 else vectors.sample(sample_fraction, seed)
-    _, centroids, _ = kmeans(train, k=k, vec_col=vec_col, id_col=id_col, max_iter=20)
+    (``operators/ml.kmeans``) on every row of ``vectors``: its means and
+    inertia fold through DECIMAL, so the quantizer — and therefore every
+    IVF cell assignment downstream — is bit-identical on any cluster
+    layout. At 100 TB, pass a sample — quantizer quality saturates long
+    before full-data training pays off — cut by a partition-independent
+    filter (e.g. ``vec_id < 500`` or a hash of the id, never
+    ``DataFrame.sample``, which is Bernoulli per partition); then assign
+    the full corpus map-side via ``ivf_assign``."""
+    _, centroids, _ = kmeans(vectors, k=k, vec_col=vec_col, id_col=id_col, max_iter=20)
     return centroids
 
 

@@ -100,6 +100,7 @@ from ..operators.textops import (
     winnow_fingerprints,
     words,
 )
+from ..session import shuffle_width
 from ..sources.tables import load_table
 from ..streaming import events as SE
 
@@ -147,11 +148,9 @@ def _pin_width(df: DataFrame, *keys: str) -> DataFrame:
     ``spark.sql.shuffle.partitions`` — the same session-adaptive knob as
     every other exchange (guide §2.5/§2.6; the r10 ANN candidate-dedup
     lesson applied to the aggregation sites)."""
-    try:
-        n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n, *[F.col(k) for k in keys])
+    return df.repartition(
+        shuffle_width(df.sparkSession), *[F.col(k) for k in keys]
+    )
 
 
 _LSH_EDGES_MEMO: dict = {}
@@ -988,7 +987,9 @@ _DUCK_NGRAMS2 = (
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked word-bigram Jaccard near-dup pairs (engine extension).
-    Blocking key = source; at web scale the block is an LSH bucket."""
+    Blocking key = source; at web scale the block is an LSH bucket.
+    Shingles match on 64-bit hashes: two distinct shingles of one source
+    that collide count as shared (see ``neardup.ngram_jaccard_pairs``)."""
 
     d = _cpu_spread(spark, sf_dir, "documents")
     return N.ngram_jaccard_pairs(
@@ -3881,7 +3882,9 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end fuzzy dedup decision: blocked Jaccard pairs → keep-lowest
     removal policy → anti-join survivors (the full candidate→verify→decide
-    pipeline a training corpus runs)."""
+    pipeline a training corpus runs). Shingles match on 64-bit hashes:
+    two distinct shingles of one source that collide count as shared (see
+    ``neardup.ngram_jaccard_pairs``)."""
 
     d = _cpu_spread(spark, sf_dir, "documents")
     pairs = N.ngram_jaccard_pairs(d, "doc_id", "text", "source", n=2, threshold=0.1)
@@ -8473,7 +8476,9 @@ def q_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     one document quotes or embeds the other — the subset-detection signal
     symmetric Jaccard misses. Same blocked pair machinery as
     ``ngram_jaccard_pairs`` (never all-pairs), both directions reported,
-    threshold 0.5 either way."""
+    threshold 0.5 either way. Shingles match on 64-bit hashes: two
+    distinct shingles of one source that collide count as shared (see
+    ``neardup.ngram_jaccard_pairs``)."""
 
     d = _cpu_spread(spark, sf_dir, "documents")
     # one checkpointed (id, block, shingle-hash) pass feeds sizes AND both
@@ -10457,7 +10462,9 @@ def q_neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     LONGEST copy (length = extraction-quality proxy; ties fall back to
     lowest id) instead of blindly keeping the lowest id — the policy
     training corpora actually want when the same page was scraped at
-    different fidelities. See ``neardup.neardup_keep_best``."""
+    different fidelities. See ``neardup.neardup_keep_best``. Shingles
+    match on 64-bit hashes: two distinct shingles of one source that
+    collide count as shared (see ``neardup.ngram_jaccard_pairs``)."""
 
     d = _cpu_spread(spark, sf_dir, "documents")
     # the verified pair list is tiny (dup density, not corpus size) and
@@ -10520,7 +10527,9 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pseudo-random partner per selected anchor (Knuth-hash jump, ~25% of
     docs) and are SCREENED against the positive set so no negative is
     secretly a near-dup. One pair pipeline + one seeded map-side sample —
-    no random shuffles, reproducible on any cluster."""
+    no random shuffles, reproducible on any cluster. Shingles match on
+    64-bit hashes: two distinct shingles of one source that collide count
+    as shared (see ``neardup.ngram_jaccard_pairs``)."""
 
     d = _cpu_spread(spark, sf_dir, "documents")
     pos = (

@@ -65,3 +65,14 @@ def get_spark(
     spark = builder.getOrCreate()
     ensure_session_confs(spark)
     return spark
+
+
+def shuffle_width(spark: SparkSession) -> int:
+    """The session's shuffle width: ``spark.sql.shuffle.partitions``, or
+    ``defaultParallelism`` when that conf is not an integer (e.g. "auto"
+    under some AQE setups). The one reader for operators that pin an
+    exchange at the width every other shuffle gets."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism

@@ -665,6 +665,60 @@ def test_semantic_dedup_keeps_lowest_id_per_neardup_group(spark):
     survivors = {r["vec_id"] for r in neardup_filter(df, pairs, "vec_id").collect()}
     assert survivors == {0, 2, 3}
 
+
+def test_pair_salt_is_capped_at_default_parallelism(spark):
+    """With ``spark.sql.shuffle.partitions`` above the core count, the
+    build side of ``pairs_above_threshold`` replicates only
+    ``defaultParallelism`` ways (a salt past the cores adds copies but no
+    parallel task), and the pair set still equals brute-force blocked
+    cosine."""
+    import math
+    import random
+    import re
+
+    from bytesme_etl_batch_pipeline_spark.operators.similarity import (
+        pairs_above_threshold,
+    )
+
+    rng = random.Random(11)
+    rows = [
+        (i, [rng.uniform(-1.0, 1.0) for _ in range(4)], i % 3) for i in range(60)
+    ]
+    thr = 0.8
+
+    def cos(a, b):
+        dot = sum(x * y for x, y in zip(a, b))
+        return dot / (math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b)))
+
+    want = {}
+    for ia, va, ba in rows:
+        for ib, vb, bb in rows:
+            if ba == bb and ia < ib:
+                c = cos(va, vb)
+                assert abs(c - thr) > 1e-5  # no pair sits on the rounding edge
+                if c >= thr:
+                    want[(ia, ib)] = c
+    assert len(want) > 10
+
+    cores = spark.sparkContext.defaultParallelism
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(cores + 5))
+    try:
+        df = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>, label int"
+        )
+        pairs = pairs_above_threshold(df, "vec_id", "embedding", "label", threshold=thr)
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        got = {(r["id_a"], r["id_b"]): r["cosine"] for r in pairs.collect()}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    # each build-side row explodes into one copy per salt value
+    salts = re.findall(r"explode\(\[([\d,]+)\]\)", plan)
+    assert salts == [",".join(map(str, range(cores)))], plan
+    assert set(got) == set(want)
+    assert all(abs(got[p] - want[p]) <= 1e-6 for p in want)
+
 def test_star_cc_matches_propagation_and_union_find(spark):
     """Large-star/small-star CC must agree with union-find ground truth on
     random self-loop-free graphs (the star variant drops self-loops by

@@ -127,7 +127,7 @@ def test_ivf_with_trained_centroids_beats_random(spark, sf_dir):
     query = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q"))
     exact = {r["vec_id"] for r in topk_brute_force(e, query, k=10).collect()}
 
-    trained = train_ivf_centroids(e, k=4, seed=42)
+    trained = train_ivf_centroids(e, k=4)
     assert len(trained) == 4 and len(trained[0]) == 64
     got_trained = {
         r["vec_id"] for r in topk_ivf(e, query, trained, k=10, n_probe=2).collect()
@@ -137,10 +137,10 @@ def test_ivf_with_trained_centroids_beats_random(spark, sf_dir):
     # guaranteed edge over fixed centroids — assert a solid absolute recall
     # at n_probe=2 of 4 cells, and determinism of the trained index.
     assert r_trained >= 0.5
-    retrained = train_ivf_centroids(e, k=4, seed=42)
-    assert retrained == trained  # seeded training is reproducible
+    retrained = train_ivf_centroids(e, k=4)
+    assert retrained == trained  # training is reproducible
     # and partition-invariant
-    assert train_ivf_centroids(e.repartition(3), k=4, seed=42) == trained
+    assert train_ivf_centroids(e.repartition(3), k=4) == trained
 
 
 def test_quantize_int8_error_bound_and_recall(spark, sf_dir):
