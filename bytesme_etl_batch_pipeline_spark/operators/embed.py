@@ -5,8 +5,9 @@ behind a lazy global singleton (``generate_embeddings.py:36-37,245-272``),
 zero-vector on failure. Spark-first shape:
 
 * an Arrow-batched ``pandas_udf`` returning ``array<float>``;
-* the model loads once per executor inside the UDF closure (the distributed
-  twin of the reference's singleton);
+* the model loads once per Python worker process and is kept in this
+  module across the tasks that worker runs (the distributed twin of the
+  reference's singleton);
 * the model is *pluggable*: tests and oracle runs use ``HashEmbedder`` —
   deterministic, dependency-free — while production wires a real
   sentence-transformer through the same interface.
@@ -17,6 +18,7 @@ batches; per-executor batching is what makes GPU/ONNX models amortize.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 from typing import Protocol
 
@@ -78,16 +80,26 @@ class SentenceTransformerEmbedder:
         return self._model.encode(texts, normalize_embeddings=True).tolist()
 
 
+@functools.lru_cache(maxsize=4)
+def _embedder(factory, kwargs: tuple):
+    """The ``factory(**dict(kwargs))`` model of this worker process. The UDF
+    closure is unpickled afresh for every task, but this module-level
+    function travels by reference, so a reused worker keeps its cache. The
+    bound keeps a worker from piling up models whose factory is pickled by
+    value (a lambda is a new object, so a new key, in every task)."""
+    return factory(**dict(kwargs))
+
+
 def embed_column(text: Column, embedder_factory=HashEmbedder, **kwargs) -> Column:
     """Column-level embedding via Arrow-batched pandas UDF. The embedder is
-    built lazily once per executor process (cached in the closure), mirroring
-    the reference's lazy singleton at ``generate_embeddings.py:245-261``."""
-    state: dict = {}
+    built lazily once per worker process (``_embedder``), mirroring the
+    reference's lazy singleton at ``generate_embeddings.py:245-261``.
+    ``kwargs`` values must be hashable: they key that cache."""
+    key = tuple(sorted(kwargs.items()))
 
     @F.pandas_udf(ArrayType(FloatType()))
     def _embed(texts: pd.Series) -> pd.Series:
-        if "m" not in state:
-            state["m"] = embedder_factory(**kwargs)
-        return pd.Series(state["m"].encode(texts.fillna("").tolist()))
+        model = _embedder(embedder_factory, key)
+        return pd.Series(model.encode(texts.fillna("").tolist()))
 
     return _embed(text)

@@ -133,7 +133,9 @@ def run_pipeline(
     rest; the report carries per-input status and timing.
 
     Stages compose lazily — the only actions are the sink (or a count when
-    no sink is given, mirroring the reference's per-file summary).
+    no sink is given, mirroring the reference's per-file summary). When the
+    last stage is ``checkpoint``, its own job counts the rows through an
+    ``Observation``, so no separate count job runs.
 
     ``on_error(input_name, message)`` is the injectable alert hook — the
     engine twin of the reference's Discord-webhook-on-error
@@ -141,6 +143,9 @@ def run_pipeline(
     tests inject a recorder; a notifier that itself raises is swallowed so
     alerting failures can never mask the original error.
     """
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     from ..ckpt import free_checkpoint, tracked_local_checkpoint
 
     report = PipelineReport()
@@ -150,8 +155,12 @@ def run_pipeline(
         held: list[int] = []  # blocks pinned by this input's barriers
         try:
             out = df
-            for sname in stage_names:
+            counted = None  # filled by the final checkpoint's own job
+            for i, sname in enumerate(stage_names):
                 if sname == "checkpoint":
+                    if sink is None and i == len(stage_names) - 1:
+                        counted = Observation()
+                        out = out.observe(counted, F.count(F.lit(1)).alias("rows"))
                     # tracked form: a later barrier supersedes this one's
                     # blocks (the chain is linear), so free them then —
                     # bare localCheckpoint would pin one table-sized block
@@ -168,6 +177,8 @@ def run_pipeline(
             if sink is not None:
                 sink(name, out)
                 rows = None
+            elif counted is not None:
+                rows = counted.get["rows"]
             else:
                 rows = out.count()
             outputs[name] = out

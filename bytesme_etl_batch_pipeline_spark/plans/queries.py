@@ -22,6 +22,7 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, GroupedData, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -4071,28 +4072,30 @@ def q_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Streaming in the catalog (SURVEY §2.14)
 # ---------------------------------------------------------------------------
 
+def _stream_snapshot_dir(tag: str) -> str:
+    """Where ``_drain_stream_snapshot`` writes ``tag``'s snapshot: under
+    the driver's SparkFiles root (a ``userFiles-*`` directory private to
+    this application), which Spark deletes when the context stops."""
+    return os.path.join(SparkFiles.getRootDirectory(), "stream_snapshots", tag)
+
+
 def _drain_stream_snapshot(spark: SparkSession, agg: DataFrame, tag: str) -> DataFrame:
     """Shared drain harness for the streaming catalog queries (VERDICT r4):
     availableNow → ``foreachBatch`` parquet snapshot → return a SCAN of the
     snapshot. The result set never crosses the driver — the old memory-sink
     + collect() + createDataFrame round-trip was the one driver-heap
-    ceiling the rest of the catalog doesn't have. The snapshot dir is
-    keyed by the Spark application id (no cross-process/user collisions
-    on the shared tempdir) and CLEARED before the drain starts — a
+    ceiling the rest of the catalog doesn't have. The snapshot dir
+    (``_stream_snapshot_dir``) belongs to this application and goes with
+    it at ``spark.stop()``; it is CLEARED before the drain starts — a
     leftover snapshot from a prior invocation must never masquerade as
     this run's result when the source drains zero batches (the isdir
     fallback then correctly means 'zero batches THIS run'). It must
     outlive the return (the caller collects the lazy scan), so it is
-    overwritten in place, not tempdir-scoped; one dir per (app, query)
+    overwritten in place, not tempdir-scoped; one dir per query
     accumulates nothing across bench loops or driver retries. The snapshot
     is read back with ``agg``'s schema, so the read runs no footer job."""
 
-    out = os.path.join(
-        tempfile.gettempdir(),
-        "bytesme_stream_snapshots",
-        spark.sparkContext.applicationId,
-        tag,
-    )
+    out = _stream_snapshot_dir(tag)
     shutil.rmtree(out, ignore_errors=True)
     with tempfile.TemporaryDirectory() as ckpt:
         SE.run_stream_to_parquet_snapshot(agg, out, ckpt)

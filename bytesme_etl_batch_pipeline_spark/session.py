@@ -11,6 +11,18 @@ Scale notes (100 TB target):
   ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` so we leave the
   static value as a local-test knob only.
 * Arrow on — every pandas UDF in this engine is Arrow-batched.
+
+Python workers start from ``worker_daemon`` (``spark.python.daemon.module``)
+instead of ``pyspark.daemon``. Each Python task calls
+``importlib.invalidate_caches()``, which on Python 3.11 re-reads every zip
+archive on the worker's ``sys.path`` (``pyspark.zip``, py4j, the spark-core
+jar): about 0.2 s per task before any row moves. The engine's daemon skips
+that re-read for the archives present at daemon start and then runs
+``pyspark.daemon`` unchanged. Workers must import the package to start it,
+so ``get_spark`` sets the conf only when the driver's cwd or a
+``PYTHONPATH`` entry holds the package's parent directory (the engine's
+UDFs need the same). A cluster deploy that ships the package on the
+executors' ``PYTHONPATH`` sets the same conf in its spark-submit config.
 """
 
 from __future__ import annotations
@@ -22,6 +34,19 @@ from pyspark.sql import SparkSession
 from .sources.tables import ensure_session_confs
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_daemon_conf() -> dict[str, str]:
+    """``spark.python.daemon.module`` = the engine's ``worker_daemon`` when
+    local Python workers can import this package (the driver's cwd or a
+    ``PYTHONPATH`` entry is its parent directory), else nothing: a daemon
+    module the workers cannot import fails every Python task."""
+    roots = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    parent = os.path.realpath(PACKAGE_PARENT)
+    if any(os.path.realpath(r or os.curdir) == parent for r in roots):
+        return {"spark.python.daemon.module": f"{__package__}.worker_daemon"}
+    return {}
 
 
 def get_spark(
@@ -60,7 +85,7 @@ def get_spark(
         # co-location contract anywhere in this engine.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**worker_daemon_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     ensure_session_confs(spark)

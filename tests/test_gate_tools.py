@@ -369,6 +369,7 @@ def test_profile_splits_one_query_by_job_group() -> None:
         "spark.shuffle_read_bytes",
         "spark.shuffle_write_bytes",
         "spark.spill_bytes",
+        "python.run_s",
     }
 
 

@@ -48,6 +48,29 @@ def test_embed_column_spark(spark):
     assert all(x == 0.0 for x in by_id[3])  # null treated as empty
 
 
+class _CountingEmbedder(HashEmbedder):
+    """Appends the worker's pid to ``log`` on every construction."""
+
+    def __init__(self, log: str, dim: int = 8):
+        import os
+
+        super().__init__(dim)
+        with open(log, "a") as f:
+            f.write(f"{os.getpid()}\n")
+
+
+def test_embed_column_builds_one_model_per_worker(spark, tmp_path):
+    """The model is cached per worker process, not rebuilt per task: three
+    1-task jobs on a reused worker construct it once."""
+    log = tmp_path / "constructions.txt"
+    df = spark.range(1).selectExpr("'spark engine' AS text").coalesce(1)
+    emb = df.select(embed_column(F.col("text"), _CountingEmbedder, log=str(log)).alias("v"))
+    for _ in range(3):
+        assert len(emb.collect()[0]["v"]) == 8
+    pids = log.read_text().split()
+    assert len(pids) == len(set(pids)), f"model rebuilt in one worker: {pids}"
+
+
 # --- E5 LLM enrichment ------------------------------------------------------
 
 def test_enrich_descriptions_gates_and_fills(spark):
@@ -189,6 +212,36 @@ def test_run_pipeline_materialization_barriers(spark):
     finally:
         STAGES.pop("count_with", None)
         STAGES.pop("count_without", None)
+
+
+def test_final_checkpoint_counts_rows_in_its_own_job(spark):
+    """When ``checkpoint`` is the last stage, ``rows_out`` comes from an
+    Observation on the checkpoint's job: two jobs fewer per input than
+    the same stages followed by a pass-through, whose ``rows_out`` needs a
+    separate count, and the same row count."""
+    sc = spark.sparkContext
+    STAGES["even_only"] = lambda df: df.where(F.col("v") % 2 == 0)
+    STAGES["pass_through"] = lambda df: df
+
+    def jobs_and_rows(stages, group):
+        src = spark.createDataFrame([(i,) for i in range(25)], ["v"])
+        sc.setJobGroup(group, group)
+        try:
+            _, report = run_pipeline({"a": src}, stages)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        report.free_barriers(spark)
+        assert report.n_success == 1, report.results
+        return len(sc.statusTracker().getJobIdsForGroup(group)), report.results[0].rows_out
+
+    try:
+        last = jobs_and_rows(["even_only", "checkpoint"], "ckpt_last")
+        counted = jobs_and_rows(["even_only", "checkpoint", "pass_through"], "ckpt_then_count")
+    finally:
+        STAGES.pop("even_only", None)
+        STAGES.pop("pass_through", None)
+    assert last[1] == counted[1] == 13
+    assert last[0] == counted[0] - 2
 
 
 def test_run_pipeline_on_error_hook(spark):

@@ -84,20 +84,13 @@ def test_zero_batch_drain_ignores_stale_snapshot(spark, tmp_path):
     keyed snapshot dir first, so the isdir fallback means 'zero batches
     THIS run' (ADVICE r5: the old fixed shared path only covered a
     never-created dir)."""
-    import os
-    import tempfile as _tf
-
     from bytesme_etl_batch_pipeline_spark.plans.queries import (
         _drain_stream_snapshot,
+        _stream_snapshot_dir,
     )
 
     tag = "stale_drain_test"
-    snap = os.path.join(
-        _tf.gettempdir(),
-        "bytesme_stream_snapshots",
-        spark.sparkContext.applicationId,
-        tag,
-    )
+    snap = _stream_snapshot_dir(tag)
     empty = spark.createDataFrame(
         [], "event_id long, ts timestamp, user_id long, "
             "event_type string, value double, props string"
@@ -115,6 +108,35 @@ def test_zero_batch_drain_ignores_stale_snapshot(spark, tmp_path):
     agg = stream_events.windowed_counts(stream)
     got = _drain_stream_snapshot(spark, agg, tag)
     assert got.count() == 0, "stale snapshot leaked into a zero-batch drain"
+
+
+def test_stream_snapshot_lives_in_the_application_files_dir(spark, tmp_path):
+    """Drain snapshots go under the driver's SparkFiles root, the
+    ``userFiles-*`` directory Spark deletes at stop, so no application
+    leaves a snapshot directory behind in the shared tempdir."""
+    from pyspark import SparkFiles
+    from pyspark.sql import functions as F
+
+    from bytesme_etl_batch_pipeline_spark.plans.queries import (
+        _drain_stream_snapshot,
+        _stream_snapshot_dir,
+    )
+
+    root = SparkFiles.getRootDirectory()
+    assert os.path.basename(root).startswith("userFiles-")
+    snap = _stream_snapshot_dir("location_test")
+    assert os.path.commonpath([root, snap]) == root
+
+    src = str(tmp_path / "events")
+    events = spark.createDataFrame(
+        [(1, "2024-01-01 00:00:05", 7, "view", 1.0, "{}")],
+        "event_id long, ts string, user_id long, event_type string, value double, props string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    events.write.parquet(src)
+    stream = spark.readStream.schema(events.schema).parquet(src)
+    got = _drain_stream_snapshot(spark, stream_events.windowed_counts(stream), "location_test")
+    assert got.count() == 1
+    assert os.path.isdir(snap)
 
 
 def test_multibatch_drain_of_ordered_directory_layout(spark, sf_dir, tmp_path):

@@ -21,7 +21,8 @@ sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 from tracing import EventLog, Tracer, install_checkpoint_wrappers, parse_event_log, spark_metrics, union_seconds  # noqa: E402
 
 SPARK_FIELDS = ("exec.s", "exec.jobs", "exec.stages", "exec.tasks", "spark.slowest_stage_s",
-                "spark.shuffle_read_bytes", "spark.shuffle_write_bytes", "spark.spill_bytes")
+                "spark.shuffle_read_bytes", "spark.shuffle_write_bytes", "spark.spill_bytes",
+                "python.run_s")
 
 
 def op_log(log: EventLog, op: str, build: tuple[float, float], end: float) -> EventLog:
