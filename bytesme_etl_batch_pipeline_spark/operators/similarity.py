@@ -10,8 +10,9 @@ The reference runs top-k L2 search inside pgvector
 * LSH ANN — random-hyperplane signatures → bucket equi-join. Candidate
   generation cost tracks bucket density, not n². The 100 TB path; recall is
   validated against brute force in tests.
-* IVF ANN — k-means-style coarse quantizer (deterministic seeded centroids) →
-  probe nearest cells only.
+* IVF ANN — a coarse quantizer (``ml.lloyd`` or fixed centroids) assigns
+  each vector to a cell (``ml.nearest_centroid_udf``) → probe the nearest
+  cells only.
 
 All floats fold in ascending index order in both engines, so oracle value
 hashes are stable; scores are rounded to 6 decimals as the cross-engine
@@ -20,14 +21,12 @@ equality contract.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.arrays import lit_doubles, lit_doubles_2d
+from ..functions.arrays import lit_doubles_2d
 from ..session import shuffle_width
-from .ml import kmeans
+from .ml import collect_sample, lloyd, nearest_cells, nearest_centroid_udf
 from .textops import md5_hash48
 
 
@@ -469,78 +468,15 @@ def ivf_assign(
     vec_col: str = "embedding",
     out_col: str = "cell",
 ) -> DataFrame:
-    """Assign each vector to its nearest centroid (coarse quantization).
+    """Assign each vector to its nearest centroid by squared L2 (coarse
+    quantization; ties on the lower cell, NULL for a corrupt vector).
     Centroids are a driver-side constant list (trained offline / sampled);
-    assignment is map-side only. At scale, write the table partitioned by
-    ``cell`` so probes prune at the scan."""
-    # Linear expression tree: one distances array + argmin. (A chained
-    # when(d < best).otherwise(best) fold embeds the running best twice per
-    # step — O(2^k) Catalyst nodes, which hangs analysis for k ≳ 20.)
-    # One transform over the 2-D centroid literal instead of k independent
-    # zip_with/aggregate chains: same per-centroid arithmetic in the same
-    # order, k× fewer higher-order-function construction round trips.
-    dists = F.transform(
-        lit_doubles_2d([[float(x) for x in c] for c in centroids]),
-        lambda c: l2_distance(F.col(vec_col), c),
-    )
-    cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-    return vectors.withColumn(out_col, cell)
-
-
-# Above this many centroids the literal-expression assign embeds a multi-MB
-# array tree in the plan (k × dim literals) and Catalyst analysis time blows
-# up — switch to the Arrow-vectorized argmin, whose plan size is O(1).
-IVF_EXPRESSION_MAX_K = 16
-
-
-def ivf_assign_pandas(
-    vectors: DataFrame,
-    centroids: list[list[float]],
-    vec_col: str = "embedding",
-    out_col: str = "cell",
-) -> DataFrame:
-    """Production-k coarse quantization: nearest-centroid assignment as an
-    Arrow-batched pandas UDF. The centroid matrix rides the closure (one
-    copy per executor, not per row or per plan node), and each batch is one
-    BLAS matmul: ``d² = |v|² - 2·V·Cᵀ + |c|²`` over (batch × k) — no n×k×dim
-    intermediate. Map-side only; at scale the output ``cell`` is the
-    partition key the corpus is written under, so probes prune at the scan.
-
-    Ties: argmin takes the first index, matching ``ivf_assign``'s
-    array_position-of-min. (The expanded-form distance can differ from the
-    direct form in the last ulp, so EXACT tie behavior across the two paths
-    is not contractual — quantizer cells are equivalent under ties.)
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-    c_sq = (C * C).sum(axis=1)
-
-    @pandas_udf("int")
-    def _assign(col: pd.Series) -> pd.Series:
-        vals = list(col)
-        # NULL vector -> NULL cell, matching the expression twin (whose
-        # NULL distances propagate); vstack over None would crash the job
-        mask = [v is not None for v in vals]
-        out = [None] * len(vals)
-        live = [np.asarray(v, dtype=np.float64) for v, m in zip(vals, mask) if m]
-        if live:
-            V = np.vstack(live)
-            # a NULL ELEMENT arrives as NaN: its d2 row is all-NaN and
-            # argmin would return index 0 — a garbage cell that silently
-            # diverges from the expression twin's NULL. NaN rows -> NULL
-            # cell, so both paths agree on junk at any quantizer size.
-            nan_rows = np.isnan(V).any(axis=1)
-            d2 = (V * V).sum(axis=1)[:, None] - 2.0 * (V @ C.T) + c_sq[None, :]
-            cells = np.argmin(np.where(nan_rows[:, None], np.inf, d2), axis=1)
-            it = iter(zip(cells, nan_rows))
-            def nxt():
-                c, nr = next(it)
-                return None if nr else int(c)
-            out = [nxt() if m else None for m in mask]
-        return pd.Series(out, dtype="Int32")
-
-    return vectors.withColumn(out_col, _assign(F.col(vec_col)))
+    assignment is map-side only, one Arrow batch at a time
+    (``ml.nearest_centroid_udf``), and the plan size does not grow with k.
+    At scale, write the table partitioned by ``cell`` so probes prune at
+    the scan."""
+    nearest = nearest_centroid_udf(centroids)
+    return vectors.withColumn(out_col, nearest(F.col(vec_col))["cell"])
 
 
 def topk_ivf(
@@ -554,24 +490,15 @@ def topk_ivf(
     query_col: str = "q",
 ) -> DataFrame:
     """IVF top-k: score only vectors in the ``n_probe`` cells nearest to the
-    query. Exact within probed cells; recall grows with n_probe. Assignment
-    runs as pure expressions for small quantizers (oracle-replayable,
-    whole-stage codegen) and switches to the Arrow argmin above
-    ``IVF_EXPRESSION_MAX_K`` centroids (plan size stays O(1) at k=256+)."""
-    if len(centroids) <= IVF_EXPRESSION_MAX_K:
-        assigned = ivf_assign(vectors, centroids, vec_col)
-    else:
-        assigned = ivf_assign_pandas(vectors, centroids, vec_col)
+    query. Exact within probed cells; recall grows with n_probe. Cells come
+    from ``ivf_assign``; the probe cells from ``ml.nearest_cells``, which
+    raises ``ValueError`` on a query whose dimension differs from the
+    centroids'."""
     qrows = query.select(query_col).collect()
     if not qrows or qrows[0][0] is None:
         raise ValueError("topk_ivf requires one row with a non-NULL query vector")
-    qrow = qrows[0][0]
-    import math
-
-    def dist(c):
-        return math.sqrt(sum((float(a) - float(b)) ** 2 for a, b in zip(qrow, c)))
-
-    probe_cells = sorted(range(len(centroids)), key=lambda i: dist(centroids[i]))[:n_probe]
+    probe_cells = nearest_cells(qrows[0][0], centroids, n_probe)
+    assigned = ivf_assign(vectors, centroids, vec_col)
     pruned = assigned.filter(F.col("cell").isin(probe_cells))
     return topk_brute_force(pruned, query, k, id_col, vec_col, query_col).drop("cell")
 
@@ -582,17 +509,17 @@ def train_ivf_centroids(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> list[list[float]]:
-    """Train the IVF coarse quantizer with the engine's own k-means
-    (``operators/ml.kmeans``) on every row of ``vectors``: its means and
-    inertia fold through DECIMAL, so the quantizer — and therefore every
-    IVF cell assignment downstream — is bit-identical on any cluster
-    layout. At 100 TB, pass a sample — quantizer quality saturates long
-    before full-data training pays off — cut by a partition-independent
-    filter (e.g. ``vec_id < 500`` or a hash of the id, never
-    ``DataFrame.sample``, which is Bernoulli per partition); then assign
-    the full corpus map-side via ``ivf_assign``."""
-    _, centroids, _ = kmeans(vectors, k=k, vec_col=vec_col, id_col=id_col, max_iter=20)
-    return centroids
+    """Train the IVF coarse quantizer: up to 20 rounds of ``ml.lloyd`` on every
+    row of ``vectors``, collected once and sorted by id, so the quantizer —
+    and therefore every IVF cell assignment downstream — is identical on
+    any cluster layout. A corrupt vector (NULL, a NULL or NaN element, a
+    wrong length) raises ``ValueError``, as in ``pq.train_pq``. At 100 TB,
+    pass a sample — quantizer quality saturates long before full-data
+    training pays off — cut by a partition-independent filter (e.g.
+    ``vec_id < 500`` or a hash of the id, never ``DataFrame.sample``, which
+    is Bernoulli per partition); then assign the full corpus map-side via
+    ``ivf_assign``."""
+    return lloyd(collect_sample(vectors, vec_col, id_col), k, max_iter=20)
 
 
 def quantize_int8(

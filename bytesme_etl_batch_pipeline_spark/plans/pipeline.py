@@ -137,6 +137,11 @@ def run_pipeline(
     last stage is ``checkpoint``, its own job counts the rows through an
     ``Observation``, so no separate count job runs.
 
+    An error message starts with where the failure surfaced: the stage
+    being applied (``stage 'name': ...``) or, for a failure that only
+    shows when the plan runs, the action (``checkpoint``, ``sink`` or
+    ``count``).
+
     ``on_error(input_name, message)`` is the injectable alert hook — the
     engine twin of the reference's Discord-webhook-on-error
     (``utils/helpers.py:11-22``): production wires a webhook/pager client,
@@ -153,11 +158,13 @@ def run_pipeline(
     for name, df in inputs.items():
         t0 = time.perf_counter()
         held: list[int] = []  # blocks pinned by this input's barriers
+        step = "input"  # where a failure surfaced, for the error message
         try:
             out = df
             counted = None  # filled by the final checkpoint's own job
             for i, sname in enumerate(stage_names):
                 if sname == "checkpoint":
+                    step = "checkpoint"
                     if sink is None and i == len(stage_names) - 1:
                         counted = Observation()
                         out = out.observe(counted, F.count(F.lit(1)).alias("rows"))
@@ -170,16 +177,19 @@ def run_pipeline(
                         free_checkpoint(out.sparkSession, held)
                     held = new_ids
                     continue
+                step = f"stage {sname!r}"
                 stage = STAGES.get(sname) or _materialize_stage(sname)
                 if stage is None:
                     raise KeyError(f"unknown stage: {sname!r}")
                 out = stage(out)
             if sink is not None:
+                step = "sink"
                 sink(name, out)
                 rows = None
             elif counted is not None:
                 rows = counted.get["rows"]
             else:
+                step = "count"
                 rows = out.count()
             outputs[name] = out
             if held:  # final barrier: the returned output reads it lazily
@@ -190,14 +200,15 @@ def run_pipeline(
         except Exception as e:  # per-input isolation — error is data, not crash
             if held:  # no output escapes this input — its blocks are dead
                 free_checkpoint(df.sparkSession, held)
+            msg = f"{step}: {e}"
             report.results.append(
                 StageResult(
-                    name, "error", stage_names, None, time.perf_counter() - t0, str(e)
+                    name, "error", stage_names, None, time.perf_counter() - t0, msg
                 )
             )
             if on_error is not None:
                 try:
-                    on_error(name, str(e))
+                    on_error(name, msg)
                 except Exception:
                     pass  # alerting must never mask the pipeline error
     return outputs, report

@@ -6427,18 +6427,18 @@ def q_kmeans_lloyd_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One exact Lloyd iteration of k-means (k=8, seeds = vec_id < 8) — the
     iterative-ML building block on top of the vector-aggregate primitive
     (``label_centroids``) and the assignment argmin IVF uses
-    (``similarity.ivf_*``). Shape: 8 centroids broadcast, squared-L2 per
+    (``ml.nearest_centroid``). Shape: 8 centroids broadcast, squared-L2 per
     (vector, centroid) as an ascending-index fold (bit-identical to the
     oracle's ``list_sum`` — same contract as the cosine queries), argmin
     via a struct-min keyed aggregate (ties break on centroid id), then the
     new centroids are decimal-exact per-(cluster, dim) means. Two keyed
     shuffles total; at any scale the per-round cost is k·n map-side work +
-    those two exchanges — the canonical distributed k-means step. A full
-    trainer loops this via ``localCheckpoint`` exactly like
-    ``graph.connected_components_star``."""
+    those two exchanges — the canonical distributed k-means step. The
+    engine's full trainer is ``similarity.train_ivf_centroids``, which runs
+    Lloyd rounds driver-side on one collected sample (``ml.lloyd``)."""
     em0 = load_table(spark, sf_dir, "embeddings").filter(
-        # trainer contract (operators/ml.kmeans): corrupt vectors — NULL, or
-        # containing a NULL element — are excluded from the step
+        # the step's contract (the oracle's live0 CTE): corrupt vectors —
+        # NULL, or containing a NULL element — are excluded from the step
         F.col("embedding").isNotNull()
         & ~F.exists(F.col("embedding"), lambda x: x.isNull())
     )

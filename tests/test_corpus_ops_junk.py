@@ -282,12 +282,11 @@ def test_rows_only_doc_queries_survive_junk(spark, junk_sf_dir):
 
 
 def test_embeddings_junk_pq_queries_fail_loudly(spark, junk_emb_dir):
-    """The PQ trainer's documented contract is the opposite of kmeans's:
-    it REFUSES corrupt training vectors with a clear error (pq.py) rather
-    than silently excluding them — a codebook trained on a silently
-    shrunken sample would degrade recall with no signal. The rows-only PQ
-    catalog queries must surface that error on junk, not hang or
-    mis-train."""
+    """The trainers (``ml.collect_sample``, used by PQ, IVF-PQ and IVF)
+    REFUSE corrupt training vectors with a clear error rather than
+    silently excluding them — a codebook trained on a silently shrunken
+    sample would degrade recall with no signal. The rows-only PQ catalog
+    queries must surface that error on junk, not hang or mis-train."""
     for name in ["pq_adc_search", "ivfpq_topk"]:
         with pytest.raises(ValueError, match="NULL vectors"):
             catalog.SPARK_QUERIES[name](spark, junk_emb_dir).count()

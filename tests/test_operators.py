@@ -268,6 +268,33 @@ def test_run_pipeline_on_error_hook(spark):
     assert report2.n_error == 1  # alerting failure swallowed, error recorded
 
 
+def test_run_pipeline_error_names_the_stage(spark):
+    """An error message starts with the stage being applied, or with the
+    action (checkpoint / count) when the failure only surfaced once the
+    plan ran — the record and the alert hook carry the same message."""
+    @register_stage("select_missing")
+    def select_missing(df):
+        return df.select("no_such_column")
+
+    @register_stage("fail_at_run")
+    def fail_at_run(df):
+        return df.filter(F.raise_error(F.lit("bad row")).isNull())
+
+    ok = spark.createDataFrame([(1,)], ["v"])
+    alerts = []
+    _, report = run_pipeline(
+        {"x": ok}, ["select_missing"], on_error=lambda n, m: alerts.append((n, m))
+    )
+    err = report.results[0].error
+    assert err.startswith("stage 'select_missing': ") and "no_such_column" in err
+    assert alerts == [("x", err)]
+
+    _, report = run_pipeline({"x": ok}, ["fail_at_run"])
+    assert report.results[0].error.startswith("count: ")
+    _, report = run_pipeline({"x": ok}, ["fail_at_run", "checkpoint"])
+    assert report.results[0].error.startswith("checkpoint: ")
+
+
 # --- near-dup semantics on planted duplicates --------------------------------
 
 def test_minhash_lsh_finds_planted_neardups(spark):
@@ -1086,30 +1113,6 @@ def test_resize_images_dead_letters_null_rows(spark):
     )
     got = resize_images(media, 8, 8).collect()
     assert [r["media_id"] for r in got] == [1]
-
-
-def test_ivf_assign_pandas_null_element_matches_expression_twin(spark):
-    """A NULL vector ELEMENT arrives in the Arrow path as NaN; argmin over
-    an all-NaN distance row would return cell 0 — a garbage assignment
-    that silently diverges from the expression twin's NULL cell whenever
-    the quantizer crosses IVF_EXPRESSION_MAX_K. Both paths must agree."""
-    from bytesme_etl_batch_pipeline_spark.operators.similarity import (
-        ivf_assign,
-        ivf_assign_pandas,
-    )
-
-    vecs = spark.createDataFrame(
-        [(1, [0.1, 0.2]), (2, [0.1, None]), (3, None), (4, [5.0, 5.0])],
-        "vec_id long, embedding array<double>",
-    )
-    cents = [[0.0, 0.0], [5.0, 5.0]]
-    expr_cells = {
-        r["vec_id"]: r["cell"] for r in ivf_assign(vecs, cents).collect()
-    }
-    arrow_cells = {
-        r["vec_id"]: r["cell"] for r in ivf_assign_pandas(vecs, cents).collect()
-    }
-    assert expr_cells == arrow_cells == {1: 0, 2: None, 3: None, 4: 1}
 
 
 def test_salted_count_handles_unhashable_columns(spark):

@@ -234,43 +234,41 @@ def test_pq_null_vectors_do_not_poison_topk(spark):
     assert all(r["adc_dist"] is not None for r in top)
 
 
-def test_ivfpq_arrow_assign_residual_matches_expression_path(spark):
-    """Past IVF_EXPRESSION_MAX_K coarse cells the index build must switch
-    to the Arrow assign+residual path and produce the same encoded index
-    as the literal-expression path computes for the same centroids."""
+def test_ivfpq_encode_matches_numpy_kernel(spark):
+    """The one-UDF index build equals the driver-side kernel: nearest
+    coarse cell, then per subspace the nearest codeword to the residual
+    (vector − cell centroid), at a coarse table of 18 cells."""
     import numpy as np
 
+    from bytesme_etl_batch_pipeline_spark.operators.ml import nearest_centroid
     from bytesme_etl_batch_pipeline_spark.operators.pq import (
-        _assign_and_residual_pandas,
-        _residual,
         ivfpq_encode,
         train_ivfpq,
-    )
-    from bytesme_etl_batch_pipeline_spark.operators.similarity import (
-        IVF_EXPRESSION_MAX_K,
-        ivf_assign,
     )
 
     rng = np.random.default_rng(7)
     rows = [(i, [float(x) for x in rng.normal(size=8)]) for i in range(120)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    k_big = IVF_EXPRESSION_MAX_K + 2
-    coarse, books = train_ivfpq(vecs, k_coarse=k_big, m=2, k_pq=4, max_iter=3)
-    encoded = ivfpq_encode(vecs, coarse, books)
-    assert len(coarse) == k_big
-    assert encoded.count() == 120
+    coarse, books = train_ivfpq(vecs, k_coarse=18, m=2, k_pq=4, max_iter=3)
+    enc = ivfpq_encode(vecs, coarse, books)
+    got = {r["vec_id"]: (r["cell"], list(r["codes"])) for r in enc.collect()}
+    assert len(coarse) == 18 and len(got) == 120
 
-    # arrow twin == expression twin on identical centroids
-    arrow = _assign_and_residual_pandas(vecs, coarse, "embedding")
-    expr = ivf_assign(vecs, coarse, "embedding").withColumn(
-        "__res", _residual("embedding", coarse)
+    # array<float> round-trips through float32, as the UDF sees it
+    X = np.asarray([v for _, v in rows], dtype=np.float32).astype(np.float64)
+    C = np.asarray(coarse)
+    cells, _ = nearest_centroid(X, C)
+    R = X - C[cells]
+    codes = np.stack(
+        [
+            nearest_centroid(R[:, 4 * j : 4 * j + 4], np.asarray(b))[0]
+            for j, b in enumerate(books)
+        ],
+        axis=1,
     )
-    a = {r["vec_id"]: (r["cell"], [round(x, 9) for x in r["__res"]])
-         for r in arrow.collect()}
-    e = {r["vec_id"]: (r["cell"], [round(x, 9) for x in r["__res"]])
-         for r in expr.collect()}
-    assert a == e
+    want = {i: (int(c), [int(x) for x in cs]) for (i, _), c, cs in zip(rows, cells, codes)}
+    assert got == want
 
 
 def test_pq_train_empty_input_raises_clearly(spark):
@@ -284,11 +282,9 @@ def test_pq_train_empty_input_raises_clearly(spark):
 def test_pq_null_element_vectors_rejected_or_nulled(spark):
     """A vector with a NULL ELEMENT is as corrupt as a whole-NULL vector
     (the junk_emb_dir fixture shape): training must raise instead of
-    NaN-poisoning the codebooks; the expression encode must map it to NULL
-    codes (filtered by search like whole-NULL rows); the strict Arrow
-    paths must raise."""
+    NaN-poisoning the codebooks; the encode must map it to NULL codes
+    (filtered by search like whole-NULL rows)."""
     from bytesme_etl_batch_pipeline_spark.operators.pq import (
-        _pq_encode_pandas,
         pq_adc_topk,
         pq_encode,
         train_pq,
@@ -306,7 +302,7 @@ def test_pq_null_element_vectors_rejected_or_nulled(spark):
 
     books = train_pq(vecs.filter("vec_id < 100"), m=2, k=4)
 
-    # expression encode: NULL codes, and search never surfaces the row
+    # encode: NULL codes, and search never surfaces the row
     enc = pq_encode(vecs, books)
     assert (
         enc.filter("vec_id = 101").first()["codes"] is None
@@ -314,24 +310,28 @@ def test_pq_null_element_vectors_rejected_or_nulled(spark):
     top = pq_adc_topk(enc, [0.0] * 8, books, k=5).collect()
     assert all(r["vec_id"] < 100 for r in top)
 
-    # strict Arrow encode path: raises on the NaN-bearing batch
-    with pytest.raises(Exception, match="NULL/NaN"):
-        _pq_encode_pandas(vecs, books).collect()
 
-
-def test_ivfpq_arrow_assign_rejects_null_elements(spark):
-    """The Arrow coarse-assign path must raise on NULL/NaN elements — NaN
-    distances would argmin to an arbitrary cell and the row would silently
-    index under a garbage residual."""
+def test_ivfpq_encode_nulls_corrupt_vectors(spark):
+    """A NULL vector, a NULL element (NaN in the Arrow batch) or a wrong
+    length gets NULL cell and codes — never an argmin over NaN distances,
+    which would index the row in an arbitrary cell — and the search never
+    returns it."""
     from bytesme_etl_batch_pipeline_spark.operators.pq import (
-        _assign_and_residual_pandas,
+        ivfpq_encode,
+        ivfpq_search,
+        train_ivfpq,
     )
 
-    vecs = spark.createDataFrame(
-        [(1, [0.0, None, 2.0, 3.0])], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(Exception, match="NULL/NaN"):
-        _assign_and_residual_pandas(vecs, [[0.0] * 4, [1.0] * 4], "embedding").collect()
+    good = [(i, [float(i + j) for j in range(4)]) for i in range(10)]
+    junk = [(100, [0.0, None, 2.0, 3.0]), (101, None), (102, [1.0, 2.0])]
+    vecs = spark.createDataFrame(good + junk, "vec_id long, embedding array<double>")
+    coarse, books = train_ivfpq(vecs.filter("vec_id < 100"), k_coarse=2, m=2, k_pq=2)
+    enc = ivfpq_encode(vecs, coarse, books)
+    got = {r["vec_id"]: (r["cell"], r["codes"]) for r in enc.collect()}
+    assert all(got[i] == (None, None) for i in (100, 101, 102))
+    assert all(got[i][0] is not None and len(got[i][1]) == 2 for i in range(10))
+    hits = ivfpq_search(vecs, enc, [0.0] * 4, coarse, books, k=20, n_probe=2)
+    assert {r["vec_id"] for r in hits.collect()} <= set(range(10))
 
 
 def test_pq_encode_wrong_length_vector_gets_null_codes(spark):
@@ -356,3 +356,15 @@ def test_pq_encode_wrong_length_vector_gets_null_codes(spark):
     assert enc.filter("vec_id = 103").first()["codes"] is None
     top = pq_adc_topk(enc, [0.0] * 8, books, k=5).collect()
     assert all(r["vec_id"] < 100 for r in top)
+
+
+def test_searches_run_the_encode_udf_once(spark, sf_dir):
+    """The searches' cell and NULL-distance filters must not copy the
+    encode UDF below its projection: a copied call runs every Arrow batch
+    through the kernel once more."""
+    from bytesme_etl_batch_pipeline_spark.plans import queries as catalog
+
+    for name in ("pq_adc_search", "ivfpq_topk"):
+        df = catalog.SPARK_QUERIES[name](spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("ArrowEvalPython") == 1, name
