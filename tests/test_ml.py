@@ -18,7 +18,10 @@ from bytesme_etl_batch_pipeline_spark.operators.ml import (
     nearest_centroid,
     nearest_centroid_udf,
 )
-from bytesme_etl_batch_pipeline_spark.operators.similarity import train_ivf_centroids
+from bytesme_etl_batch_pipeline_spark.operators.similarity import (
+    ivf_assign,
+    train_ivf_centroids,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -179,15 +182,51 @@ def test_exact_trained_ivf_recall(spark, emb):
     assert recall >= 0.5, f"recall@10 with n_probe=2: {recall}"
 
 
-def test_train_ivf_centroids_rejects_corrupt_rows(spark):
-    """Like ``pq.train_pq``, the IVF trainer refuses corrupt training
-    vectors — a NULL vector, a NULL or NaN element, a wrong length — with a
-    ValueError instead of training on a silently shrunken sample."""
-    clean = [(2, [0.0, 0.0]), (3, [0.2, 0.0]), (4, [10.0, 10.0]), (5, [10.2, 10.0])]
-    schema = "vec_id long, embedding array<double>"
-    cents = train_ivf_centroids(spark.createDataFrame(clean, schema), k=2)
-    assert sorted([round(x, 6) for x in c] for c in cents) == [[0.1, 0.0], [10.1, 10.0]]
-    for bad in ([1.0, None], None, [1.0], [1.0, 2.0, 3.0], [float("nan"), 1.0]):
-        df = spark.createDataFrame(clean + [(90, bad)], schema)
+def _cells(df, cents):
+    return {r["vec_id"]: r["cell"] for r in ivf_assign(df, cents).collect()}
+
+
+def test_kmeans_excludes_null_vectors_and_elements(spark):
+    """NULL vectors and NULL / NaN elements are kept out of k-means: the
+    trainer refuses them with a ValueError (like ``pq.train_pq``) instead of
+    training on a silently shrunken sample, and assignment gives them no
+    cell — a NULL element arrives in the Arrow batch as NaN, whose all-NaN
+    distance row would otherwise argmin to cell 0."""
+    rows = [
+        (0, None),            # NULL vector among the lowest ids
+        (1, [1.0, None]),     # NULL element
+        (2, [0.0, 0.0]),
+        (3, [0.2, 0.0]),
+        (4, [10.0, 10.0]),
+        (5, [10.2, 10.0]),
+        (6, [float("nan"), 1.0]),  # NaN element
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError):
+        train_ivf_centroids(df, k=2)
+    for bad in (0, 1, 6):
         with pytest.raises(ValueError):
-            train_ivf_centroids(df, k=2)
+            train_ivf_centroids(df.filter(F.col("vec_id").isin(bad, 2, 3, 4, 5)), k=2)
+    cents = train_ivf_centroids(df.filter(F.col("vec_id").between(2, 5)), k=2)
+    assert sorted([round(x, 6) for x in c] for c in cents) == [[0.1, 0.0], [10.1, 10.0]]
+    cells = _cells(df, cents)
+    assert {i for i, c in cells.items() if c is not None} == {2, 3, 4, 5}
+    assert cells[2] == cells[3] != cells[4] == cells[5]
+
+
+def test_kmeans_excludes_ragged_vectors(spark):
+    """Wrong-length vectors are corrupt like NULL-element ones: the trainer
+    refuses them with a ValueError, and assignment gives them no cell
+    rather than folding a shorter or longer vector into a distance."""
+    clean = [(i, [float(i), float(i)]) for i in range(6)]
+    corrupt = [(90, [1.0]), (91, [1.0, 2.0, 3.0]), (92, None), (93, [1.0, None])]
+    schema = "vec_id long, embedding array<double>"
+    for bad in corrupt:
+        with pytest.raises(ValueError):
+            train_ivf_centroids(spark.createDataFrame(clean + [bad], schema), k=2)
+    cents = train_ivf_centroids(spark.createDataFrame(clean, schema), k=2)
+    assert len(cents) == 2 and all(len(c) == 2 for c in cents)
+    cells = _cells(spark.createDataFrame(clean + corrupt, schema), cents)
+    assert set(cells) == set(range(6)) | {90, 91, 92, 93}
+    assert all(cells[i] in (0, 1) for i in range(6))
+    assert all(cells[i] is None for i in (90, 91, 92, 93))

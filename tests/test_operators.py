@@ -1115,6 +1115,48 @@ def test_resize_images_dead_letters_null_rows(spark):
     assert [r["media_id"] for r in got] == [1]
 
 
+def test_ivf_assign_pandas_null_element_matches_expression_twin(spark):
+    """A NULL vector ELEMENT arrives in the Arrow path (``ivf_assign``) as
+    NaN; argmin over an all-NaN distance row would return cell 0 — a
+    garbage assignment that silently diverges from the Spark expression
+    fold, which gates the corrupt vector to a NULL cell. Both must agree."""
+    from bytesme_etl_batch_pipeline_spark.functions.arrays import lit_doubles
+    from bytesme_etl_batch_pipeline_spark.operators.similarity import ivf_assign
+
+    vecs = spark.createDataFrame(
+        [(1, [0.1, 0.2]), (2, [0.1, None]), (3, None), (4, [5.0, 5.0])],
+        "vec_id long, embedding array<double>",
+    )
+    cents = [[0.0, 0.0], [5.0, 5.0]]
+    v = F.col("embedding")
+    pairs = F.array(
+        *[
+            F.struct(
+                F.aggregate(
+                    F.zip_with(v, lit_doubles(c), lambda x, y: (x - y) * (x - y)),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ).alias("d"),
+                F.lit(i).alias("i"),
+            )
+            for i, c in enumerate(cents)
+        ]
+    )
+    corrupt = F.coalesce(F.exists(v, lambda x: x.isNull()), F.lit(True)) | (
+        F.size(v) != len(cents[0])
+    )
+    expr_cells = {
+        r["vec_id"]: r["cell"]
+        for r in vecs.select(
+            "vec_id", F.when(~corrupt, F.array_min(pairs)["i"]).alias("cell")
+        ).collect()
+    }
+    arrow_cells = {
+        r["vec_id"]: r["cell"] for r in ivf_assign(vecs, cents).collect()
+    }
+    assert expr_cells == arrow_cells == {1: 0, 2: None, 3: None, 4: 1}
+
+
 def test_salted_count_handles_unhashable_columns(spark):
     """The salt derives from monotonically_increasing_id alone — hashing
     the content columns added nothing (the id is unique per row) and threw
