@@ -1,21 +1,29 @@
-"""Tracked localCheckpoint for iterative loops.
+"""Materialization: the one place the engine pins an intermediate result.
 
-``DataFrame.localCheckpoint(eager=True)`` pins its materialized blocks at
-the RDD level — NOT in the SQL CacheManager — so ``DataFrame.unpersist()``
-on the result is a silent no-op (verified on PySpark 4.1.2: the persistent
-RDD survives). An iterative loop that checkpoints every few rounds
-therefore accumulates one dictionary/label-table-sized block set per
-checkpoint for the life of the app unless it frees them at the RDD level.
+The engine stores nothing between pipeline stages or query branches unless
+a site asks for it here. ``materialize(df)`` is that request, and its
+contract is the same for every caller:
 
-These helpers diff ``sc.getPersistentRDDs()`` around the checkpoint to
-learn which RDD ids it pinned, and free superseded ones explicitly.
+* **executor-local.** The rows are stored as blocks on the executors that
+  computed them (``DataFrame.localCheckpoint``), not on reliable storage.
+  A lost executor loses its blocks and the consuming job fails; nothing
+  recomputes them.
+* **no lineage.** The returned frame's plan is a scan of those blocks
+  (a ``LogicalRDD``), so each consumer reads the rows instead of replaying
+  the producing plan, and an iterative loop's plan stops growing.
+* **AQE applies.** The producing plan runs as an ordinary adaptive query:
+  on Spark 4.1.2 a 4-partition ``groupBy`` under 64 shuffle partitions
+  comes back with 1 partition, as it does under ``cache()``.
+* **pinned until released or garbage-collected.** ``DataFrame.unpersist``
+  does nothing to these blocks (they are an RDD's, not a CacheManager
+  entry). ``release(df)`` frees them; otherwise Spark's ContextCleaner
+  frees them once the JVM drops the last reference to the frame. The
+  blocks are the only copy of the rows: release a frame only when nothing
+  will read it, or anything derived from it, again.
 
-SAFETY: freeing a local checkpoint's blocks destroys the ONLY copy of that
-data (lineage was truncated) — only free a checkpoint that is fully
-superseded, i.e. after the NEXT eager checkpoint has materialized and the
-old DataFrame will never be touched again. The id diff assumes no
-concurrent checkpointing in the same SparkContext (true for the engine's
-single-threaded iterative loops).
+``eager=True`` (the default) runs the job now. ``eager=False`` defers the
+rows to the first job that reads the frame, which stores them as it goes;
+under AQE the plan's shuffle stages still run when the frame is built.
 """
 
 from __future__ import annotations
@@ -23,23 +31,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, list[int]]:
-    """Eager localCheckpoint returning ``(checkpointed_df, new_rdd_ids)`` —
-    the ids of the persistent RDDs the checkpoint pinned, for a later
-    ``free_checkpoint``."""
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint(eager=True)
-    after = sc._jsc.getPersistentRDDs().keySet().toArray()
-    return out, [int(i) for i in after if i not in before]
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df``'s rows pinned as executor-local blocks; see the module
+    docstring for the contract."""
+    return df.localCheckpoint(eager=eager)
 
 
-def free_checkpoint(df_or_session, ids: list[int]) -> None:
-    """Release the blocks a superseded ``tracked_local_checkpoint`` pinned.
-    Missing ids (already collected by the ContextCleaner) are skipped."""
-    spark = getattr(df_or_session, "sparkSession", df_or_session)
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for i in ids:
-        rdd = jmap.get(i)
-        if rdd is not None:
-            rdd.unpersist(False)
+def release(df: DataFrame) -> None:
+    """Free the blocks that ``df``'s own ``materialize`` pinned, and no
+    others. ``df`` must be the frame ``materialize`` returned: its plan is
+    the ``LogicalRDD`` whose RDD holds the blocks."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        raise ValueError("release() takes a frame returned by materialize()")
+    plan.rdd().unpersist(False)
+
+
+# The benchmark's tracer (perfbench/tracing.py) wraps this name.
+tracked_local_checkpoint = materialize

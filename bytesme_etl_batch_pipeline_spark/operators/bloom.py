@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..ckpt import materialize, release
+
 
 @dataclass
 class BloomFilter:
@@ -206,44 +208,31 @@ def bloom_decontaminate(
     the exact join. Returns distinct contaminated ``doc_id``s. Identical
     output to the filter-less join; the filter bounds the exact join's input
     to |true hits| + fpp·|corpus grams|."""
-    # The eval gram set is consumed twice (filter build, verification join)
-    # — cache it so the explode+distinct shuffle runs once. It is
-    # benchmark-sized by assumption, exactly what executor storage memory is
-    # for; at 100 TB you'd persist it to disk-backed storage the same way.
-    # If the CALLER already cached it (reuse across several decontamination
-    # calls), leave their persistence level untouched: cache() here would be
-    # a no-op and the unpersist below would silently evict their entry,
-    # forcing a recompute on their next use (ADVICE r4).
-    owns_cache = not eval_grams.is_cached
-    if owns_cache:
-        eval_grams = eval_grams.cache()
-    # Sizing: an upstream ESTIMATE is enough — oversizing only widens the
-    # bitset (still KBs/MBs), undersizing only raises fpp, never correctness
-    # (the exact join sheds every false positive). Passing one avoids a
-    # dedicated count job over the exploded gram set.
-    n_eval = expected_items if expected_items is not None else eval_grams.count()
-    bloom = build_bloom(eval_grams, gram_col, expected_items=n_eval, fpp=fpp)
-    candidates = corpus_grams.filter(
-        bloom_might_contain(corpus_grams, bloom, gram_col)
-    )
-    out = (
-        # exact verification sheds false positives. LEFT SEMI (r11): the
-        # join only decides membership, so no eval columns are carried and
-        # — crucially — the eval side needs NO distinct: duplicate grams
-        # can't duplicate a semi-join match, which lets callers skip a
-        # whole dedup shuffle of the eval gram set (guide §2.4).
-        candidates.join(eval_grams.select(gram_col), gram_col, "left_semi")
-        .select("doc_id")
-        .distinct()
-        .cache()
-    )
-    # Materialize the (contaminated-id-sized, tiny) result eagerly so the
-    # benchmark-sized gram cache can be RELEASED here instead of pinning
-    # executor storage for the session lifetime — repeated calls would
-    # otherwise accumulate one gram set each. Only the cache THIS call
-    # created is released. The returned frame is cached; callers holding
-    # it long-term may .unpersist() when done.
-    out.count()
-    if owns_cache:
-        eval_grams.unpersist()
-    return out
+    # The eval gram set is consumed twice (filter build, verification
+    # join), so it is materialized once and released before return: repeated
+    # calls must not accumulate one benchmark-sized gram set each. A caller's
+    # own cache of ``eval_grams`` is left as it is.
+    eval_grams = materialize(eval_grams)
+    try:
+        # Sizing: an upstream ESTIMATE is enough — oversizing only widens the
+        # bitset (still KBs/MBs), undersizing only raises fpp, never correctness
+        # (the exact join sheds every false positive). Passing one avoids a
+        # dedicated count job over the exploded gram set.
+        n_eval = expected_items if expected_items is not None else eval_grams.count()
+        bloom = build_bloom(eval_grams, gram_col, expected_items=n_eval, fpp=fpp)
+        candidates = corpus_grams.filter(
+            bloom_might_contain(corpus_grams, bloom, gram_col)
+        )
+        # exact verification sheds false positives. LEFT SEMI (r11): the join
+        # only decides membership, so no eval columns are carried and the eval
+        # side needs NO distinct: duplicate grams can't duplicate a semi-join
+        # match, which lets callers skip a whole dedup shuffle of the eval gram
+        # set (guide §2.4). The (contaminated-id-sized) result is materialized
+        # so the gram set can be released; the caller may ``ckpt.release`` it.
+        return materialize(
+            candidates.join(eval_grams.select(gram_col), gram_col, "left_semi")
+            .select("doc_id")
+            .distinct()
+        )
+    finally:
+        release(eval_grams)

@@ -17,9 +17,11 @@ Loop mechanics that matter (measured at sf0.1):
 * the edge input is cached ONCE before the loop — otherwise every round
   re-executes the upstream pipeline that produced the edges (for near-dup
   input that is the whole MinHash-LSH cascade);
-* intermediates are cache()d, not localCheckpoint()ed — the checkpoint path
-  executes the plan without AQE, so every tiny per-round shuffle fans out
-  to the full spark.sql.shuffle.partitions instead of coalescing;
+* a round's labels are cache()d, not materialized: the round's convergence
+  aggregate fills the lazy cache in its own job, where ``ckpt.materialize``
+  would run one more job per round first (``neardup_clusters`` converges
+  in one round at sf0.01 and sf0.1: 14 jobs against 15), and ``unpersist``
+  frees the superseded round;
 * convergence is detected from the monotone label sum (labels only ever
   decrease), one scalar agg per round instead of a diff join;
 * lineage grows by one join per round and is bounded by ``max_iter``; for
@@ -32,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..ckpt import materialize, release
 
 
 class ConvergenceError(RuntimeError):
@@ -145,7 +149,7 @@ def connected_components(
             labels = new_labels
             if converged:
                 # break lineage through the cached chain before unpersisting
-                final = labels.localCheckpoint(eager=True)
+                final = materialize(labels)
                 return final.select("node", F.col("label").alias("cluster_id"))
         raise ConvergenceError(
             f"connected_components did not converge in {max_iter} rounds — "
@@ -254,25 +258,19 @@ def connected_components_star(
         ).collect()[0]
         return (row["c"], row["x"])
 
-    from ..ckpt import free_checkpoint, tracked_local_checkpoint
-
     cur, cur_sig = b, sig(b)
-    held_ids: list[int] = []
     converged = False
     try:
         for _ in range(max_iter):
             # Each star references its input several times (sym union + the
-            # min join), so lineage grows MULTIPLICATIVELY per round —
-            # localCheckpoint truncates it to the materialized RDD, which
-            # cache() cannot (cached plans keep their full logical tree and
-            # round ~7 explodes Spark's plan bookkeeping). Superseded
-            # rounds free their blocks at the RDD level (ckpt.py —
-            # DataFrame.unpersist is a no-op for localCheckpoint and would
-            # leak one edge-table copy per round); the FINAL round's
-            # blocks stay: the returned DataFrame reads them lazily.
-            nxt, new_ids = tracked_local_checkpoint(_small_star(_large_star(cur)))
-            free_checkpoint(nxt, held_ids)
-            held_ids = new_ids
+            # min join), so lineage grows MULTIPLICATIVELY per round;
+            # materializing each round cuts it, which cache() cannot (cached
+            # plans keep their full logical tree and round ~7 explodes
+            # Spark's plan bookkeeping). The superseded round is released;
+            # the returned DataFrame reads the final one.
+            nxt = materialize(_small_star(_large_star(cur)))
+            if cur is not b:
+                release(cur)
             cur = nxt
             new_sig = sig(cur)
             if new_sig == cur_sig:
@@ -288,10 +286,8 @@ def connected_components_star(
         )
     finally:
         b.unpersist()
-        if not converged and held_ids:
+        if not converged and cur is not b:
             # no DataFrame escapes on the error path (ConvergenceError or a
-            # mid-round failure) — the last round's checkpoint blocks would
-            # otherwise stay pinned for the SparkContext lifetime, one
-            # edge-table copy per failed attempt (a caller may catch
-            # ConvergenceError and keep the session running).
-            free_checkpoint(b.sparkSession, held_ids)
+            # mid-round failure), and a caller may catch ConvergenceError
+            # and keep the session running
+            release(cur)

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..ckpt import materialize
 from .textops import md5_hash48, words
 
 
@@ -98,7 +99,7 @@ def blocked_shingle_commons(
     shape evaluates it once per join side plus once for the sizes — three
     corpus passes. Instead the exploded rows are reduced to
     (id, block, xxhash64(shingle)) — longs plus the small block key — and
-    eagerly ``localCheckpoint``ed ONCE (guide §8: decide with small rows;
+    materialized ONCE (guide §8: decide with small rows;
     §2.4: multi-consumer subtrees): the self-join probes the checkpoint on
     the 8-byte hash instead of re-deriving and shuffling shingle STRINGS,
     and sizes fall out of the same rows as a count per id (shingles are
@@ -112,14 +113,13 @@ def blocked_shingle_commons(
     the string-join formulation in tests and by the unchanged DuckDB
     oracles at every gated SF.
     """
-    cp = (
+    cp = materialize(
         _shingle_rows(df, id_col, text_col, n, extra=[block_col])
         .select(
             F.col(id_col),
             F.col(block_col),
             F.xxhash64("__shingle").alias("__sh"),
         )
-        .localCheckpoint(eager=True)
     )
     sizes = cp.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
     a = cp.select(

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..ckpt import materialize
 from ..functions.seeded import hash_uniform
 
 
@@ -235,13 +236,12 @@ def dsir_resample(
     # operator's dominant cost) once per consumer. The artifact is exactly
     # ``n_buckets`` rows, so the eager checkpoint is free at any corpus
     # size and the token stream is scanned once to build it.
-    per_bucket = (
+    per_bucket = materialize(
         tok.groupBy("bucket")
         .agg(
             F.count(F.lit(1)).alias("cnt_raw"),
             F.sum(F.when(F.col("__is_tgt"), 1).otherwise(0)).alias("cnt_tgt"),
         )
-        .localCheckpoint(eager=True)
     )
     totals = per_bucket.agg(
         F.sum("cnt_raw").alias("tot_raw"), F.sum("cnt_tgt").alias("tot_tgt")

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..ckpt import materialize
 from ..functions.arrays import lit_doubles_2d
 from ..session import shuffle_width
 from .ml import collect_sample, lloyd, nearest_cells, nearest_centroid_udf
@@ -289,9 +290,9 @@ def lsh_band_window_pairs(
             for b in range(n_bands)
         ]
     )
-    exploded = base.select(
-        "__id", F.posexplode(bands).alias("__band", "__bval")
-    ).localCheckpoint(eager=True)
+    exploded = materialize(
+        base.select("__id", F.posexplode(bands).alias("__band", "__bval"))
+    )
     # ^ eager: repartitionByRange runs a SAMPLING job over its child to
     # pick range boundaries, then the real exchange computes the child
     # AGAIN — without materialization the n_planes interpreted hyperplane
@@ -306,7 +307,7 @@ def lsh_band_window_pairs(
     # Range partitioning on (band, bval, id) makes global order == (chunk,
     # local rank) order and keeps every bucket's rows contiguous across
     # chunk boundaries — the two facts the boundary pass's exactness proof
-    # rests on. localCheckpoint (lazy) pins the sampled range boundaries /
+    # rests on. The lazy materialization pins the sampled range boundaries /
     # partition ids and computes the signature map exactly once even
     # though two passes consume it. ids only through the windows (the
     # vectors re-join below) — leading the embedding arrays themselves
@@ -328,13 +329,13 @@ def lsh_band_window_pairs(
             for i in range(1, window + 1)
         ]
     )
-    marked = (
+    marked = materialize(
         exploded.repartitionByRange(num_chunks, "__band", "__bval", "__id")
         .withColumn("__pid", F.spark_partition_id())
         .withColumn("__rn", F.row_number().over(w_loc))
         .withColumn("__sz", F.count(F.lit(1)).over(w_cnt))
-        .withColumn("__nb", nb)
-        .localCheckpoint(eager=False)
+        .withColumn("__nb", nb),
+        eager=False,
     )
     # Pass 1 (bulk, num_chunks-way parallel): interior rows — all
     # ``window`` leads live in the same chunk; a lead that crossed into

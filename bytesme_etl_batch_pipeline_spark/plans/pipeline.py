@@ -6,8 +6,8 @@ per-file try/except and a success/error summary
 shape: a declarative spec — ordered named stages, each a pure
 ``DataFrame -> DataFrame`` — composed into ONE lazy DAG per input (Catalyst
 sees the whole plan; nothing materializes between stages unless the config
-says so via the built-in ``persist``/``checkpoint`` barrier stages), with
-per-input isolation and a job report.
+says so with the built-in ``checkpoint`` barrier stage), with per-input
+isolation and a job report.
 
 Unlike the reference (module-level mutable state, mid-pipeline staging-dir
 read — SURVEY §2.15 hazards), stages are pure and the DAG is explicit.
@@ -21,52 +21,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
+from ..ckpt import materialize, release
+
 Stage = Callable[[DataFrame], DataFrame]
 
 # Named stage registry — the engine twin of the reference's string-dispatched
 # transform names (``scripts/pipeline.py:52-83``).
 STAGES: dict[str, Stage] = {}
-
-
-def _materialize_stage(spec: str) -> Stage | None:
-    """Built-in materialization barriers, usable by name in any stage list.
-
-    The stages themselves compose into ONE lazy DAG, which is right until a
-    stage's output feeds multiple downstream scans (the dedup family
-    re-reads its corpus 3-5×) — then the pipeline AUTHOR owns the
-    CPU-vs-storage tradeoff, declared in config rather than baked into
-    operators:
-
-    * ``persist`` / ``persist:memory`` / ``persist:disk`` — lazy
-      ``.persist`` at the matching StorageLevel; the first action
-      populates the cache, later branches reuse it. Spark evicts under
-      pressure and ContextCleaner frees it when the frame is dropped.
-    * ``checkpoint`` — eager ``localCheckpoint``: materializes NOW and
-      truncates lineage, the right barrier before iterative consumers
-      (CC loops) or when a long plan would otherwise replay per branch.
-      NB: ``localCheckpoint`` pins blocks at the RDD level for the life
-      of the SparkContext (``DataFrame.unpersist`` is a no-op on it —
-      ``ckpt.py``), so the runner tracks the pinned ids itself: a later
-      ``checkpoint`` stage in the same input's chain frees the superseded
-      one, the error path frees everything, and the FINAL checkpoint per
-      input (which the returned output reads lazily) is recorded in
-      ``PipelineReport.pinned_rdd_ids`` for ``report.free_barriers(spark)``
-      once the caller is done with the outputs. A long-lived session
-      re-running the pipeline must call it or leak one table-sized block
-      set per run.
-    """
-    from pyspark import StorageLevel
-
-    levels = {
-        "persist": StorageLevel.MEMORY_AND_DISK,
-        "persist:memory": StorageLevel.MEMORY_ONLY,
-        "persist:disk": StorageLevel.DISK_ONLY,
-    }
-    if spec in levels:
-        return lambda df: df.persist(levels[spec])
-    # "checkpoint" is handled inline by run_pipeline (it must thread the
-    # pinned-RDD bookkeeping); kept out of STAGES so the name still resolves.
-    return None
 
 
 def register_stage(name: str) -> Callable[[Stage], Stage]:
@@ -90,21 +51,18 @@ class StageResult:
 @dataclass
 class PipelineReport:
     results: list[StageResult] = field(default_factory=list)
-    #: input name -> RDD ids pinned by that input's FINAL ``checkpoint``
-    #: barrier (the returned output reads them lazily — they cannot be
-    #: freed inside the run). Call ``free_barriers(spark)`` when done
+    #: input name -> that input's final ``checkpoint`` barrier, which the
+    #: returned output reads. Call ``free_barriers(spark)`` when done
     #: with the outputs.
-    pinned_rdd_ids: dict[str, list[int]] = field(default_factory=dict)
+    barriers: dict[str, DataFrame] = field(default_factory=dict)
 
     def free_barriers(self, spark) -> None:
-        """Release every block set the run's ``checkpoint`` barriers left
-        pinned. Call ONLY after the returned output DataFrames will never
-        be touched again (their lineage was truncated to these blocks)."""
-        from ..ckpt import free_checkpoint
-
-        for ids in self.pinned_rdd_ids.values():
-            free_checkpoint(spark, ids)
-        self.pinned_rdd_ids.clear()
+        """Release the blocks the run's final ``checkpoint`` barriers hold.
+        Call only once the returned outputs will not be read again. The
+        barrier frames know their own blocks; ``spark`` is not read."""
+        for df in self.barriers.values():
+            release(df)
+        self.barriers.clear()
 
     @property
     def n_success(self) -> int:
@@ -133,8 +91,12 @@ def run_pipeline(
     rest; the report carries per-input status and timing.
 
     Stages compose lazily — the only actions are the sink (or a count when
-    no sink is given, mirroring the reference's per-file summary). When the
-    last stage is ``checkpoint``, its own job counts the rows through an
+    no sink is given, mirroring the reference's per-file summary). The
+    ``checkpoint`` stage name is a barrier: ``ckpt.materialize`` runs the
+    plan so far once, for every later stage and action to read. A later
+    barrier or a failure releases it; the last one is kept in
+    ``report.barriers`` until ``report.free_barriers``. When the last stage
+    is ``checkpoint``, its own job counts the rows through an
     ``Observation``, so no separate count job runs.
 
     An error message starts with where the failure surfaced: the stage
@@ -151,13 +113,11 @@ def run_pipeline(
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    from ..ckpt import free_checkpoint, tracked_local_checkpoint
-
     report = PipelineReport()
     outputs: dict[str, DataFrame] = {}
     for name, df in inputs.items():
         t0 = time.perf_counter()
-        held: list[int] = []  # blocks pinned by this input's barriers
+        held = None  # this input's latest barrier
         step = "input"  # where a failure surfaced, for the error message
         try:
             out = df
@@ -168,17 +128,13 @@ def run_pipeline(
                     if sink is None and i == len(stage_names) - 1:
                         counted = Observation()
                         out = out.observe(counted, F.count(F.lit(1)).alias("rows"))
-                    # tracked form: a later barrier supersedes this one's
-                    # blocks (the chain is linear), so free them then —
-                    # bare localCheckpoint would pin one table-sized block
-                    # set per barrier for the life of the SparkContext.
-                    out, new_ids = tracked_local_checkpoint(out)
-                    if held:
-                        free_checkpoint(out.sparkSession, held)
-                    held = new_ids
+                    out = materialize(out)
+                    if held is not None:
+                        release(held)
+                    held = out
                     continue
                 step = f"stage {sname!r}"
-                stage = STAGES.get(sname) or _materialize_stage(sname)
+                stage = STAGES.get(sname)
                 if stage is None:
                     raise KeyError(f"unknown stage: {sname!r}")
                 out = stage(out)
@@ -192,14 +148,14 @@ def run_pipeline(
                 step = "count"
                 rows = out.count()
             outputs[name] = out
-            if held:  # final barrier: the returned output reads it lazily
-                report.pinned_rdd_ids[name] = held
+            if held is not None:  # the returned output reads it
+                report.barriers[name] = held
             report.results.append(
                 StageResult(name, "success", stage_names, rows, time.perf_counter() - t0)
             )
         except Exception as e:  # per-input isolation — error is data, not crash
-            if held:  # no output escapes this input — its blocks are dead
-                free_checkpoint(df.sparkSession, held)
+            if held is not None:  # no output escapes this input
+                release(held)
             msg = f"{step}: {e}"
             report.results.append(
                 StageResult(

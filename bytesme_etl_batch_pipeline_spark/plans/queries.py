@@ -34,6 +34,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..ckpt import materialize
 from ..functions import dec, seeded, strings
 from ..functions.strings import canonicalize_url, register_parse_unit_price_udtf
 from ..operators import aggregate as agg_ops
@@ -161,7 +162,7 @@ def _neardup_lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs over documents — the artifact SHARED by
     ``neardup_clusters`` and ``neardup_clusters_star`` (identical
     parameters; VERDICT r3 item 3). Materialized once per (Spark app,
-    sf_dir) via ``localCheckpoint`` and memoized, so whichever CC variant
+    sf_dir) via ``ckpt.materialize`` and memoized, so whichever CC variant
     runs second skips the whole shingle→minhash→band cascade (~2 s of a
     ~3 s query at sf0.1). Each query still stands alone: the first caller
     in a fresh session computes the cascade itself.
@@ -177,9 +178,9 @@ def _neardup_lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     got = _LSH_EDGES_MEMO.get(key)
     if got is None:
         d = load_table(spark, sf_dir, "documents")
-        got = N.minhash_lsh_pairs(
-            d, "doc_id", "text", num_hashes=4, bands=2, shingle_n=3
-        ).localCheckpoint(eager=True)
+        got = materialize(
+            N.minhash_lsh_pairs(d, "doc_id", "text", num_hashes=4, bands=2, shingle_n=3)
+        )
         # drop artifacts of dead sessions (checkpoint RDDs die with the app)
         for k in [k for k in _LSH_EDGES_MEMO if k[0] != key[0]]:
             del _LSH_EDGES_MEMO[k]
@@ -2739,7 +2740,7 @@ def q_bitext_margin_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = SIM.lsh_band_window_pairs(e, "vec_id", "embedding", dim=64)
     la = e.select(F.col("vec_id").alias("id_a"), F.col("label").alias("la"))
     lb = e.select(F.col("vec_id").alias("id_b"), F.col("label").alias("lb"))
-    cp = (
+    cp = materialize(  # three ranking branches reuse it
         v.join(la, "id_a")
         .join(lb, "id_b")
         .filter(
@@ -2755,7 +2756,6 @@ def q_bitext_margin_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("b_id"),
             F.col("cosine").alias("c"),
         )
-        .localCheckpoint(eager=True)  # three ranking branches reuse it
     )
     ci = F.round(F.col("c") * 1000000).cast("long")
     # Both per-side kNN sums in ONE window pass (r10): symmetrize the
@@ -2783,12 +2783,11 @@ def q_bitext_margin_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the symmetrized window per consumer (two window passes over the
     # corpus-sized pair list again). The artifact is ≤ 2·|ids| rows of
     # three longs; neutral at sf0.1, strictly fewer passes at scale.
-    ks = (
+    ks = materialize(
         sym.withColumn("rn", F.row_number().over(ws))
         .filter(F.col("rn") <= 4)
         .groupBy("side", "gid")
         .agg(F.sum(ci).alias("ksum"))
-        .localCheckpoint(eager=True)
     )
     ka = ks.filter(F.col("side") == 0).select(
         F.col("gid").alias("a_id"), F.col("ksum").alias("ksum_a")
@@ -3933,10 +3932,9 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # side — materialize the (doc_id, simhash, lang) rows ONCE (r11; guide
     # §2.4 multi-consumer subtrees / §8 decide with small rows: two longs
     # plus a tiny lang key per doc, at any corpus size)
-    sim = (
+    sim = materialize(
         T.simhash(d, "text", ["doc_id"], n_bits=16)
         .join(d.select("doc_id", "lang"), "doc_id")
-        .localCheckpoint(eager=True)
     )
     return N.simhash_hamming_pairs(sim, "doc_id", "simhash", max_hamming=3, block_col="lang")
 
@@ -6361,9 +6359,7 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a plain scan + semi-join against it (4 scans total, ONE gate/dedup
     # evaluation at any scale). doc_id is the table PK, so id membership
     # selects exactly the corpus rows.
-    corpus_ids = (
-        dd.filter(~is_eval).select("doc_id").localCheckpoint(eager=True)
-    )
+    corpus_ids = materialize(dd.filter(~is_eval).select("doc_id"))
     corpus = d.join(corpus_ids, on=["doc_id"], how="left_semi")
     verdicts = decontaminate_overlap(corpus, d.filter(is_eval), "doc_id", "text", n=5)
     clean = corpus.join(
@@ -6677,7 +6673,7 @@ def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # never join `pairs` (pair parts come from the same NULL-free arrays),
     # so the counts that reach the output are identical.
     # the width pin in _baskets also sets the checkpoint's partitioning
-    baskets = _baskets(li).localCheckpoint(eager=True)
+    baskets = materialize(_baskets(li))
     n_baskets = baskets.count()
     item_cnt = (
         baskets.select(F.explode("ps").alias("l_partkey"))
@@ -7222,7 +7218,7 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge self-join SQL at small SF. Also reports the global clustering
     coefficient (3·triangles / open wedges)."""
     li = load_table(spark, sf_dir, "lineitem")
-    e = (
+    e = materialize(
         _basket_pairs(_baskets(li), "pa", "pb")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") >= 2)
@@ -7233,7 +7229,6 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         # measured. The strong-edge set is support-pruned (tiny vs the
         # fact), so one eager materialization is the scale-correct trade —
         # same lesson as graph.connected_components_star.
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("pa").alias("node"))
@@ -7247,11 +7242,13 @@ def q_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     a_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("pa") < F.col("pb"))
     )
-    oriented = ed.select(
-        F.when(a_first, F.col("pa")).otherwise(F.col("pb")).alias("src"),
-        F.when(a_first, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
-        F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dst_deg"),
-    ).localCheckpoint(eager=True)  # reused by o1, o2 and the closure join
+    oriented = materialize(  # reused by o1, o2 and the closure join
+        ed.select(
+            F.when(a_first, F.col("pa")).otherwise(F.col("pb")).alias("src"),
+            F.when(a_first, F.col("pb")).otherwise(F.col("pa")).alias("dst"),
+            F.when(a_first, F.col("db")).otherwise(F.col("da")).alias("dst_deg"),
+        )
+    )
     o1 = oriented.select("src", F.col("dst").alias("v"), F.col("dst_deg").alias("dv"))
     o2 = oriented.select("src", F.col("dst").alias("w"), F.col("dst_deg").alias("dw"))
     wedges = o1.join(o2, "src").filter(
@@ -8387,20 +8384,18 @@ def q_minhash_estimator_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluation that tells an operator whether 4 hashes are enough before
     scaling the dedup pass (compare ``lang_id_confusion_matrix`` for the
     classifier twin). Signatures and candidates are
-    localCheckpoint-materialized once (both doc-count-sized) because five
+    materialized once (both doc-count-sized) because five
     downstream branches reuse them — the Catalyst recompute lesson; exact
     verification stays blocked by the candidate set, never all-pairs."""
 
     d = _cpu_spread(spark, sf_dir, "documents")
-    sig = N.minhash_signatures(
-        d, "doc_id", "text", num_hashes=4, shingle_n=3
-    ).localCheckpoint(eager=True)
+    sig = materialize(
+        N.minhash_signatures(d, "doc_id", "text", num_hashes=4, shingle_n=3)
+    )
     # band the MATERIALIZED signatures — calling minhash_lsh_pairs here
     # would rebuild the whole shingle→dictionary→min pipeline a second
     # time (measured ~2s of the query at sf0.1)
-    cand = N.lsh_pairs_from_signatures(
-        sig, "doc_id", num_hashes=4, bands=2
-    ).localCheckpoint(eager=True)
+    cand = materialize(N.lsh_pairs_from_signatures(sig, "doc_id", num_hashes=4, bands=2))
     sa = sig.select(
         F.col("doc_id").alias("doc_a"), "seed", F.col("minhash").alias("ma")
     )
@@ -8419,10 +8414,9 @@ def q_minhash_estimator_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialized words column per the inline-words rule; checkpointed
     # because sizes and both common-join sides reuse it
-    shd = (
+    shd = materialize(
         d.select("doc_id", N.words("text").alias("__ws"))
         .select("doc_id", F.explode(N.word_ngrams(F.col("__ws"), 3)).alias("shingle"))
-        .localCheckpoint(eager=True)
     )
     sizes = shd.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     common = (
@@ -8545,7 +8539,7 @@ def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = d.select("source", F.explode(words("text")).alias("token"))
     sc = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("c"))
-    sc = sc.localCheckpoint(eager=True)  # four derivations reuse it
+    sc = materialize(sc)  # four derivations reuse it
     stot = sc.groupBy("source").agg(F.sum("c").alias("n"))
     gc = sc.groupBy("token").agg(F.sum("c").alias("g"))
     gtot = gc.agg(F.sum("g").alias("gn"))
@@ -9606,7 +9600,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = e.withColumn(
         "sig", lsh_signature(F.col("embedding"), 64, 8, seed=7)
     ).withColumn("nrm", _norm(F.col("embedding")))
-    sig = sig.localCheckpoint(eager=True)  # corpus + query side reuse it
+    sig = materialize(sig)  # corpus + query side reuse it
     qs = sig.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qv"),
@@ -9622,15 +9616,14 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank cut, ≤ 20·10 after) — materialize each once so the four metric
     # branches below don't replay the scoring pipelines (the plan would
     # otherwise spend 17 exchanges recomputing them)
-    exact = (
+    exact = materialize(
         sig.crossJoin(F.broadcast(qs.select("q_id", "qv", "qnrm")))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id", score.alias("score"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 10)
-        .localCheckpoint(eager=True)
     )
-    lsh = (
+    lsh = materialize(
         sig.crossJoin(F.broadcast(qs))
         .filter(
             (F.bit_count(F.col("sig").bitwiseXOR(F.col("qsig"))) <= 3)
@@ -9641,7 +9634,6 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "n_candidates", F.count(F.lit(1)).over(Window.partitionBy("q_id"))
         )
-        .localCheckpoint(eager=True)
     )
     ncand = lsh.groupBy("q_id").agg(F.max("n_candidates").alias("n_candidates"))
     hits = (
@@ -9905,10 +9897,12 @@ def q_media_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that scan+phash+groupBy subtree once per consumer (3 parquet scans
     # in the before-plan). The artifact is one short row per DISTINCT
     # hash, so the checkpoint is dictionary-sized at any corpus size.
-    groups = ph.groupBy("phash").agg(
-        F.min("media_id").alias("canonical_id"),
-        F.count(F.lit(1)).alias("n_members"),
-    ).localCheckpoint(eager=True)
+    groups = materialize(
+        ph.groupBy("phash").agg(
+            F.min("media_id").alias("canonical_id"),
+            F.count(F.lit(1)).alias("n_members"),
+        )
+    )
     reps = groups.select(F.col("canonical_id").alias("media_id"), "phash")
     pairs = hamming_pairs_banded(
         reps, "media_id", "phash", max_hamming=3, n_bands=4, band_bits=16
@@ -10002,7 +9996,7 @@ def q_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         _norm(F.col("embedding")).alias("nb"),
     )
     denom = F.col("na") * F.col("nb")
-    scored = (
+    scored = materialize(  # three ranking branches reuse it
         a.crossJoin(F.broadcast(b))
         .select(
             "a_id",
@@ -10011,7 +10005,6 @@ def q_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(denom != 0, _dots(F.col("va"), F.col("vb")) / denom), 6
             ).alias("c"),
         )
-        .localCheckpoint(eager=True)  # three ranking branches reuse it
     )
     wa = Window.partitionBy("a_id").orderBy(F.col("c").desc(), F.col("b_id"))
     wb = Window.partitionBy("b_id").orderBy(F.col("c").desc(), F.col("a_id"))
@@ -10473,10 +10466,9 @@ def q_neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the verified pair list is tiny (dup density, not corpus size) and
     # feeds BOTH sides of the symmetric explode — materialize it once or
     # the whole blocked-Jaccard pipeline replays per branch (23 exchanges)
-    pairs = (
+    pairs = materialize(
         N.ngram_jaccard_pairs(d, "doc_id", "text", "source", n=2, threshold=0.1)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
     )
     return N.neardup_keep_best(d, pairs, "doc_id", "n_chars").select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars")
@@ -10535,10 +10527,9 @@ def q_contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     as shared (see ``neardup.ngram_jaccard_pairs``)."""
 
     d = _cpu_spread(spark, sf_dir, "documents")
-    pos = (
+    pos = materialize(
         N.ngram_jaccard_pairs(d, "doc_id", "text", "source", n=2, threshold=0.2)
         .select("doc_a", "doc_b", F.lit(1).alias("is_positive"))
-        .localCheckpoint(eager=True)
     )
     ids = d.select("doc_id")
     # doc ids are dense 0..N-1, so the negative partner is a Knuth-hash
@@ -10755,11 +10746,10 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the unigram table feeds THREE consumers (both join sides + the
     # corpus total) — materialize the vocabulary-sized frame once
-    uni = (
+    uni = materialize(
         base.select(F.explode("__ws").alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     n = uni.agg(F.sum("c").alias("total"))
     u1 = uni.select(F.col("token").alias("w1"), F.col("c").alias("c1"))
@@ -10893,7 +10883,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = daily.agg((F.sum("n").cast("double") / F.count(F.lit(1))).alias("mu"))
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    c = (
+    c = materialize(
         daily.crossJoin(F.broadcast(m))
         .withColumn(
             # + 0.0 folds IEEE negative zero to +0.0 — a zero-sum tail day
@@ -10902,8 +10892,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.col("n") - F.col("mu")).over(w), 6) + F.lit(0.0),
         )
         .select("day", "n", "cusum")
-        .localCheckpoint(eager=True)  # scalar-max branch reuses it
-    )
+    )  # scalar-max branch reuses it
     mx = c.agg(F.max(F.abs("cusum")).alias("mx"))
     return c.crossJoin(F.broadcast(mx)).select(
         "day", "n", "cusum", (F.abs("cusum") == F.col("mx")).alias("is_changepoint")
@@ -10988,9 +10977,9 @@ def q_embedding_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     match DuckDB's quantile_disc."""
 
     e = load_table(spark, sf_dir, "embeddings")
-    norms = e.select(
-        "vec_id", "label", F.round(_norm(F.col("embedding")), 6).alias("l2")
-    ).localCheckpoint(eager=True)  # median, MAD and the report all reuse it
+    norms = materialize(  # median, MAD and the report all reuse it
+        e.select("vec_id", "label", F.round(_norm(F.col("embedding")), 6).alias("l2"))
+    )
     med = norms.agg(
         F.expr("percentile_approx(l2, 0.5, 2147483647)").alias("m")
     )
@@ -11067,15 +11056,17 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("bucket"),
     )
-    per_bucket = dt.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("docs"), F.sum("n_tok").alias("toks")
-    ).localCheckpoint(eager=True)
+    per_bucket = materialize(
+        dt.groupBy("bucket").agg(
+            F.count(F.lit(1)).alias("docs"), F.sum("n_tok").alias("toks")
+        )
+    )
     tf = (
         d.select("doc_id", F.explode(words("text")).alias("token"))
         .groupBy("token")
         .agg(F.min("doc_id").alias("first_doc"))
     )
-    nf = (
+    nf = materialize(
         tf.crossJoin(F.broadcast(n))
         .select(
             F.least(
@@ -11087,7 +11078,6 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("new_tokens"))
-        .localCheckpoint(eager=True)
     )
     buckets = per_bucket.select("bucket").distinct()
     cum = (
@@ -11238,7 +11228,7 @@ def q_rollup_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     the tiny aggregated frame, never the facts). Exact-decimal balances;
     one division per row at the end."""
     c = load_table(spark, sf_dir, "customer")
-    r = (
+    r = materialize(
         c.rollup("c_mktsegment", "c_nationkey")
         .agg(
             F.sum(dec("c_acctbal")).alias("bal"),
@@ -11255,8 +11245,7 @@ def q_rollup_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("g1") + F.col("g2") * 2).alias("gid"),
             "bal",
         )
-        .localCheckpoint(eager=True)  # child and parent sides reuse it
-    )
+    )  # child and parent sides reuse it
     child = r.select(
         F.col("segment"), F.col("nationkey"), F.col("gid"), F.col("bal")
     )
@@ -11689,11 +11678,10 @@ def q_doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized join back; empty docs keep NULL novelty."""
 
     d = _cpu_spread(spark, sf_dir, "documents")
-    pdg = (
+    pdg = materialize(
         d.select("doc_id", F.explode(word_ngrams(words("text"), 2)).alias("gram"))
         .distinct()
-        .localCheckpoint(eager=True)  # first-seen + scoring reuse it
-    )
+    )  # first-seen + scoring reuse it
     first_seen = pdg.groupBy("gram").agg(F.min("doc_id").alias("fd"))
     scored = (
         pdg.join(first_seen, "gram")

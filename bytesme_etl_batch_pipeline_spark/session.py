@@ -77,7 +77,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # Let AQE re-plan (coalesce/skew-split) the subtree that feeds a
-        # .cache() — off by default, which made materializing the cached
+        # cached plan — off by default, which made materializing the cached
         # LSH edge list 3× slower than the identical uncached plan (every
         # tiny shuffle fanned out to the static partition count). The
         # iterative consumers (connected components, incremental dedup)

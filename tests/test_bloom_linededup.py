@@ -8,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from bytesme_etl_batch_pipeline_spark.ckpt import release
 from bytesme_etl_batch_pipeline_spark.operators.bloom import (
     BloomFilter,
     _sizing,
@@ -152,11 +153,10 @@ def test_bloom_large_expected_items_driver_bounded(spark):
 
 
 def test_bloom_decontaminate_releases_gram_cache(spark):
-    """The benchmark-sized eval-gram cache must be released before return —
+    """The benchmark-sized eval-gram set must be released before return —
     repeated decontamination calls (per-benchmark, per-batch) would
-    otherwise accumulate one cached gram set each for the session
-    lifetime. Only the id-sized result stays cached (callers may
-    unpersist it)."""
+    otherwise accumulate one gram set each for the session lifetime. Only
+    the id-sized result stays pinned (callers may release it)."""
     from bytesme_etl_batch_pipeline_spark.operators.bloom import (
         bloom_decontaminate,
     )
@@ -173,7 +173,7 @@ def test_bloom_decontaminate_releases_gram_cache(spark):
     assert [r["doc_id"] for r in out.collect()] == [1]
     after = len(sc._jsc.getPersistentRDDs().keySet().toArray())
     assert after - before <= 1, "gram cache leaked"
-    out.unpersist()
+    release(out)
 
 
 def test_bloom_decontaminate_preserves_caller_cache(spark):
@@ -199,6 +199,39 @@ def test_bloom_decontaminate_preserves_caller_cache(spark):
         out2 = bloom_decontaminate(corpus, ev)  # reuse still works
         assert [r["doc_id"] for r in out2.collect()] == [1]
         assert ev.is_cached
-        out1.unpersist(), out2.unpersist()
+        release(out1), release(out2)
     finally:
         ev.unpersist()
+
+
+def test_bloom_decontaminate_leaves_no_cache_entry(spark):
+    """Two calls add no CacheManager entry and pin no RDD beyond each
+    returned frame's own, which ``release`` frees."""
+    from bytesme_etl_batch_pipeline_spark.operators.bloom import (
+        bloom_decontaminate,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, "a b c"), (2, "x y z")], "doc_id long, text string"
+    ).selectExpr("doc_id", "explode(split(text, ' ')) AS gram")
+    ev = spark.createDataFrame([("a b c",)], "text string").selectExpr(
+        "explode(split(text, ' ')) AS gram"
+    )
+    sc = spark.sparkContext
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    empty_before = cache.isEmpty()
+
+    def pinned():
+        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+    before = pinned()
+    outs = [bloom_decontaminate(corpus, ev) for _ in range(2)]
+    for o in outs:
+        assert [r["doc_id"] for r in o.collect()] == [1]
+        assert cache.lookupCachedData(o._jdf).isEmpty()
+    assert cache.isEmpty() == empty_before
+    own = {o._jdf.queryExecution().analyzed().rdd().id() for o in outs}
+    assert pinned() - before == own
+    for o in outs:
+        release(o)
+    assert pinned() == before

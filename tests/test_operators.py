@@ -167,10 +167,10 @@ def test_run_pipeline_isolation_and_report(spark):
 
 
 def test_run_pipeline_materialization_barriers(spark):
-    """The built-in persist/checkpoint barrier stages are the pipeline
-    author's declared CPU-vs-storage tradeoff: an expensive stage followed
-    by a barrier executes ONCE even when its output feeds multiple
-    downstream actions; without the barrier every action replays it."""
+    """The built-in checkpoint barrier stage is the pipeline author's
+    declared CPU-vs-storage tradeoff: an expensive stage followed by a
+    barrier executes ONCE even when its output feeds multiple downstream
+    actions; without the barrier every action replays it."""
     sc = spark.sparkContext
     with_acc = sc.accumulator(0)
     without_acc = sc.accumulator(0)
@@ -203,12 +203,7 @@ def test_run_pipeline_materialization_barriers(spark):
         outputs2["a"].count()
         outputs2["a"].count()
         assert without_acc.value == 30  # replayed per action — the contrast
-
-        # persist is the lazy variant: storage level is set on the output
-        outputs3, _ = run_pipeline({"a": src}, ["count_with", "persist:disk"])
-        assert outputs3["a"].storageLevel.useDisk
-        assert not outputs3["a"].storageLevel.useMemory
-        outputs3["a"].unpersist()
+        report.free_barriers(spark)
     finally:
         STAGES.pop("count_with", None)
         STAGES.pop("count_without", None)
@@ -1019,11 +1014,11 @@ def test_connected_components_variants_agree_on_junk_edges(spark):
 
 
 def test_run_pipeline_checkpoint_barriers_do_not_leak(spark):
-    """localCheckpoint pins blocks for the SparkContext lifetime
-    (DataFrame.unpersist is a no-op on it — ckpt.py), so the runner must
-    track them: a later barrier frees the superseded one, the final
-    barrier's ids are recorded in the report, and free_barriers releases
-    them once the caller is done with the outputs."""
+    """A barrier's blocks stay pinned until released (DataFrame.unpersist
+    is a no-op on them — ckpt.py), so the runner releases them: a later
+    barrier frees the superseded one, the final barrier is kept in the
+    report, and free_barriers releases it once the caller is done with
+    the outputs."""
     sc = spark.sparkContext
     STAGES["noop_a"] = lambda df: df.withColumn("v2", F.col("v") + 1)
     STAGES["noop_b"] = lambda df: df.withColumn("v3", F.col("v") + 2)
@@ -1038,13 +1033,13 @@ def test_run_pipeline_checkpoint_barriers_do_not_leak(spark):
         mid = set(sc._jsc.getPersistentRDDs().keySet().toArray())
         # exactly the FINAL barrier's blocks remain (the first was
         # superseded and freed inside the run)
-        assert set(report.pinned_rdd_ids["a"]) == mid - before
-        assert len(mid - before) >= 1
+        final = report.barriers["a"]._jdf.queryExecution().analyzed().rdd().id()
+        assert mid - before == {final}
 
         report.free_barriers(spark)
         after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
         assert after - before == set(), "free_barriers must release all blocks"
-        assert report.pinned_rdd_ids == {}
+        assert report.barriers == {}
     finally:
         STAGES.pop("noop_a", None)
         STAGES.pop("noop_b", None)
@@ -1067,7 +1062,7 @@ def test_run_pipeline_checkpoint_freed_on_stage_error(spark):
         assert "a" not in outputs
         after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
         assert after - before == set()
-        assert report.pinned_rdd_ids == {}
+        assert report.barriers == {}
     finally:
         STAGES.pop("boom3", None)
 

@@ -169,13 +169,6 @@ EXCHANGE_BUDGET = {
     # (recall/MRR/candidate-count/report spine) — every post-checkpoint
     # exchange is eval-batch-sized (≤ 20 q_id groups)
     "ann_recall_report": 11,
-    # string-count artifact, not a plan change: the contaminated-id result
-    # is cached + eagerly materialized INSIDE the operator (so the
-    # benchmark-sized gram cache can be released — operators/bloom.py:221),
-    # and InMemoryRelation's toString prints its build plan twice (cached +
-    # AQE-finalized copies, 2×4 exchanges that already ran). The outer
-    # query executes exactly 1 exchange: the broadcast of the tiny id set.
-    "bloom_decontaminate": 9,
 }
 
 

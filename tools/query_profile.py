@@ -39,14 +39,16 @@ def op_log(log: EventLog, op: str, build: tuple[float, float], end: float) -> Ev
 
 
 def repeat_fields(log: EventLog, op: str, build: tuple[float, float], end: float,
-                  ckpt_s: float, ckpt_calls: float) -> dict[str, float]:
-    """Fields of ``op``; ``build``/``end`` in epoch s, ``ckpt_*`` build deltas."""
+                  ckpt_s: float, ckpt_calls: float, pinned: int) -> dict[str, float]:
+    """Fields of ``op``; ``build``/``end`` in epoch s, ``ckpt_*`` build deltas,
+    ``pinned`` the persistent RDDs alive after the action."""
     mine = op_log(log, op, build, end)
     build_jobs = [(j.start, j.end) for j in mine.jobs.values() if j.phase == "build"]
     build_s = build[1] - build[0]
     out = {"wall_s": end - build[0], "queries.build_s": build_s,
            "queries.build_pure_s": build_s - union_seconds(build_jobs, *build),
-           "queries.build_jobs": float(len(build_jobs)), "ckpt.s": ckpt_s, "ckpt.calls": ckpt_calls}
+           "queries.build_jobs": float(len(build_jobs)), "ckpt.s": ckpt_s, "ckpt.calls": ckpt_calls,
+           "ckpt.pinned_rdds": float(pinned)}
     m = spark_metrics(mine, phases=("build", "action"))
     out.update((k, m[k]) for k in SPARK_FIELDS)
     return {k: round(v, 4) for k, v in out.items()}
@@ -87,7 +89,8 @@ def main() -> None:
         ckpt = [tracer.counts[k] - ckpt0.get(k, 0.0) for k in ("ckpt.s", "ckpt.calls")]
         spark.sparkContext.setJobGroup(f"{op}:action", name)
         df.count()
-        return (op, (t0, t1), time.time(), *ckpt)
+        end = time.time()
+        return (op, (t0, t1), end, *ckpt, spark.sparkContext._jsc.getPersistentRDDs().size())
 
     reps, errors = {}, {}
     for name in args.names or list(catalog.SPARK_QUERIES):
