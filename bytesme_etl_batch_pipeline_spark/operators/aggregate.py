@@ -193,7 +193,7 @@ def incremental_rollup(
     Mechanics: aggregate the delta to per-key partials (one keyed
     shuffle over DELTA rows only), union with the stored state, re-agg
     (state is key-cardinality-sized, not history-sized), and publish via
-    the staging-rename swap (``files.merge_upsert_parquet`` protocol), so
+    ``files.publish_parquet`` (the swap behind the MERGE sink too), so
     readers never see a half-merged state and a crash leaves the previous
     state intact. Sums are decimal(28,4) — exact and associative, so N
     small deltas produce bit-identical state to one big batch (proven in
@@ -217,11 +217,7 @@ def incremental_rollup(
     """
     import os
 
-    from ..sources.files import (
-        protocol_sibling,
-        publish_staging_swap,
-        recover_retired,
-    )
+    from ..sources.files import publish_parquet
 
     sum_cols = sum_cols or []
     min_cols = min_cols or []
@@ -237,58 +233,53 @@ def incremental_rollup(
         return df.groupBy(*keys).agg(*aggs)
 
     fresh = partials(delta)
-    # Crash recovery (shared staging-swap protocol): if a prior run died
-    # between retiring the old state and promoting the staging dir,
-    # __retired holds the only copy — restore it so this delta merges
-    # into it instead of silently rebuilding from scratch.
-    recover_retired(state_path)
-    marker = os.path.join(state_path, "_applied_batch")
-    applied: list[str] = []
-    if os.path.exists(marker):
-        with open(marker, encoding="utf-8") as f:
-            applied = [ln for ln in f.read().splitlines() if ln]
-    if batch_id is not None and batch_id in applied:
-        # this delta already promoted — either an immediate retry after a
-        # crash in the post-promotion cleanup, or an OUT-OF-ORDER redelivery
-        # of an older batch (queue redrive, multiple producers): the marker
-        # is a bounded LOG of recent batch ids, not just the latest, so a
-        # delayed replay of batch N-2 after N-1 applied is also refused
-        # instead of silently double-counting (ADVICE r4). Re-applying
-        # would double-count — return the state untouched.
-        import shutil
-
-        shutil.rmtree(
-            protocol_sibling(state_path, "retired"), ignore_errors=True
-        )
-        return spark.read.parquet(state_path)
-    if os.path.exists(state_path):
-        state = spark.read.parquet(state_path)
-        merge_aggs = [F.sum(F.col(count_col)).cast("long").alias(count_col)]
-        merge_aggs += [
-            F.sum(F.col(f"sum_{c}")).alias(f"sum_{c}") for c in sum_cols
+    # publish_parquet recovers on entry: a state parked by a crash
+    # mid-swap is back at state_path before the marker is read, so this
+    # delta merges into it instead of silently rebuilding from scratch
+    with publish_parquet(state_path) as staging:
+        marker = os.path.join(state_path, "_applied_batch")
+        applied: list[str] = []
+        if os.path.exists(marker):
+            with open(marker, encoding="utf-8") as f:
+                applied = [ln for ln in f.read().splitlines() if ln]
+        if batch_id is not None and batch_id in applied:
+            # this delta already promoted — either an immediate retry after
+            # a crash in the post-promotion cleanup, or an OUT-OF-ORDER
+            # redelivery of an older batch (queue redrive, multiple
+            # producers): the marker is a bounded LOG of recent batch ids,
+            # not just the latest, so a delayed replay of batch N-2 after
+            # N-1 applied is also refused instead of silently
+            # double-counting (ADVICE r4). Nothing is staged, so nothing
+            # is published.
+            return spark.read.parquet(state_path)
+        if os.path.exists(state_path):
+            state = spark.read.parquet(state_path)
+            merge_aggs = [F.sum(F.col(count_col)).cast("long").alias(count_col)]
+            merge_aggs += [
+                F.sum(F.col(f"sum_{c}")).alias(f"sum_{c}") for c in sum_cols
+            ]
+            merge_aggs += [F.min(f"min_{c}").alias(f"min_{c}") for c in min_cols]
+            merge_aggs += [F.max(f"max_{c}").alias(f"max_{c}") for c in max_cols]
+            merged = (
+                state.unionByName(fresh).groupBy(*keys).agg(*merge_aggs)
+            )
+        else:
+            merged = fresh
+        merged.write.mode("overwrite").parquet(staging)
+        # bounded log: the last _APPLIED_BATCH_LOG_SIZE applied ids ride
+        # the promotion rename atomically. Redelivery older than the
+        # horizon is undetectable — callers with arbitrarily-delayed
+        # replay need their own ledger (documented in the docstring). An
+        # id-LESS delta must still carry the EXISTING log forward (ADVICE
+        # r5): promoting a marker-free staging dir would wipe it, so a
+        # later redelivery of an earlier id'd batch (b1, id-less delta, b1
+        # again) double-counts despite being inside the horizon.
+        log = (applied + ([batch_id] if batch_id is not None else []))[
+            -_APPLIED_BATCH_LOG_SIZE:
         ]
-        merge_aggs += [F.min(f"min_{c}").alias(f"min_{c}") for c in min_cols]
-        merge_aggs += [F.max(f"max_{c}").alias(f"max_{c}") for c in max_cols]
-        merged = (
-            state.unionByName(fresh).groupBy(*keys).agg(*merge_aggs)
-        )
-    else:
-        merged = fresh
-    staging = protocol_sibling(state_path, "staging")
-    merged.write.mode("overwrite").parquet(staging)
-    # bounded log: the last _APPLIED_BATCH_LOG_SIZE applied ids ride the
-    # promotion rename atomically. Redelivery older than the horizon is
-    # undetectable — callers with arbitrarily-delayed replay need their
-    # own ledger (documented in the docstring). An id-LESS delta must
-    # still carry the EXISTING log forward (ADVICE r5): promoting a
-    # marker-free staging dir would wipe it, so a later redelivery of an
-    # earlier id'd batch (b1, id-less delta, b1 again) double-counts
-    # despite being inside the horizon.
-    log = (applied + ([batch_id] if batch_id is not None else []))[
-        -_APPLIED_BATCH_LOG_SIZE:
-    ]
-    if log:
-        with open(os.path.join(staging, "_applied_batch"), "w", encoding="utf-8") as f:
-            f.write("\n".join(log) + "\n")
-    publish_staging_swap(state_path)
+        if log:
+            with open(
+                os.path.join(staging, "_applied_batch"), "w", encoding="utf-8"
+            ) as f:
+                f.write("\n".join(log) + "\n")
     return spark.read.parquet(state_path)

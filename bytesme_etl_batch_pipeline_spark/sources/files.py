@@ -15,7 +15,10 @@ Schemas are explicit by default (`inferSchema` is the fallback, SURVEY §1.3).
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -146,23 +149,41 @@ def compact_parquet(
     dst_path: str,
     target_file_mb: int = 128,
 ) -> int:
-    """Small-file compaction into a SECOND location: rewrite a parquet
-    directory into files of ~``target_file_mb``. Streaming sinks and
-    fine-grained partition writes accumulate tiny files whose per-file
-    open/footer cost dominates scans at scale; periodic compaction is
-    standard hygiene. A hive-partitioned source is compacted PER LEAF
-    partition directory (each leaf is a plain parquet dir), so every
-    partition gets its own exact byte-based sizing — a hot partition
-    splits into many right-sized files instead of one giant one — and
-    the layout is reproduced at the destination. Returns the number of
-    output data files. (``compact_parquet_inplace`` is the variant to
-    use when no second location is wanted.) A source partition parked at
-    ``<leaf>__retired`` by a crashed earlier in-place maintenance run is
-    restored before enumeration (else the copy would silently omit it);
-    a MIXED layout (loose data files above the leaf level) raises instead
-    of silently dropping the loose files."""
-    # root recovery too: a crashed in-place run can park the WHOLE source
-    # at <src>__retired — without this, os.listdir(src) below would raise
+    """Small-file compaction: rewrite a parquet directory into files of
+    ~``target_file_mb``. Streaming sinks and fine-grained partition writes
+    accumulate tiny files whose per-file open/footer cost dominates scans
+    at scale; periodic compaction is standard hygiene. ``dst_path ==
+    src_path`` compacts IN PLACE, with no second location. Returns the
+    number of output data files.
+
+    A hive-partitioned source is compacted PER LEAF partition directory
+    (each leaf is a plain parquet dir): every partition gets its own exact
+    byte-based sizing — a hot partition splits into many right-sized
+    files instead of one giant one — and the layout, and with it
+    partition pruning, is reproduced at the destination. A MIXED layout
+    (loose data files above the leaf level) raises instead of silently
+    dropping the loose files.
+
+    Recovery runs before enumeration: at the table root (a crashed
+    in-place run can park the WHOLE table at its retired sibling), then
+    per leaf (``recover_retired_tree``) — a leaf parked mid-swap has no
+    base dir to enumerate, so the copy would silently omit it, and an
+    in-place retry would strand it or compact the parked dir AS a
+    partition, silently renaming its value.
+
+    In place, each leaf is published through ``publish_parquet``.
+    Compaction is pure layout, so a crash at any publish step loses
+    nothing and a re-run converges (same rows, fresh layout); a crash
+    mid-table leaves every leaf complete, some compacted and some not
+    yet. The swap is crash-ATOMIC but NOT reader-atomic: a concurrent
+    reader can hit a transient path-not-found per leaf, the only
+    reader-visible artifact — the staging/retired siblings are
+    dot-prefixed, so a root-scanning reader never sees duplicated rows or
+    a junk ``key=value__staging`` partition value. Schedule against live
+    tables accordingly, or use the catalog-swap JDBC sink shape where
+    readers must never miss."""
+    # without root recovery, os.listdir(src) below would raise on a
+    # table parked whole at its retired sibling
     recover_retired(src_path)
     recover_retired_tree(src_path)
     total = 0
@@ -312,15 +333,13 @@ def protocol_sibling(base_path: str, kind: str) -> str:
 
 
 def recover_retired(base_path: str) -> None:
-    """Crash recovery shared by every staging-swap publisher: a crash
-    between ``rename(base -> retired)`` and ``rename(staging -> base)``
-    leaves the retired sibling holding the ONLY complete copy. Restore
-    it before reading/merging — otherwise the caller would treat the
-    table as a first load and the sole surviving copy would be deleted at
-    publish time. Also restores the LEGACY (pre-dot-prefix)
-    ``<base>__retired`` spelling: a table parked by a writer from before
-    the protocol dirs went hidden would otherwise read as a first load —
-    silent data loss on upgrade."""
+    """Restore a generation parked at the retired sibling by a crash
+    between ``publish_parquet``'s two renames — it holds the ONLY complete
+    copy, and a caller that read the table as a first load would lose it.
+    Also restores the LEGACY (pre-dot-prefix) ``<base>__retired``
+    spelling: a table parked by a writer from before the protocol dirs
+    went hidden would otherwise read as a first load — silent data loss
+    on upgrade."""
     if os.path.exists(base_path):
         return
     for retired in (
@@ -332,40 +351,72 @@ def recover_retired(base_path: str) -> None:
             return
 
 
-def publish_staging_swap(base_path: str) -> None:
-    """Crash-atomic publish shared by every staging-swap writer (MERGE,
-    incremental rollup, in-place compaction): the COMPLETE new generation
-    must already sit at ``protocol_sibling(base, "staging")``; swap it in
-    via rename-aside. Ordering invariant: the previous generation (base,
-    then the retired sibling) survives until the new base is in place, so
-    a crash at any point leaves a complete copy that ``recover_retired``
-    (or the final cleanup of the next run) converges. NOT reader-atomic:
-    between the two renames the base path briefly does not exist, so a
-    concurrent reader can hit a transient path-not-found — retry,
-    schedule off-peak, or use a catalog-level swap (the JDBC sink
-    restores availability at entry; plain directories have no catalog to
-    indirect through). The protocol dirs themselves are DOT-PREFIXED
+@contextlib.contextmanager
+def publish_parquet(base_path: str) -> Iterator[str]:
+    """The engine's one crash-safe publish of a parquet directory, behind
+    MERGE, incremental rollup, in-place compaction and the streaming
+    upsert sink::
+
+        with publish_parquet(base) as staging:
+            ...  # read base (if it exists), write the next generation to staging
+
+    Entry recovers, so no caller can skip it: a generation parked at the
+    retired sibling is restored (``recover_retired``), then a superseded
+    retired sibling and a stale staging dir from a crashed write are
+    removed. A clean exit with the staging dir written swaps it in by
+    rename-aside (base → retired, staging → base, drop retired); a body
+    that raises, or writes nothing, publishes nothing.
+
+    Ordering invariant: the previous generation (base, then the retired
+    sibling) survives until the new base is in place, so a crash at any
+    point leaves a complete copy that the next entry converges. NOT
+    reader-atomic: between the two renames the base path briefly does
+    not exist, so a concurrent reader can hit a transient path-not-found
+    — retry, schedule off-peak, or use a catalog-level swap (the JDBC
+    sink restores availability at entry; plain directories have no
+    catalog to indirect through). The protocol dirs are DOT-PREFIXED
     siblings, invisible to Spark file listing (see ``protocol_sibling``),
     so a partitioned-table reader racing a per-leaf swap sees at worst
     the transient path-not-found — never duplicate rows or a junk
     partition value. Single WRITER assumed per table: two concurrent
-    publishers would race on the same staging dir — serialize
-    maintenance jobs externally. The dot-prefixed ``__staging`` /
-    ``__retired`` sibling names are reserved."""
-    import shutil
-
+    publishers would race on the same staging dir — serialize them
+    externally. The dot-prefixed ``__staging`` / ``__retired`` sibling
+    names are reserved."""
     staging = protocol_sibling(base_path, "staging")
     retired = protocol_sibling(base_path, "retired")
-    if os.path.exists(retired):
-        shutil.rmtree(retired)
+    recover_retired(base_path)
+    for leftover in (retired, staging):
+        if os.path.exists(leftover):
+            shutil.rmtree(leftover)
+    yield staging
+    if not os.path.exists(staging):
+        return
     if os.path.exists(base_path):
         os.rename(base_path, retired)
     os.rename(staging, base_path)
     shutil.rmtree(retired, ignore_errors=True)
 
 
+def restore_legacy_upsert_store(target_path: str) -> None:
+    """Upgrade step of the streaming upsert sink, whose earlier publish
+    staged at ``<target>.tmp`` and parked the previous store at
+    ``<target>.old``. A crash between its two renames left ``.old`` as
+    the only copy: restore it, as ``recover_retired`` restores the legacy
+    ``__retired`` spelling, instead of reading a first load. Then drop the
+    superseded ``.old`` and the unpublished ``.tmp`` — visible names that
+    a partitioned reader would list as junk partition values. Scoped to
+    that sink: beside any other table, ``x.old`` may be a user's own
+    directory."""
+    old, tmp = target_path + ".old", target_path + ".tmp"
+    if not os.path.exists(target_path) and os.path.isdir(old):
+        os.rename(old, target_path)
+    for leftover in (old, tmp):
+        if os.path.isdir(leftover):
+            shutil.rmtree(leftover)
+
+
 #: Reserved directory-name suffixes of the staging-swap publish protocol
-#: (``publish_staging_swap``). A ``.<leaf>__retired`` / ``.<leaf>__staging``
+#: (``publish_parquet``). A ``.<leaf>__retired`` / ``.<leaf>__staging``
 #: sibling left by a crash mid-swap is PROTOCOL state, not a partition —
 #: enumerating it as one would compact a retired generation in place
 #: (silently renaming the partition value) or read a staging dir another
@@ -402,7 +453,7 @@ def _hive_partition_keys(path: str) -> list[str]:
 def recover_retired_tree(path: str) -> None:
     """Per-LEAF crash recovery for partitioned staging-swap writers: restore
     every ``.<dir>__retired`` sibling under ``path`` whose base dir is
-    missing (the mid-swap crash window of ``publish_staging_swap``, at any
+    missing (the mid-swap crash window of ``publish_parquet``, at any
     partition depth). Run BEFORE enumerating partition leaves — a leaf
     parked at its retired sibling has no base dir to enumerate, so without
     this sweep the retry would never restore (or even see) that partition.
@@ -491,68 +542,18 @@ def _compact_flat_dir(
     spark: SparkSession, src: str, dst: str, target_file_mb: int
 ) -> int:
     """Rewrite ONE plain parquet dir into ceil(bytes/target) files at
-    ``dst`` (``src == dst`` → in-place via the crash-safe staging swap).
-    Shared by both compaction variants so sizing and publish exist once."""
+    ``dst`` (``src == dst`` → in place, through ``publish_parquet``)."""
     import glob as _glob
 
     inplace = os.path.abspath(src) == os.path.abspath(dst)
-    if inplace:
-        recover_retired(src)
-    n_out = max(1, -(-_dir_data_bytes(src) // (target_file_mb * 1024 * 1024)))
-    out_dir = protocol_sibling(src, "staging") if inplace else dst
-    spark.read.parquet(src).repartition(n_out).write.mode("overwrite").parquet(out_dir)
-    if inplace:
-        publish_staging_swap(src)
+    with publish_parquet(src) if inplace else contextlib.nullcontext(dst) as out_dir:
+        n_out = max(1, -(-_dir_data_bytes(src) // (target_file_mb * 1024 * 1024)))
+        spark.read.parquet(src).repartition(n_out).write.mode("overwrite").parquet(
+            out_dir
+        )
     return len(
         [f for f in _glob.glob(os.path.join(dst, "*.parquet")) if os.path.isfile(f)]
     )
-
-
-def compact_parquet_inplace(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-) -> int:
-    """IN-PLACE small-file compaction with the crash-safe staging swap:
-    rewrite a live parquet table into ~``target_file_mb`` files without a
-    second location. The maintenance job for long-lived landing zones —
-    streaming sinks and per-batch appends accumulate tiny files whose
-    open/footer cost dominates 100 TB scans; compaction is pure layout,
-    so a crash at any publish step loses nothing and a re-run converges
-    (same rows, fresh layout). A hive-partitioned table is compacted PER
-    LEAF partition directory: exact byte-based sizing per partition (a
-    hot partition splits into many right-sized files), the directory
-    layout — and with it partition pruning — is never rewritten, and a
-    crash mid-table leaves every leaf complete (some compacted, some not
-    yet — layout-only, so always correct). Recovery runs at the table
-    root before leaf enumeration, so a retry from the unpartitioned
-    mid-swap window (base parked at ``__retired``) restores the table it
-    is about to list; per-LEAF recovery (``recover_retired_tree``) then
-    restores any partition parked at ``<leaf>__retired`` by a crash
-    mid-swap — without it the parked leaf has no base dir to enumerate
-    and the retry would strand (or, worse, compact the ``__retired`` dir
-    AS a partition, silently renaming its value).
-
-    Durability vs concurrency: the swap is crash-ATOMIC (a complete copy
-    always survives; see ``publish_staging_swap``) but NOT reader-atomic
-    — between the two renames the directory briefly does not exist, so a
-    concurrent reader can hit a transient path-not-found (per leaf, for
-    partitioned tables). That transient miss is the ONLY reader-visible
-    artifact even on partitioned tables: the staging/retired siblings are
-    dot-prefixed (``protocol_sibling``), which Spark's file listing skips
-    unconditionally, so a root-scanning reader during the swap window —
-    or between a crash and the retry — never sees duplicated rows or a
-    junk ``key=value__staging`` partition value (ADVICE r4). Schedule
-    against live tables accordingly, or use the catalog-swap JDBC sink
-    shape where readers must never miss.
-    Returns the number of data files after compaction."""
-    recover_retired(path)
-    recover_retired_tree(path)
-    total = 0
-    for rel in _partition_leaf_dirs(path):
-        leaf = os.path.join(path, rel) if rel else path
-        total += _compact_flat_dir(spark, leaf, leaf, target_file_mb)
-    return total
 
 
 def merge_upsert_parquet(
@@ -577,14 +578,11 @@ def merge_upsert_parquet(
     for it — "not provided", not "delete the column").
 
     Write protocol (the file-layer twin of
-    ``jdbc.write_jdbc_exactly_once``): the merged result lands in the
-    dot-prefixed ``.<base>__staging`` sibling first; only after that
-    write fully succeeds does the old table move to ``.<base>__retired``
-    and the staging directory take its place — readers see the old table
-    or the new one, never a half-written mix, and a crash mid-publish
-    leaves a recoverable staging dir that the next run overwrites. The
-    dot-prefixed sibling names are reserved (``protocol_sibling``) and
-    invisible to Spark file listing.
+    ``jdbc.write_jdbc_exactly_once``): ``publish_parquet`` — the merged
+    result is written in full to a hidden staging sibling before it
+    replaces the table, so readers see the old table or the new one,
+    never a half-written mix, and a crash at any step leaves a complete
+    copy that the next run recovers.
 
     Merge semantics are ``operators/cdc``-style latest-change-wins,
     expressed as one window over the union — a keyed shuffle, no driver
@@ -594,37 +592,35 @@ def merge_upsert_parquet(
     from pyspark.sql import Window
     from pyspark.sql import functions as _F
 
-    staging = protocol_sibling(base_path, "staging")
-    recover_retired(base_path)
-    if os.path.exists(base_path):
-        base = spark.read.parquet(base_path)
-        added = set(updates.columns) - set(base.columns)
-        missing = set(base.columns) - set(updates.columns)
-        if (added or missing) and not allow_schema_evolution:
-            raise ValueError(
-                f"change batch schema differs from stored table at "
-                f"{base_path}: added={sorted(added)} missing={sorted(missing)}. "
-                "Pass allow_schema_evolution=True to merge by name."
+    with publish_parquet(base_path) as staging:
+        if os.path.exists(base_path):
+            base = spark.read.parquet(base_path)
+            added = set(updates.columns) - set(base.columns)
+            missing = set(base.columns) - set(updates.columns)
+            if (added or missing) and not allow_schema_evolution:
+                raise ValueError(
+                    f"change batch schema differs from stored table at "
+                    f"{base_path}: added={sorted(added)} missing={sorted(missing)}. "
+                    "Pass allow_schema_evolution=True to merge by name."
+                )
+            # base rows rank below any update at the same version: change
+            # batches REPLACE, re-applying an already-applied batch is a no-op
+            unioned = base.withColumn("__src", _F.lit(0)).unionByName(
+                updates.withColumn("__src", _F.lit(1)),
+                allowMissingColumns=True,
             )
-        # base rows rank below any update at the same version: change
-        # batches REPLACE, re-applying an already-applied batch is a no-op
-        unioned = base.withColumn("__src", _F.lit(0)).unionByName(
-            updates.withColumn("__src", _F.lit(1)),
-            allowMissingColumns=True,
+        else:
+            unioned = updates.withColumn("__src", _F.lit(1))
+        w = Window.partitionBy(*key_cols).orderBy(
+            _F.col(version_col).desc(), _F.col("__src").desc()
         )
-    else:
-        unioned = updates.withColumn("__src", _F.lit(1))
-    w = Window.partitionBy(*key_cols).orderBy(
-        _F.col(version_col).desc(), _F.col("__src").desc()
-    )
-    merged = (
-        unioned.withColumn("__rn", _F.row_number().over(w))
-        .filter(_F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
-    if delete_col is not None:
-        merged = merged.filter(~_F.coalesce(_F.col(delete_col), _F.lit(False)))
-    merged.write.mode("overwrite").parquet(staging)
-    n = spark.read.parquet(staging).count()
-    publish_staging_swap(base_path)
+        merged = (
+            unioned.withColumn("__rn", _F.row_number().over(w))
+            .filter(_F.col("__rn") == 1)
+            .drop("__rn", "__src")
+        )
+        if delete_col is not None:
+            merged = merged.filter(~_F.coalesce(_F.col(delete_col), _F.lit(False)))
+        merged.write.mode("overwrite").parquet(staging)
+        n = spark.read.parquet(staging).count()
     return n

@@ -83,7 +83,6 @@ def write_jdbc_exactly_once(
     *,
     batch_size: int = 10_000,
     properties: dict[str, str] | None = None,
-    staging_suffix: str = "_staging",
 ) -> None:
     """Publish-by-swap sink: plain JDBC ``append`` is at-least-once (a task
     retry re-sends its batch, a job retry re-sends everything), which is how
@@ -103,29 +102,20 @@ def write_jdbc_exactly_once(
     transactional DDL, so the test asserts the end state, not the
     intermediate.
 
-    ``<table>_retired`` is RESERVED by this sink: it is the parking name
-    for the previous generation during the swap and is dropped on the next
-    publish — never point application data at it. A crash between the two
-    renames leaves the generation parked there; the next publish restores
-    it FIRST, so readers serve the old data throughout the retry's staging
-    rewrite instead of hitting a missing table.
+    ``<table>_staging`` and ``<table>_retired`` are RESERVED by this sink:
+    every publish overwrites the staging table, and the retired one parks
+    the previous generation during the swap and is dropped on the next
+    publish — never point application data at either. A crash between
+    the two renames leaves the generation parked there; the next publish
+    restores it FIRST, so readers serve the old data throughout the
+    retry's staging rewrite instead of hitting a missing table.
     """
     import re
 
-    ident = r"[A-Za-z_][A-Za-z0-9_]*"
-    if not re.fullmatch(ident, table):
+    if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", table):
         raise ValueError(f"unqualified simple table name required, got {table!r}")
-    if not staging_suffix or not re.fullmatch(ident, f"x{staging_suffix}"):
-        # empty suffix would make staging == table: the 'restartable'
-        # overwrite would hit the LIVE table directly — the exact
-        # at-least-once hazard this sink exists to prevent
-        raise ValueError(
-            f"staging_suffix must be non-empty identifier chars, got {staging_suffix!r}"
-        )
-    staging = f"{table}{staging_suffix}"
+    staging = f"{table}_staging"
     retired = f"{table}_retired"
-    if staging == retired:
-        raise ValueError("staging_suffix '_retired' collides with the parking name")
 
     # Driver-side connections via the JVM's DriverManager (the same
     # classloader Spark's JDBC writer uses, so no extra client library is

@@ -26,10 +26,15 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 
 from pyspark.sql import DataFrame
 
 from ..operators.dedup import incremental_dedup
+
+#: Digest versions kept after each batch: the one just written plus the
+#: one a redelivery of that batch re-reads (see the module docstring).
+_RETAIN_DIGEST_VERSIONS = 2
 
 
 def _latest_digest_version(digests_path: str, before: int) -> int | None:
@@ -44,31 +49,18 @@ def _latest_digest_version(digests_path: str, before: int) -> int | None:
     return max(prior) if prior else None
 
 
-def make_incremental_dedup_step(
-    text_col: str,
-    corpus_path: str,
-    digests_path: str,
-    retain_digest_versions: int | None = 2,
-):
+def make_incremental_dedup_step(text_col: str, corpus_path: str, digests_path: str):
     """Build the foreachBatch body (exposed for direct idempotence tests).
 
-    ``retain_digest_versions`` prunes old digest versions after each
-    successful write — every ``v=N`` is the FULL seen-set, so keeping all
-    of them grows storage as O(batches × corpus); only the newest version
-    ``< batch_id`` is ever read, and the structured-streaming checkpoint
-    can redeliver at most the last uncommitted batch, so 2 (the new
-    version plus the one a redelivery of THIS batch would re-read) is the
-    correctness minimum. Pruning is idempotent — a crash mid-prune just
-    leaves extra versions for the next batch to remove. ``None`` disables
-    pruning; values below 2 are rejected — 1 would delete the version a
-    redelivery of the current batch must re-read (silently re-admitting
-    every historical duplicate and then overwriting the seen-set with one
-    batch's digests), and 0 would delete the version just written."""
-    if retain_digest_versions is not None and retain_digest_versions < 2:
-        raise ValueError(
-            "retain_digest_versions must be None (keep all) or >= 2: the "
-            "newest version plus the one a redelivered batch re-reads"
-        )
+    After each successful write, digest versions older than the newest
+    ``_RETAIN_DIGEST_VERSIONS`` are pruned — every ``v=N`` is the FULL
+    seen-set, so keeping all of them grows storage as O(batches ×
+    corpus); only the newest version ``< batch_id`` is ever read, and the
+    structured-streaming checkpoint can redeliver at most the last
+    uncommitted batch, so 2 (the new version plus the one a redelivery of
+    THIS batch would re-read) is the correctness minimum. Pruning is
+    idempotent — a crash mid-prune just leaves extra versions for the
+    next batch to remove."""
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -98,13 +90,10 @@ def make_incremental_dedup_step(
         fresh, updated = incremental_dedup(batch_df, seen, text_col)
         fresh.write.mode("overwrite").parquet(f"{corpus_path}/batch_id={batch_id}")
         updated.write.mode("overwrite").parquet(f"{digests_path}/v={batch_id}")
-        if retain_digest_versions is not None:
-            import shutil
-
-            cutoff = batch_id - (retain_digest_versions - 1)
-            for d in os.listdir(digests_path):
-                if (m := re.fullmatch(r"v=(\d+)", d)) and int(m.group(1)) < cutoff:
-                    shutil.rmtree(os.path.join(digests_path, d), ignore_errors=True)
+        cutoff = batch_id - (_RETAIN_DIGEST_VERSIONS - 1)
+        for d in os.listdir(digests_path):
+            if (m := re.fullmatch(r"v=(\d+)", d)) and int(m.group(1)) < cutoff:
+                shutil.rmtree(os.path.join(digests_path, d), ignore_errors=True)
 
     return step
 
@@ -115,17 +104,11 @@ def run_incremental_dedup_stream(
     corpus_path: str,
     digests_path: str,
     checkpoint_dir: str,
-    retain_digest_versions: int | None = 2,
 ) -> None:
     """Drain a document stream into an exactly-once deduped corpus."""
     q = (
         stream.writeStream.foreachBatch(
-            make_incremental_dedup_step(
-                text_col,
-                corpus_path,
-                digests_path,
-                retain_digest_versions=retain_digest_versions,
-            )
+            make_incremental_dedup_step(text_col, corpus_path, digests_path)
         )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

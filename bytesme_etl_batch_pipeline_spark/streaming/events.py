@@ -149,21 +149,19 @@ def make_upsert_step(
     (``dropDuplicates``) — acceptable only when the source can't emit the
     same key twice per batch.
 
-    Crash safety: the target is swapped via rename-aside (target → .old,
-    tmp → target, drop .old), and the read path falls back to ``.old`` if a
-    crash landed between the renames — so at-least-once redelivery rebuilds
-    from the pre-batch state instead of clobbering it; ``.old`` is only
-    ever deleted while ``target`` exists, so no crash sequence can leave
-    neither copy. A read failure with the target PRESENT propagates (fails
-    the batch for retry) rather than silently restarting the store from
-    one batch. On a production lakehouse the whole body becomes a
-    Delta/Iceberg ``MERGE INTO``.
+    Crash safety: the store is published through
+    ``sources.files.publish_parquet`` (recovery on entry, hidden staging
+    sibling, rename-aside swap), so a crash at any step leaves a complete
+    pre-batch-or-newer copy that the at-least-once redelivery merges
+    into, and a partitioned reader of the target's parent never lists a
+    protocol dir as a partition. A read failure with the target PRESENT
+    propagates (fails the batch for retry) rather than silently
+    restarting the store from one batch. On a production lakehouse the
+    whole body becomes a Delta/Iceberg ``MERGE INTO``.
     """
     import os
-    import shutil
 
-    old_path = target_path + ".old"
-    tmp_path = target_path + ".tmp"
+    from ..sources.files import publish_parquet, restore_legacy_upsert_store
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -188,41 +186,27 @@ def make_upsert_step(
         else:
             fresh = batch_df.dropDuplicates(key_cols)
 
-        read_path = None
-        if os.path.isdir(target_path):
-            read_path = target_path
-        elif os.path.isdir(old_path):  # crash between the two renames
-            read_path = old_path
-        if read_path is not None:
-            # a genuine read error here must FAIL the batch (retryable),
-            # never silently rebuild the store from one micro-batch
-            current = spark.read.parquet(read_path)
-            # NULL-SAFE key equality, matching the within-batch semantics
-            # (groupBy/dropDuplicates treat NULL keys as one group): with
-            # plain '=' a stored NULL-key row never anti-joins away, so
-            # NULL-keyed junk would accumulate one row per batch forever.
-            fresh_keys = fresh.select(*key_cols)
-            cond = None
-            for c in key_cols:
-                e = current[c].eqNullSafe(fresh_keys[c])
-                cond = e if cond is None else (cond & e)
-            merged = current.join(fresh_keys, cond, "left_anti").unionByName(fresh)
-        else:
-            merged = fresh
-
-        merged.write.mode("overwrite").parquet(tmp_path)
-        # Publish order invariant: at every instant at least one of
-        # {target, .old} holds the pre-batch-or-newer state. .old is only
-        # removed while target exists — removing it first (the previous
-        # order) opened a two-crash window on a redelivery from the
-        # mid-swap state where the sole surviving copy was deleted before
-        # tmp promoted, and the NEXT retry would silently rebuild the
-        # store from one micro-batch.
-        if os.path.isdir(target_path):
-            shutil.rmtree(old_path, ignore_errors=True)  # superseded copy
-            shutil.move(target_path, old_path)
-        shutil.move(tmp_path, target_path)
-        shutil.rmtree(old_path, ignore_errors=True)
+        restore_legacy_upsert_store(target_path)
+        with publish_parquet(target_path) as staging:
+            if os.path.isdir(target_path):
+                # a genuine read error here must FAIL the batch (retryable),
+                # never silently rebuild the store from one micro-batch
+                current = spark.read.parquet(target_path)
+                # NULL-SAFE key equality, matching the within-batch semantics
+                # (groupBy/dropDuplicates treat NULL keys as one group): with
+                # plain '=' a stored NULL-key row never anti-joins away, so
+                # NULL-keyed junk would accumulate one row per batch forever.
+                fresh_keys = fresh.select(*key_cols)
+                cond = None
+                for c in key_cols:
+                    e = current[c].eqNullSafe(fresh_keys[c])
+                    cond = e if cond is None else (cond & e)
+                merged = current.join(fresh_keys, cond, "left_anti").unionByName(
+                    fresh
+                )
+            else:
+                merged = fresh
+            merged.write.mode("overwrite").parquet(staging)
 
     return upsert
 

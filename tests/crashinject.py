@@ -1,12 +1,12 @@
 """Shared crash-injection helper for publish-protocol tests.
 
-Every two-phase publisher in the engine (jsonl sink, parquet MERGE,
-incremental rollup, streaming upsert) is tested by crashing its commit
-after each possible os-mutation count; this context manager is that
-fault injector, so each crash-matrix test is a few lines instead of a
-hand-rolled patch/count/raise/restore dance (and the restore can't be
-forgotten — leaking a patched os.rename would poison every later test
-in the Spark session).
+Every caller of ``sources.files.publish_parquet`` (parquet MERGE,
+incremental rollup, in-place compaction, the streaming upsert sink) is
+tested by crashing its publish after each possible os-mutation count;
+this context manager is that fault injector, so each crash-matrix test
+is a few lines instead of a hand-rolled patch/count/raise/restore dance
+(and the restore can't be forgotten — leaking a patched os.rename would
+poison every later test in the Spark session).
 """
 
 from __future__ import annotations

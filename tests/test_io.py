@@ -585,13 +585,31 @@ def test_merge_upsert_crash_retry_converges(spark, tmp_path, crash_after):
     assert not os.path.exists(protocol_sibling(base, "retired"))
 
 
+def test_parquet_publish_lives_in_files():
+    """Only ``sources/files.py`` renames or moves paths (comments and
+    docstrings included), so every parquet publish goes through its one
+    crash-safe swap, ``publish_parquet``."""
+    import re
+    from pathlib import Path
+
+    from bytesme_etl_batch_pipeline_spark.sources import files
+
+    package = Path(files.__file__).parents[1]
+    found = [
+        f"{path.relative_to(package).as_posix()}:{lineno}: {line.strip()}"
+        for path in sorted(package.rglob("*.py"))
+        if path != Path(files.__file__)
+        for lineno, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"os\.rename|os\.replace|shutil\.move", line)
+    ]
+    assert not found, "\n".join(found)
+
+
 def test_compact_parquet_inplace_preserves_rows(spark, tmp_path):
     """In-place compaction is pure layout: many small files collapse to
     few, the row multiset is bit-identical, and readers always see a
     complete table (staging swap, no second location needed)."""
-    from bytesme_etl_batch_pipeline_spark.sources.files import (
-        compact_parquet_inplace,
-    )
+    from bytesme_etl_batch_pipeline_spark.sources.files import compact_parquet
 
     path = str(tmp_path / "t")
     df = spark.range(0, 2000).selectExpr("id", "id % 7 as grp")
@@ -600,7 +618,7 @@ def test_compact_parquet_inplace_preserves_rows(spark, tmp_path):
     assert len(before_files) == 64
     before_rows = sorted(tuple(r) for r in spark.read.parquet(path).collect())
 
-    n = compact_parquet_inplace(spark, path, target_file_mb=128)
+    n = compact_parquet(spark, path, path, target_file_mb=128)
     after_files = [f for f in os.listdir(path) if f.endswith(".parquet")]
     assert n == len(after_files) == 1  # tiny table -> one right-sized file
     after_rows = sorted(tuple(r) for r in spark.read.parquet(path).collect())
@@ -616,9 +634,7 @@ def test_compact_parquet_inplace_crash_retry(spark, tmp_path, crash_after):
     idempotent — same rows, fresh layout)."""
     import shutil
 
-    from bytesme_etl_batch_pipeline_spark.sources.files import (
-        compact_parquet_inplace,
-    )
+    from bytesme_etl_batch_pipeline_spark.sources.files import compact_parquet
     from tests.crashinject import crash_after as _crash
 
     path = str(tmp_path / "t")
@@ -627,10 +643,10 @@ def test_compact_parquet_inplace_crash_retry(spark, tmp_path, crash_after):
 
     with _crash(crash_after, (os, "rename"), (shutil, "rmtree")):
         with pytest.raises(OSError, match="injected crash"):
-            compact_parquet_inplace(spark, path, target_file_mb=128)
+            compact_parquet(spark, path, path, target_file_mb=128)
     assert os.path.exists(path) or os.path.exists(protocol_sibling(path, "retired"))
 
-    n = compact_parquet_inplace(spark, path, target_file_mb=128)
+    n = compact_parquet(spark, path, path, target_file_mb=128)
     assert n == 1
     assert sorted(r["id"] for r in spark.read.parquet(path).collect()) == want
     assert not os.path.exists(protocol_sibling(path, "retired"))
@@ -675,9 +691,7 @@ def test_compact_parquet_inplace_preserves_partition_layout(spark, tmp_path):
     """Compacting a hive-partitioned table must keep the partition
     directory layout (and with it, partition pruning) — a flat rewrite
     would silently turn every partition-pruned scan into a full scan."""
-    from bytesme_etl_batch_pipeline_spark.sources.files import (
-        compact_parquet_inplace,
-    )
+    from bytesme_etl_batch_pipeline_spark.sources.files import compact_parquet
 
     path = str(tmp_path / "t")
     df = spark.range(0, 900).selectExpr("id", "id % 3 as part")
@@ -688,7 +702,7 @@ def test_compact_parquet_inplace_preserves_partition_layout(spark, tmp_path):
     assert len(glob.glob(os.path.join(path, "part=*", "*.parquet"))) > 6
     before = sorted((r["id"], r["part"]) for r in spark.read.parquet(path).collect())
 
-    n = compact_parquet_inplace(spark, path, target_file_mb=128)
+    n = compact_parquet(spark, path, path, target_file_mb=128)
     dirs = sorted(os.path.basename(d) for d in glob.glob(os.path.join(path, "part=*")))
     assert dirs == ["part=0", "part=1", "part=2"]  # layout preserved
     assert n == len(glob.glob(os.path.join(path, "part=*", "*.parquet"))) == 3
@@ -712,9 +726,7 @@ def test_compact_parquet_inplace_hot_partition_gets_multiple_files(spark, tmp_pa
     cluster-by-key compaction)."""
     import glob
 
-    from bytesme_etl_batch_pipeline_spark.sources.files import (
-        compact_parquet_inplace,
-    )
+    from bytesme_etl_batch_pipeline_spark.sources.files import compact_parquet
 
     path = str(tmp_path / "t")
     # hot partition: ~200k incompressible strings (md5 hex); cold: 100 rows
@@ -726,7 +738,7 @@ def test_compact_parquet_inplace_hot_partition_gets_multiple_files(spark, tmp_pa
     )
     hot.unionAll(cold).repartition(24).write.partitionBy("part").parquet(path)
 
-    compact_parquet_inplace(spark, path, target_file_mb=1)
+    compact_parquet(spark, path, path, target_file_mb=1)
     hot_files = glob.glob(os.path.join(path, "part=0", "*.parquet"))
     cold_files = glob.glob(os.path.join(path, "part=1", "*.parquet"))
     assert len(cold_files) == 1
@@ -744,9 +756,7 @@ def test_compact_partitioned_crash_retry_converges(spark, tmp_path, crash_after)
     the same rows with the hive layout (and partition VALUES) intact."""
     import shutil
 
-    from bytesme_etl_batch_pipeline_spark.sources.files import (
-        compact_parquet_inplace,
-    )
+    from bytesme_etl_batch_pipeline_spark.sources.files import compact_parquet
     from tests.crashinject import crash_after as _crash
 
     path = str(tmp_path / "t")
@@ -758,9 +768,9 @@ def test_compact_partitioned_crash_retry_converges(spark, tmp_path, crash_after)
 
     with _crash(crash_after, (os, "rename"), (shutil, "rmtree")):
         with pytest.raises(OSError, match="injected crash"):
-            compact_parquet_inplace(spark, path, target_file_mb=128)
+            compact_parquet(spark, path, path, target_file_mb=128)
 
-    n = compact_parquet_inplace(spark, path, target_file_mb=128)
+    n = compact_parquet(spark, path, path, target_file_mb=128)
     assert n == 3  # one right-sized file per leaf
     got = sorted((r["id"], r["part"]) for r in spark.read.parquet(path).collect())
     assert got == want
@@ -918,10 +928,7 @@ def test_compact_mixed_layout_raises(spark, tmp_path):
     partition values to them either)."""
     import shutil
 
-    from bytesme_etl_batch_pipeline_spark.sources.files import (
-        compact_parquet,
-        compact_parquet_inplace,
-    )
+    from bytesme_etl_batch_pipeline_spark.sources.files import compact_parquet
 
     path = str(tmp_path / "t")
     spark.range(0, 100).selectExpr(
@@ -938,7 +945,7 @@ def test_compact_mixed_layout_raises(spark, tmp_path):
     shutil.copy(part_file, os.path.join(path, "loose-00000.parquet"))
 
     with pytest.raises(ValueError, match="mixed layout"):
-        compact_parquet_inplace(spark, path)
+        compact_parquet(spark, path, path)
     with pytest.raises(ValueError, match="mixed layout"):
         compact_parquet(spark, path, str(tmp_path / "dst"))
 
@@ -1002,22 +1009,6 @@ def test_read_csv_multi_line_contract(spark, tmp_path):
     assert read_csv(spark, p, multi_line=False).count() == 100
     with pytest.raises(ValueError, match="with_lineage=True requires"):
         read_csv(spark, p, with_lineage=True, multi_line=False)
-
-
-def test_jdbc_staging_suffix_rejects_degenerate_values(spark):
-    """An empty suffix makes staging == the live table (the overwrite hits
-    production directly); '_retired' collides with the parking name."""
-    from bytesme_etl_batch_pipeline_spark.sources.jdbc import (
-        write_jdbc_exactly_once,
-    )
-
-    df = spark.range(1)
-    with pytest.raises(ValueError, match="non-empty identifier"):
-        write_jdbc_exactly_once(df, "jdbc:derby:memory:x", "t", staging_suffix="")
-    with pytest.raises(ValueError, match="collides with the parking name"):
-        write_jdbc_exactly_once(
-            df, "jdbc:derby:memory:x", "t", staging_suffix="_retired"
-        )
 
 
 def test_urllib_fetcher_returns_http_error_status(monkeypatch):

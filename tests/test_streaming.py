@@ -495,10 +495,6 @@ def test_incremental_dedup_stream_exactly_once(spark, tmp_path):
     b3 = [(6, "gamma doc"), (7, "delta doc")]
     step(spark.createDataFrame(b3, schema), 2)
     assert sorted(_os2.listdir(digests)) == ["v=1", "v=2"]  # v=0 pruned
-    # retention below the correctness minimum is rejected loudly: 1 would
-    # delete the version a redelivered batch must re-read
-    with pytest.raises(ValueError, match="retain_digest_versions"):
-        make_incremental_dedup_step("text", corpus, digests, retain_digest_versions=1)
     step(spark.createDataFrame(b3, schema), 2)  # redelivery after prune
     got3 = sorted(r["text"] for r in spark.read.parquet(corpus).collect())
     assert got3 == ["alpha doc", "beta doc", "delta doc", "gamma doc"]
@@ -693,63 +689,131 @@ def test_streaming_session_restart_recovers_state(spark, sf_dir, tmp_path):
     )
 
 
+def _upsert_batches(spark):
+    schema = "k long, v string"
+    return (
+        spark.createDataFrame([(1, "a"), (2, "b")], schema),
+        spark.createDataFrame([(2, "B"), (3, "c")], schema),
+    )
+
+
 @pytest.mark.parametrize("crash_after", [0, 1, 2, 3])
 def test_upsert_sink_crash_retry_never_loses_store(spark, tmp_path, crash_after):
-    """Crash the upsert publish after each possible mutation count: a
-    readable pre-batch-or-newer copy (target or .old) must survive every
-    window, and a clean redelivery must converge to the batch-wins
-    result."""
+    """Crash the upsert publish after each mutation count: 0-2 crash at
+    the swap's three mutations (rename target aside, promote staging,
+    drop the retired copy), 3 runs clean. A readable pre-batch-or-newer
+    copy (target or its retired sibling) must survive every window, and a
+    clean redelivery must converge to the batch-wins result."""
     import shutil
 
-    from bytesme_etl_batch_pipeline_spark.streaming.events import make_upsert_step
-
-    target = str(tmp_path / "t")
-    step = make_upsert_step(["k"], target)
-    step(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), 0)
-    b2 = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
-
+    from bytesme_etl_batch_pipeline_spark.sources.files import protocol_sibling
     from tests.crashinject import crash_after as _crash
 
-    with _crash(crash_after, (shutil, "move"), (shutil, "rmtree")):
+    target = str(tmp_path / "t")
+    step = stream_events.make_upsert_step(["k"], target)
+    b1, b2 = _upsert_batches(spark)
+    step(b1, 0)
+
+    with _crash(crash_after, (os, "rename"), (shutil, "rmtree")) as calls:
         try:
             step(b2, 1)
             crashed = False
         except OSError:
             crashed = True
+    assert crashed == (crash_after < 3)
+    assert calls[0] == crash_after
 
-    assert os.path.isdir(target) or os.path.isdir(target + ".old")
+    retired = protocol_sibling(target, "retired")
+    assert os.path.isdir(target) or os.path.isdir(retired)
     if crashed:
         step(b2, 1)  # the clean at-least-once redelivery
     got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
     assert got == {1: "a", 2: "B", 3: "c"}
-    assert not os.path.isdir(target + ".old")
+    assert not os.path.exists(retired)
+    assert not os.path.exists(protocol_sibling(target, "staging"))
 
 
 def test_upsert_sink_double_crash_keeps_a_copy(spark, tmp_path):
-    """The two-crash sequence the previous publish order lost: crash
-    mid-swap (only .old survives), then crash the REDELIVERY after its
-    first mutation. .old must still be deleted only after target is back,
-    so a copy survives and the third attempt converges."""
+    """Two crashes in a row: crash mid-swap (only the retired sibling
+    holds the store), then crash the redelivery at the same point, after
+    its entry recovery restored the store and dropped the stale staging
+    dir (mutations 0-1) and its swap retired it again (2). A copy
+    survives both, and the third attempt converges."""
     import shutil
 
-    from bytesme_etl_batch_pipeline_spark.streaming.events import make_upsert_step
-
-    target = str(tmp_path / "t2")
-    step = make_upsert_step(["k"], target)
-    step(spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), 0)
-    b2 = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
-
+    from bytesme_etl_batch_pipeline_spark.sources.files import protocol_sibling
     from tests.crashinject import crash_after as _crash
 
-    for n in (2, 1):  # mid-swap crash, then crash retry after 1 mutation
-        with _crash(n, (shutil, "move"), (shutil, "rmtree")):
+    target = str(tmp_path / "t2")
+    step = stream_events.make_upsert_step(["k"], target)
+    b1, b2 = _upsert_batches(spark)
+    step(b1, 0)
+
+    for n in (1, 3):
+        with _crash(n, (os, "rename"), (shutil, "rmtree")):
             with pytest.raises(OSError, match="injected crash"):
                 step(b2, 1)
-        assert os.path.isdir(target) or os.path.isdir(target + ".old")
+        assert not os.path.isdir(target)
+        assert os.path.isdir(protocol_sibling(target, "retired"))
 
     step(b2, 1)
     got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
     assert got == {1: "a", 2: "B", 3: "c"}
+
+
+@pytest.mark.parametrize("crash_after", [0, 1, 2])
+def test_upsert_sink_protocol_dirs_invisible_to_partitioned_readers(
+    spark, tmp_path, crash_after
+):
+    """An upsert store at ``root/part=0`` is one partition of the table
+    at ``root``. While a crashed batch's protocol dirs sit beside it, a
+    reader of ``root`` must see only ``part=0`` rows — never a junk
+    partition value such as ``0.old`` or ``0.tmp`` — and the redelivery
+    must converge."""
+    import shutil
+
+    from tests.crashinject import crash_after as _crash
+
+    root = str(tmp_path / "tbl")
+    step = stream_events.make_upsert_step(["k"], os.path.join(root, "part=0"))
+    b1, b2 = _upsert_batches(spark)
+    step(b1, 0)
+
+    with _crash(crash_after, (os, "rename"), (shutil, "rmtree")):
+        with pytest.raises(OSError, match="injected crash"):
+            step(b2, 1)
+    rows = spark.read.schema("k long, v string").parquet(root).collect()
+    assert {str(r["part"]) for r in rows} <= {"0"}
+    assert {r["k"]: r["v"] for r in rows} in (
+        {},  # mid-swap: the store is parked at its hidden retired sibling
+        {1: "a", 2: "b"},
+        {1: "a", 2: "B", 3: "c"},
+    )
+
+    step(b2, 1)
+    rows = spark.read.parquet(root).collect()
+    assert sorted((r["k"], r["v"], r["part"]) for r in rows) == [
+        (1, "a", 0), (2, "B", 0), (3, "c", 0)
+    ]
+
+
+def test_upsert_sink_restores_store_parked_by_old_sink(spark, tmp_path):
+    """Upgrade safety: the sink's earlier publish parked the store at
+    ``<target>.old`` and staged at ``<target>.tmp``; a crash between its
+    two renames left ``.old`` as the only copy. The next batch must merge
+    into that store, not read a first load, and leave neither dir."""
+    target = str(tmp_path / "t")
+    step = stream_events.make_upsert_step(["k"], target)
+    b1, b2 = _upsert_batches(spark)
+    step(b1, 0)
+    os.rename(target, target + ".old")
+    os.makedirs(target + ".tmp")
+
+    step(b2, 1)
+    got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
+    assert got == {1: "a", 2: "B", 3: "c"}
+    assert not os.path.exists(target + ".old")
+    assert not os.path.exists(target + ".tmp")
 
 
 def test_upsert_sink_null_order_and_null_keys(spark, tmp_path):
