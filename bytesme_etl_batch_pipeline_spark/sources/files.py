@@ -182,8 +182,6 @@ def compact_parquet(
     a junk ``key=value__staging`` partition value. Schedule against live
     tables accordingly, or use the catalog-swap JDBC sink shape where
     readers must never miss."""
-    # without root recovery, os.listdir(src) below would raise on a
-    # table parked whole at its retired sibling
     recover_retired(src_path)
     recover_retired_tree(src_path)
     total = 0

@@ -563,7 +563,7 @@ def test_merge_upsert_crash_retry_converges(spark, tmp_path, crash_after):
     base = str(tmp_path / "t")
     schema = "k long, v string, version long, deleted boolean"
     b1 = spark.createDataFrame(
-        [(1, "a", 1, False), (2, "b", 1, False)], schema
+        [(1, "a", 1, False), (2, "b", 1, False), (4, "d", 1, False)], schema
     )
     merge_upsert_parquet(spark, base, b1, ["k"], "version", "deleted")
     b2 = spark.createDataFrame(
@@ -579,9 +579,10 @@ def test_merge_upsert_crash_retry_converges(spark, tmp_path, crash_after):
     # some complete copy (pre- or post-merge) is always readable
     assert os.path.exists(base) or os.path.exists(protocol_sibling(base, "retired"))
     n = merge_upsert_parquet(spark, base, b2, ["k"], "version", "deleted")
-    assert n == 2
+    assert n == 3
     got = {r["k"]: r["v"] for r in spark.read.parquet(base).collect()}
-    assert got == {2: "B", 3: "c"}  # k=1 deleted, k=2 replaced, k=3 new
+    # k=1 deleted, k=2 replaced, k=3 new, k=4 (base only) kept
+    assert got == {2: "B", 3: "c", 4: "d"}
     assert not os.path.exists(protocol_sibling(base, "retired"))
 
 
