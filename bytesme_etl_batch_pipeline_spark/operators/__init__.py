@@ -1,6 +1,18 @@
 """Operator library (SURVEY §2). Every operator is a pure
 ``DataFrame -> DataFrame`` function — composable, streaming-compatible.
 
+Building a plan from Python costs one py4j round trip per JVM call, so two
+rules hold for the operators on the ETL path:
+
+* Constant expressions are built once per process: a Column that depends
+  only on column names, rules or seeds comes from a ``functools.lru_cache``
+  keyed on those hashable specs (a Column is a JVM expression tree not tied
+  to a session, so it stays valid after ``spark.stop()`` and a new session).
+* Each operator is one projection: its new and replaced columns go into
+  one ``withColumns`` or ``select`` (``functions.project`` when columns are
+  also dropped), a replaced column keeping its position, instead of a
+  ``withColumn`` chain that runs the analyzer once per call.
+
 The names below are the engine's public operator API; see COVERAGE.md for
 the reference-operator → implementation map.
 """

@@ -10,9 +10,9 @@ Scale contract for ids (SURVEY §7 hard part 4):
 
 from __future__ import annotations
 
-from functools import reduce
+import functools
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -29,13 +29,18 @@ def collapse_first_wins(df: DataFrame, key: str, attrs: list[str], order_by: lis
     Determinism contract: ``order_by`` must be non-null and UNIQUE per key
     (the engine's stable-key contract — e.g. file+row lineage or a natural
     key). On order ties ``min_by`` picks an arbitrary tied row."""
+    pick, fields = _first_wins(key, tuple(attrs), tuple(order_by))
+    return df.groupBy(key).agg(pick).select(*fields)
+
+
+@functools.lru_cache(maxsize=32)
+def _first_wins(
+    key: str, attrs: tuple[str, ...], order_by: tuple[str, ...]
+) -> tuple[Column, tuple[Column, ...]]:
     ord_struct = F.struct(*[F.col(c).alias(f"o{i}") for i, c in enumerate(order_by)])
     val_struct = F.struct(*[F.col(a).alias(f"a{i}") for i, a in enumerate(attrs)])
-    return (
-        df.groupBy(key)
-        .agg(F.min_by(val_struct, ord_struct).alias("__p"))
-        .select(key, *[F.col(f"__p.a{i}").alias(a) for i, a in enumerate(attrs)])
-    )
+    fields = (F.col(key), *[F.col(f"__p.a{i}").alias(a) for i, a in enumerate(attrs)])
+    return F.min_by(val_struct, ord_struct).alias("__p"), fields
 
 
 def dense_ids(df: DataFrame, id_col: str, order_by: list[str]) -> DataFrame:
@@ -45,8 +50,7 @@ def dense_ids(df: DataFrame, id_col: str, order_by: list[str]) -> DataFrame:
     default is NULLS FIRST, the opposite of the DuckDB/Postgres ORDER BY
     default — one NULL dim value would silently shift EVERY id by one
     between engines."""
-    w = Window.orderBy(*[F.col(c).asc_nulls_last() for c in order_by])
-    return df.withColumn(id_col, F.row_number().over(w))
+    return df.withColumn(id_col, _sequence((), tuple(order_by)))
 
 
 def hash_ids(df: DataFrame, id_col: str, key_cols: list[str], hash_fn=None) -> DataFrame:
@@ -60,13 +64,15 @@ def hash_ids(df: DataFrame, id_col: str, key_cols: list[str], hash_fn=None) -> D
     so hashing would alias a NULL key with the empty-string key (and, for
     multi-column keys, ``(a, NULL)`` with ``(NULL, a)``) — a corrupt row
     must never inherit a clean row's identity."""
-    hash_fn = hash_fn or F.xxhash64
-    all_present = reduce(
+    return df.withColumn(id_col, _hash_id(tuple(key_cols), hash_fn or F.xxhash64))
+
+
+@functools.lru_cache(maxsize=32)
+def _hash_id(key_cols: tuple[str, ...], hash_fn) -> Column:
+    all_present = functools.reduce(
         lambda a, b: a & b, [F.col(c).isNotNull() for c in key_cols]
     )
-    return df.withColumn(
-        id_col, F.when(all_present, hash_fn(*[F.col(c) for c in key_cols]))
-    )
+    return F.when(all_present, hash_fn(*[F.col(c) for c in key_cols]))
 
 
 def group_sequence(
@@ -76,10 +82,15 @@ def group_sequence(
     ``generate_mock_data.py:82-103``). One shuffle on the group key; each
     group numbers independently so this scales with group cardinality.
     NULLS LAST (SQL ORDER BY default) — see ``dense_ids``."""
+    return df.withColumn(out_col, _sequence(tuple(partition_by), tuple(order_by)))
+
+
+@functools.lru_cache(maxsize=32)
+def _sequence(partition_by: tuple[str, ...], order_by: tuple[str, ...]) -> Column:
     w = Window.partitionBy(*partition_by).orderBy(
         *[F.col(c).asc_nulls_last() for c in order_by]
     )
-    return df.withColumn(out_col, F.row_number().over(w))
+    return F.row_number().over(w)
 
 
 def sequence_code(
@@ -92,19 +103,24 @@ def sequence_code(
     """A2 full form: ``{BRAND[:2]}-{GROUP[:2]}-{NNN}`` codes
     (reference ``generate_mock_data.py:11-16``), built from the per-group
     sequence with pure string expressions."""
-    df = group_sequence(df, [group_col], order_by, "__seq")
+    return df.withColumn(out_col, sequence_code_column(brand_col, group_col, tuple(order_by)))
+
+
+@functools.lru_cache(maxsize=32)
+def sequence_code_column(brand_col: str, group_col: str, order_by: tuple[str, ...]) -> Column:
+    """``sequence_code``'s code as one Column, the ``group_sequence``
+    window inlined (one projection, no helper column)."""
     # NULL components -> NULL code (SQL printf/|| semantics), NOT the
     # literal string "null" that Spark's format_string would render
-    code = F.when(
+    return F.when(
         F.col(brand_col).isNotNull() & F.col(group_col).isNotNull(),
         F.format_string(
             "%s-%s-%03d",
             F.upper(F.substring(F.col(brand_col), 1, 2)),
             F.upper(F.substring(F.col(group_col), 1, 2)),
-            F.col("__seq"),
+            _sequence((group_col,), order_by),
         ),
     )
-    return df.withColumn(out_col, code).drop("__seq")
 
 
 def salted_count(

@@ -16,10 +16,13 @@ no join, no shuffle; at 100 TB this runs map-side at scan speed.
 
 from __future__ import annotations
 
+import functools
 import re
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions import project
 
 
 def build_rule_cascade(
@@ -43,7 +46,29 @@ def build_rule_cascade(
     taxonomies that never pipe-join.
     Tier 2 = exact lowercase match on ``raw_col`` variants.
     Tier 3 = case-insensitive regex of escaped variants against ``name_col``.
+
+    The cascade is built once per distinct argument set in a process
+    (``_rule_cascade``): the same rules give the same Column.
     """
+    return _rule_cascade(
+        name_col,
+        raw_col,
+        tuple((cat, tuple(variants)) for cat, variants in rules),
+        tuple(tuple(case) for case in special_cases or ()),
+        default,
+        special_multivalued_guard,
+    )
+
+
+@functools.lru_cache(maxsize=32)
+def _rule_cascade(
+    name_col: str,
+    raw_col: str,
+    rules: tuple[tuple[str, tuple[str, ...]], ...],
+    special_cases: tuple[tuple[str, str], ...],
+    default: str,
+    special_multivalued_guard: bool,
+) -> Column:
     raw = F.lower(F.trim(F.col(raw_col)))
     # Reference lowercases the name before the regex search (:40). Lowering
     # here (not just ``(?i)``) also gives full-Unicode folding — Java's
@@ -56,7 +81,7 @@ def build_rule_cascade(
         nonlocal expr
         expr = F.when(cond, F.lit(value)) if expr is None else expr.when(cond, F.lit(value))
 
-    for needle, cat in special_cases or []:
+    for needle, cat in special_cases:
         cond = raw.contains(needle.lower())
         if special_multivalued_guard:
             cond = raw.contains("|") & cond
@@ -88,13 +113,11 @@ def standardize_categories(
     """C1 as a DataFrame op: project the cascade, drop the raw column
     (reference drops ``original_category`` after mapping,
     ``scripts/pipeline.py:58-63``)."""
-    return df.withColumn(
-        out_col,
-        build_rule_cascade(
-            name_col, raw_col, rules, special_cases, default,
-            special_multivalued_guard=special_multivalued_guard,
-        ),
-    ).drop(raw_col)
+    cascade = build_rule_cascade(
+        name_col, raw_col, rules, special_cases, default,
+        special_multivalued_guard=special_multivalued_guard,
+    )
+    return project(df, {out_col: cascade}, drop=[raw_col])
 
 
 # The reference's CATEGORIES_MAPPING verbatim (``standardize_categories.py:

@@ -21,7 +21,9 @@ ranking within the same exchange, and its result is reproducible.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import functools
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -38,10 +40,17 @@ def dedup_keep_first(df: DataFrame, keys: list[str], order_by: list[str]) -> Dat
     100 TB inputs the exchange shrinks by the duplication factor, where a
     window would ship and sort every row (~2× faster even at sf0.1).
     """
+    pick, fields = _keep_first(tuple(df.columns), tuple(order_by))
+    return df.groupBy(*keys).agg(pick).select(*fields)
+
+
+@functools.lru_cache(maxsize=32)
+def _keep_first(
+    columns: tuple[str, ...], order_by: tuple[str, ...]
+) -> tuple[Column, tuple[Column, ...]]:
     ordk = F.struct(*[F.col(c) for c in order_by])
-    row = F.struct(*[F.col(c) for c in df.columns])
-    agg = df.groupBy(*keys).agg(F.min_by(row, ordk).alias("__r"))
-    return agg.select(*[F.col(f"__r.{c}").alias(c) for c in df.columns])
+    row = F.struct(*[F.col(c) for c in columns])
+    return F.min_by(row, ordk).alias("__r"), tuple(F.col(f"__r.{c}").alias(c) for c in columns)
 
 
 def dedup_distinct(df: DataFrame, cols: list[str] | None = None) -> DataFrame:

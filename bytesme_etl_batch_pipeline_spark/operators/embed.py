@@ -94,12 +94,20 @@ def embed_column(text: Column, embedder_factory=HashEmbedder, **kwargs) -> Colum
     """Column-level embedding via Arrow-batched pandas UDF. The embedder is
     built lazily once per worker process (``_embedder``), mirroring the
     reference's lazy singleton at ``generate_embeddings.py:245-261``.
-    ``kwargs`` values must be hashable: they key that cache."""
-    key = tuple(sorted(kwargs.items()))
+    ``kwargs`` values must be hashable: they key that cache and the
+    driver's ``_embed_udf``."""
+    return _embed_udf(embedder_factory, tuple(sorted(kwargs.items())))(text)
+
+
+@functools.lru_cache(maxsize=16)
+def _embed_udf(embedder_factory, key: tuple):
+    """The pandas UDF for one (factory, kwargs), made once per driver
+    process: PySpark pickles its closure and makes its JVM function on the
+    first call only, so later ``embed_column`` calls reuse both."""
 
     @F.pandas_udf(ArrayType(FloatType()))
     def _embed(texts: pd.Series) -> pd.Series:
         model = _embedder(embedder_factory, key)
         return pd.Series(model.encode(texts.fillna("").tolist()))
 
-    return _embed(text)
+    return _embed

@@ -8,6 +8,7 @@ the Beta sampler (no closed-form inverse CDF → Arrow-batched pandas UDF).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 import pandas as pd
@@ -17,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from ..functions import seeded
-from .aggregate import sequence_code
+from .aggregate import sequence_code_column
 
 
 @F.pandas_udf(DoubleType())
@@ -57,21 +58,25 @@ def enrich_products(
     """Full enrichment pass (reference ``generate_mock_data.py`` pipeline
     stage): per-category product codes, seeded discount/ratings/orders/stars,
     zero-price defaulting. One window shuffle (codes); everything else is
-    map-side."""
+    map-side. One projection: the new columns are appended in that order
+    and ``price_col`` is replaced where it stands."""
+    return df.withColumns(dict(_enrichment(key_col, brand_col, category_col, price_col, seed)))
+
+
+@functools.lru_cache(maxsize=32)
+def _enrichment(
+    key_col: str, brand_col: str, category_col: str, price_col: str, seed: int
+) -> tuple[tuple[str, Column], ...]:
     key = F.col(key_col)
-    df = sequence_code(
-        df, brand_col=brand_col, group_col=category_col, order_by=[key_col]
-    )
+    price = F.col(price_col)
     return (
-        df.withColumn("product_discount_percentage", seeded.discount_column(key, seed))
-        .withColumn("product_total_ratings", seeded.ratings_column(key, seed))
-        .withColumn("product_total_orders", seeded.orders_column(key, seed))
-        .withColumn("product_overall_stars", stars_column(key))
-        .withColumn(
+        ("product_code", sequence_code_column(brand_col, category_col, (key_col,))),
+        ("product_discount_percentage", seeded.discount_column(key, seed)),
+        ("product_total_ratings", seeded.ratings_column(key, seed)),
+        ("product_total_orders", seeded.orders_column(key, seed)),
+        ("product_overall_stars", stars_column(key)),
+        (
             price_col,
-            F.when(
-                F.col(price_col).isNull() | (F.col(price_col) <= 0),
-                default_price(key, seed),
-            ).otherwise(F.col(price_col)),
-        )
+            F.when(price.isNull() | (price <= 0), default_price(key, seed)).otherwise(price),
+        ),
     )

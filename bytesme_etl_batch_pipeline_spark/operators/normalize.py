@@ -16,11 +16,13 @@ hard part 4).
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import column
 from .aggregate import collapse_first_wins, dense_ids, hash_ids
 from .joins import resolve_key
 
@@ -36,23 +38,41 @@ def explode_piped_pairs(
     """X1: explode parallel pipe-delimited url/name strings into child rows;
     empty names fall back to ``fallback_col`` (reference
     ``seperate_tables.py:81-106``: multi-image and single-image shapes,
-    name fallback at :86,101)."""
-    pairs = F.arrays_zip(
-        F.split(F.col(url_col), r"\|").alias("u"),
-        F.split(F.coalesce(F.col(name_col), F.lit("")), r"\|").alias("n"),
-    )
-    exploded = df.withColumn("__pair", F.explode(pairs))
-    return (
-        exploded.withColumn(out_url, F.trim(F.col("__pair.u")))
-        .withColumn(
-            out_name,
+    name fallback at :86,101).
+
+    One projection: each row's children are built and filtered as an array
+    and ``inline``d, so ``out_url``/``out_name`` are appended (or replace
+    a column of that name where it stands, as ``withColumn`` would)."""
+    children = _children(url_col, name_col, fallback_col, out_url, out_name)
+    names = df.columns
+    kept = [c for c in names if c not in (out_url, out_name)]
+    out = df.select(*[column(c) for c in kept], children)
+    if len(kept) == len(names):
+        return out
+    # a replaced column keeps its position
+    new = [c for c in (out_url, out_name) if c not in names]
+    return out.select(*[column(c) for c in names + new])
+
+
+@functools.lru_cache(maxsize=32)
+def _children(
+    url_col: str, name_col: str, fallback_col: str, out_url: str, out_name: str
+) -> Column:
+    """``inline`` of the (url, name) children of one row: the two split
+    lists zipped (the shorter padded with NULL), the url trimmed, an empty
+    name replaced by ``fallback_col``, children without a url dropped."""
+    pairs = F.zip_with(
+        F.split(F.col(url_col), r"\|"),
+        F.split(F.coalesce(F.col(name_col), F.lit("")), r"\|"),
+        lambda u, n: F.struct(
+            F.trim(u).alias(out_url),
             F.coalesce(
-                F.nullif(F.trim(F.col("__pair.n")), F.lit("")),
-                F.col(fallback_col).cast("string"),
-            ),
-        )
-        .drop("__pair")
-        .filter(F.col(out_url).isNotNull() & (F.col(out_url) != ""))
+                F.nullif(F.trim(n), F.lit("")), F.col(fallback_col).cast("string")
+            ).alias(out_name),
+        ),
+    )
+    return F.inline(
+        F.filter(pairs, lambda p: p[out_url].isNotNull() & (p[out_url] != ""))
     )
 
 

@@ -21,10 +21,13 @@ equality contract.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..ckpt import materialize
+from ..functions import project
 from ..functions.arrays import lit_doubles_2d
 from ..session import shuffle_width
 from .ml import collect_sample, lloyd, nearest_cells, nearest_centroid_udf
@@ -74,20 +77,26 @@ def topk_brute_force(
     the reference)."""
     if metric not in ("cosine", "l2"):
         raise ValueError(f"metric must be 'cosine' or 'l2', got {metric!r}")
+    scores, order = _scoring(vec_col, query_col, id_col, metric)
     joined = vectors.crossJoin(F.broadcast(query))
+    return project(joined, dict(scores), drop=[query_col]).orderBy(*order).limit(k)
+
+
+@functools.lru_cache(maxsize=32)
+def _scoring(
+    vec_col: str, query_col: str, id_col: str, metric: str
+) -> tuple[tuple[tuple[str, Column], ...], tuple[Column, Column]]:
+    """``topk_brute_force``'s score columns and sort order."""
     a, q = F.col(vec_col), F.col(query_col)
     if metric == "cosine":
         # desc is NULLS LAST — a NULL embedding (NULL score) sorts out
-        scored = joined.withColumn("score", F.round(cosine_similarity(a, q), 6))
-        order = [F.col("score").desc(), F.col(id_col)]
-    else:
-        scored = joined.withColumn("distance", F.round(l2_distance(a, q), 6)).withColumn(
-            "score", F.lit(1.0) - F.col("distance")
-        )
-        # ascending is NULLS FIRST: without nulls_last a NULL embedding
-        # (NULL distance) would displace every real candidate from top-k
-        order = [F.col("distance").asc_nulls_last(), F.col(id_col)]
-    return scored.orderBy(*order).limit(k).drop(query_col)
+        scores = (("score", F.round(cosine_similarity(a, q), 6)),)
+        return scores, (F.col("score").desc(), F.col(id_col))
+    distance = F.round(l2_distance(a, q), 6)
+    scores = (("distance", distance), ("score", F.lit(1.0) - distance))
+    # ascending is NULLS FIRST: without nulls_last a NULL embedding
+    # (NULL distance) would displace every real candidate from top-k
+    return scores, (F.col("distance").asc_nulls_last(), F.col(id_col))
 
 
 def pairs_above_threshold(

@@ -23,17 +23,35 @@ so ``get_spark`` sets the conf only when the driver's cwd or a
 ``PYTHONPATH`` entry holds the package's parent directory (the engine's
 UDFs need the same). A cluster deploy that ships the package on the
 executors' ``PYTHONPATH`` sets the same conf in its spark-submit config.
+
+PySpark's per-call origin capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). With it on, every
+``F.*`` call and Column method makes six extra JVM round trips
+(``getActiveSession``, ``isDefined``, ``get``, ``PySparkCurrentOrigin.set``,
+``clear`` and a conf read) to record the Python file:line that built the
+expression. A warm build of ``read_csv`` and the three reference pipeline
+stages over one CSV took 2,837 round trips with it and 1,107 without (4
+cores); that capture was most of the driver time of an ETL pass in which
+no Spark job ran. The cost: an analysis or runtime error raised from a Column no longer
+carries PySpark's "DataFrame context" (the Python line that built it).
+``run_pipeline`` errors still name the stage and the input, and the error
+message itself is unchanged.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
+import pyspark.errors.utils as pyspark_errors_utils
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import SparkSession
 
 from .sources.tables import ensure_session_confs
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+ORIGIN_CAPTURE_CONF = "spark.python.sql.dataFrameDebugging.enabled"
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -84,11 +102,16 @@ def get_spark(
         # re-shuffle per round anyway, so the cached partitioning is not a
         # co-location contract anywhere in this engine.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        .config(ORIGIN_CAPTURE_CONF, "false")
     )
     for k, v in {**worker_daemon_conf(), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     ensure_session_confs(spark)
+    # PySpark reads the capture switch once per process; drop that cached
+    # read so a session built here holds even when an earlier session of
+    # this process was read first.
+    pyspark_errors_utils._enable_debugging_cache = None
     return spark
 
 
@@ -101,3 +124,24 @@ def shuffle_width(spark: SparkSession) -> int:
         return int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         return spark.sparkContext.defaultParallelism
+
+
+@contextlib.contextmanager
+def gateway_round_trips() -> Iterator[dict[str, int]]:
+    """Count the py4j commands this process sends to the JVM while the
+    block runs, in the yielded ``{"n": count}``: each is one round trip of
+    plan construction. GC dereferences (``m\\nd\\n``) are left out; their
+    number depends on when Python collects garbage."""
+    seen = {"n": 0}
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            seen["n"] += 1
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield seen
+    finally:
+        ClientServerConnection.send_command = send

@@ -16,11 +16,12 @@ Schemas are explicit by default (`inferSchema` is the fallback, SURVEY §1.3).
 from __future__ import annotations
 
 import contextlib
+import functools
 import os
 import shutil
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -88,18 +89,21 @@ def read_csv(
         reader = reader.option("inferSchema", True)
     df = reader.csv(path)
     if with_lineage:
-        from pyspark.sql import Window
-
-        df = df.withColumn("source_file", F.input_file_name()).withColumn(
-            "row_pos",
-            F.row_number().over(
-                Window.partitionBy("source_file").orderBy(
-                    F.monotonically_increasing_id()
-                )
-            )
-            - 1,
-        )
+        df = df.withColumns(dict(_lineage()))
     return df
+
+
+@functools.lru_cache(maxsize=1)
+def _lineage() -> tuple[tuple[str, Column], ...]:
+    """``read_csv``'s lineage columns, one projection. The window
+    partitions on the file name expression itself: the analyzer evaluates
+    it, like ``source_file``, below the window's shuffle, in the scan task
+    that knows the file."""
+    from pyspark.sql import Window
+
+    source_file = F.input_file_name()
+    order = Window.partitionBy(source_file).orderBy(F.monotonically_increasing_id())
+    return ("source_file", source_file), ("row_pos", F.row_number().over(order) - 1)
 
 
 def read_json(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:

@@ -337,7 +337,7 @@ def test_profile_splits_one_query_by_job_group() -> None:
     prof = _profile_tool()
     log = prof.parse_event_log(str(EVENTLOG))
     build, end = (1001.5, 1002.8), 1004.5
-    fields = prof.repeat_fields(log, "p0.q1", build, end, 0.25, 2.0, 3)
+    fields = prof.repeat_fields(log, "p0.q1", build, end, 0.25, 2.0, 3, 120)
     assert fields["exec.jobs"] == 2 and fields["exec.stages"] == 3
     assert fields["exec.tasks"] == 4
     assert fields["queries.build_jobs"] == 1
@@ -346,6 +346,7 @@ def test_profile_splits_one_query_by_job_group() -> None:
     assert fields["wall_s"] == 3.0
     assert fields["ckpt.s"] == 0.25 and fields["ckpt.calls"] == 2
     assert fields["ckpt.pinned_rdds"] == 3
+    assert fields["build.py4j_calls"] == 120
     assert fields["spark.slowest_stage_s"] == 0.8
     assert fields["spark.shuffle_read_bytes"] == 1000
     assert fields["spark.shuffle_write_bytes"] == 1000  # check job's 99999 excluded
@@ -363,6 +364,7 @@ def test_profile_splits_one_query_by_job_group() -> None:
         "ckpt.s",
         "ckpt.calls",
         "ckpt.pinned_rdds",
+        "build.py4j_calls",
         "exec.s",
         "exec.jobs",
         "exec.stages",
@@ -384,7 +386,7 @@ def test_profile_attributes_untagged_jobs_by_time() -> None:
     Job = type(log.jobs[1])
     log.jobs[10] = Job(10, "0682c1f8-stream-run-id", 1002.6, 1002.7, stage_ids=[])
     log.jobs[11] = Job(11, None, 1005.0, 1005.5, stage_ids=[])
-    fields = prof.repeat_fields(log, "p0.q1", (1001.5, 1002.8), 1004.5, 0.0, 0.0, 0)
+    fields = prof.repeat_fields(log, "p0.q1", (1001.5, 1002.8), 1004.5, 0.0, 0.0, 0, 0)
     assert fields["queries.build_jobs"] == 2
     assert fields["queries.build_pure_s"] == 0.7
     assert fields["exec.jobs"] == 3

@@ -4,7 +4,8 @@
 ``bench.py``'s sf0.1). Each repeat builds the plan and runs ``count()`` under
 job groups ``"<query>#<rep>:build"`` / ``":action"``; ``perfbench/tracing.py``
 splits them. Prints one JSON line: host probe, per-query min wall,
-``total_min``, errors and per-repeat fields (``repeat_fields``)."""
+``total_min``, errors and per-repeat fields (``repeat_fields``), among them
+``build.py4j_calls``, the py4j round trips of the build."""
 
 import argparse
 import dataclasses
@@ -39,16 +40,17 @@ def op_log(log: EventLog, op: str, build: tuple[float, float], end: float) -> Ev
 
 
 def repeat_fields(log: EventLog, op: str, build: tuple[float, float], end: float,
-                  ckpt_s: float, ckpt_calls: float, pinned: int) -> dict[str, float]:
+                  ckpt_s: float, ckpt_calls: float, pinned: int, py4j_calls: int) -> dict[str, float]:
     """Fields of ``op``; ``build``/``end`` in epoch s, ``ckpt_*`` build deltas,
-    ``pinned`` the persistent RDDs alive after the action."""
+    ``pinned`` the persistent RDDs alive after the action minus those alive
+    before the build, ``py4j_calls`` the build's gateway round trips."""
     mine = op_log(log, op, build, end)
     build_jobs = [(j.start, j.end) for j in mine.jobs.values() if j.phase == "build"]
     build_s = build[1] - build[0]
     out = {"wall_s": end - build[0], "queries.build_s": build_s,
            "queries.build_pure_s": build_s - union_seconds(build_jobs, *build),
            "queries.build_jobs": float(len(build_jobs)), "ckpt.s": ckpt_s, "ckpt.calls": ckpt_calls,
-           "ckpt.pinned_rdds": float(pinned)}
+           "ckpt.pinned_rdds": float(pinned), "build.py4j_calls": float(py4j_calls)}
     m = spark_metrics(mine, phases=("build", "action"))
     out.update((k, m[k]) for k in SPARK_FIELDS)
     return {k: round(v, 4) for k, v in out.items()}
@@ -63,7 +65,7 @@ def main() -> None:
     args = p.parse_args()
 
     from bytesme_etl_batch_pipeline_spark.plans import queries as catalog
-    from bytesme_etl_batch_pipeline_spark.session import get_spark
+    from bytesme_etl_batch_pipeline_spark.session import gateway_round_trips, get_spark
     from bytesme_etl_batch_pipeline_spark.sources import tables
     from run import host_probe
     from worker import warm_up
@@ -77,20 +79,26 @@ def main() -> None:
     tracer = Tracer()
     install_checkpoint_wrappers(tracer, spark)
 
+    def pinned() -> int:
+        """Persistent RDDs alive now (each call reads a fresh snapshot)."""
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
     def repeat(name: str, rep: int) -> tuple:
         """One repeat with the engine's memos empty; ``repeat_fields``' arguments."""
         catalog._LSH_EDGES_MEMO.clear()
         tables._clear_scan_memo()
         op, ckpt0 = f"{name}#{rep}", dict(tracer.counts)
+        pinned0 = pinned()
         spark.sparkContext.setJobGroup(f"{op}:build", name)
-        t0 = time.time()
-        df = catalog.SPARK_QUERIES[name](spark, args.sf_dir)
-        t1 = time.time()
+        with gateway_round_trips() as calls:
+            t0 = time.time()
+            df = catalog.SPARK_QUERIES[name](spark, args.sf_dir)
+            t1 = time.time()
         ckpt = [tracer.counts[k] - ckpt0.get(k, 0.0) for k in ("ckpt.s", "ckpt.calls")]
         spark.sparkContext.setJobGroup(f"{op}:action", name)
         df.count()
         end = time.time()
-        return (op, (t0, t1), end, *ckpt, spark.sparkContext._jsc.getPersistentRDDs().size())
+        return (op, (t0, t1), end, *ckpt, pinned() - pinned0, calls["n"])
 
     reps, errors = {}, {}
     for name in args.names or list(catalog.SPARK_QUERIES):
