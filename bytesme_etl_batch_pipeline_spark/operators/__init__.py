@@ -20,7 +20,6 @@ the reference-operator → implementation map.
 from .aggregate import (  # noqa: F401
     collapse_first_wins,
     dense_ids,
-    group_sequence,
     hash_ids,
     salted_count,
     sequence_code,
@@ -28,7 +27,6 @@ from .aggregate import (  # noqa: F401
 from .bloom import (  # noqa: F401
     bloom_decontaminate,
     bloom_might_contain,
-    bloom_prefiltered_anti_join,
     build_bloom,
 )
 from .categorize import build_rule_cascade, standardize_categories  # noqa: F401
@@ -46,11 +44,10 @@ from .joins import (  # noqa: F401
     lookup_map_join,
     range_join,
     resolve_key,
-    salted_join,
     zip_join,
 )
 from .llm import enrich_descriptions  # noqa: F401
-from .multimodal import decode_and_featurize, resize_images, sample_frames  # noqa: F401
+from .multimodal import decode_and_featurize, sample_frames  # noqa: F401
 from .neardup import (  # noqa: F401
     exact_dedup_by_content,
     minhash_lsh_pairs,

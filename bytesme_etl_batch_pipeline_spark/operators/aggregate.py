@@ -75,18 +75,10 @@ def _hash_id(key_cols: tuple[str, ...], hash_fn) -> Column:
     return F.when(all_present, hash_fn(*[F.col(c) for c in key_cols]))
 
 
-def group_sequence(
-    df: DataFrame, partition_by: list[str], order_by: list[str], out_col: str = "seq"
-) -> DataFrame:
-    """A2: per-group sequence counter (reference ``cat_counters[cat] += 1``,
-    ``generate_mock_data.py:82-103``). One shuffle on the group key; each
-    group numbers independently so this scales with group cardinality.
-    NULLS LAST (SQL ORDER BY default) — see ``dense_ids``."""
-    return df.withColumn(out_col, _sequence(tuple(partition_by), tuple(order_by)))
-
-
 @functools.lru_cache(maxsize=32)
 def _sequence(partition_by: tuple[str, ...], order_by: tuple[str, ...]) -> Column:
+    # A2's per-group counter (reference ``cat_counters[cat] += 1``), each
+    # group numbered independently; NULLS LAST as in ``dense_ids``
     w = Window.partitionBy(*partition_by).orderBy(
         *[F.col(c).asc_nulls_last() for c in order_by]
     )
@@ -108,7 +100,7 @@ def sequence_code(
 
 @functools.lru_cache(maxsize=32)
 def sequence_code_column(brand_col: str, group_col: str, order_by: tuple[str, ...]) -> Column:
-    """``sequence_code``'s code as one Column, the ``group_sequence``
+    """``sequence_code``'s code as one Column, the per-group sequence
     window inlined (one projection, no helper column)."""
     # NULL components -> NULL code (SQL printf/|| semantics), NOT the
     # literal string "null" that Spark's format_string would render
@@ -133,12 +125,12 @@ def salted_count(
     With partial map-side aggregation, plain groupBy handles most skew; the
     salted form is for the pathological hot-key case where even a single
     reducer's *final* partials overflow — standard remedy at 100 TB.
-    Salt derives from ``monotonically_increasing_id`` ALONE (the same rule
-    as ``salted_join``): it is already unique per row, so fully identical
-    rows (the duplicate-heavy hot key) spread across buckets, and hashing
-    the content columns would both add nothing and THROW on un-hashable
-    column types (xxhash64 rejects MapType). Counts are invariant to which
-    bucket a row lands in, so the salt choice is semantically free."""
+    Salt derives from ``monotonically_increasing_id`` ALONE: it is already
+    unique per row, so fully identical rows (the duplicate-heavy hot key)
+    spread across buckets, and hashing the content columns would both add
+    nothing and THROW on un-hashable column types (xxhash64 rejects
+    MapType). Counts are invariant to which bucket a row lands in, so the
+    salt choice is semantically free."""
     salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))
     partial = (
         df.withColumn("__salt", salt)
@@ -146,37 +138,6 @@ def salted_count(
         .agg(F.count(F.lit(1)).alias("__partial"))
     )
     return partial.groupBy(*keys).agg(F.sum("__partial").cast("long").alias(out_col))
-
-
-def hll_partial_sketches(
-    df: DataFrame, key_cols: list[str], value_col: str, lg_k: int = 12
-) -> DataFrame:
-    """Per-group HyperLogLog sketches (Datasketches binary) — the
-    INCREMENTAL distinct-count primitive: persist one sketch per
-    (day/partition/source), then answer "distinct over any key subset"
-    by merging sketches instead of rescanning 100 TB of raw data.
-    Sketch size is KB-scale (2^lg_k registers) regardless of cardinality."""
-    return df.groupBy(*[F.col(c) for c in key_cols]).agg(
-        F.hll_sketch_agg(F.col(value_col), F.lit(lg_k)).alias("sketch")
-    )
-
-
-def hll_merge_estimate(
-    sketches: DataFrame, group_cols: list[str], sketch_col: str = "sketch"
-) -> DataFrame:
-    """Merge persisted sketches up to a coarser grouping and estimate.
-    Union of HLL sketches is lossless w.r.t. the sketch state, so rolling
-    day→month→total never compounds error beyond the base sketch's."""
-    grouped = (
-        sketches.groupBy(*[F.col(c) for c in group_cols])
-        if group_cols
-        else sketches.groupBy()
-    )
-    return grouped.agg(
-        F.hll_sketch_estimate(F.hll_union_agg(F.col(sketch_col))).alias(
-            "approx_distinct"
-        )
-    )
 
 
 #: Applied-batch ids remembered by ``incremental_rollup``'s marker file:

@@ -175,27 +175,6 @@ def bloom_might_contain(df_or_spark, bloom: BloomFilter, col: str | Column) -> C
     return probe(F.xxhash64(c))
 
 
-def bloom_prefiltered_anti_join(
-    big: DataFrame,
-    forbidden: DataFrame,
-    key: str,
-    expected_items: int,
-    fpp: float = 0.01,
-) -> DataFrame:
-    """``big`` rows whose ``key`` is NOT in ``forbidden`` — exact. The Bloom
-    probe splits ``big`` into a definitely-clean part (filter says no → kept
-    outright, never shuffled) and a candidate part that goes through the
-    exact anti-join to shed false positives. Only |hits| + fpp·|big| rows
-    ever reach the join."""
-    bloom = build_bloom(forbidden, key, expected_items=expected_items, fpp=fpp)
-    maybe = bloom_might_contain(big, bloom, key)
-    flagged = big.withColumn("__bloom_maybe", maybe)
-    clean = flagged.filter(~F.col("__bloom_maybe")).drop("__bloom_maybe")
-    candidates = flagged.filter(F.col("__bloom_maybe")).drop("__bloom_maybe")
-    verified = candidates.join(forbidden.select(key).distinct(), key, "left_anti")
-    return clean.unionByName(verified)
-
-
 def bloom_decontaminate(
     corpus_grams: DataFrame,
     eval_grams: DataFrame,

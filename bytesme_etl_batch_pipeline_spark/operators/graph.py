@@ -161,16 +161,6 @@ def connected_components(
         labels.unpersist()
 
 
-def cluster_representatives(components: DataFrame) -> DataFrame:
-    """→ (cluster_id, keep_node): the survivor per cluster under the
-    keep-lowest policy. cluster_id already IS the smallest member (the
-    min-propagation fixpoint), so this is a distinct projection — no
-    aggregation shuffle needed."""
-    return components.select(
-        "cluster_id", F.col("cluster_id").alias("keep_node")
-    ).distinct()
-
-
 # ---------------------------------------------------------------------------
 # Alternating large-star / small-star connected components
 # ---------------------------------------------------------------------------

@@ -160,38 +160,3 @@ def range_join(
     return fact.join(
         F.broadcast(ranges), on=[(v >= F.col(lo_col)) & (v < F.col(hi_col))], how="left"
     )
-
-
-def salted_join(
-    skewed: DataFrame,
-    other: DataFrame,
-    on: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: salt the skewed side's key, replicate the
-    other side once per salt bucket, join on (key, salt).
-
-    AQE's skew-join split handles most cases at runtime; manual salting is
-    the deterministic-plan fallback when a single key is so hot that even
-    split sub-partitions overflow, or when AQE is unavailable (streaming
-    joins). Salt derives from ``monotonically_increasing_id`` alone — a
-    unique per-row position, so fully identical rows (the duplicate-heavy
-    hot-key case salting exists for) spread across buckets with no
-    per-row content hashing (which would also reject MapType columns —
-    xxhash64 over maps is disallowed). The join RESULT is invariant to
-    salt values (salt only picks the reducer). The replicated side grows
-    ×salt_buckets — use only with a small-to-medium right side."""
-    if how not in ("inner", "left", "left_semi", "left_anti", "leftsemi", "leftanti"):
-        # the replicated side carries salt_buckets copies of every row;
-        # right/full outer joins would emit each UNMATCHED right row once
-        # per bucket (multiplicity x salt_buckets)
-        raise ValueError(f"salted_join supports left-preserving joins only, got {how!r}")
-    salted = skewed.withColumn(
-        "__salt",
-        F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets)),
-    )
-    replicated = other.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    return salted.join(replicated, on=[on, "__salt"], how=how).drop("__salt")

@@ -5,7 +5,7 @@ Engine extension (BASELINE.json north star). Convention (schemas.MEDIA):
 are typed metadata so planning (filtering, partitioning, batching) never
 touches bytes.
 
-The heavy steps — decode, resize, frame-sample, feature-extract — run as
+The heavy steps — decode, frame-sample, feature-extract — run as
 Arrow-batched ``mapInPandas`` stages: bytes never pass through Python row
 objects, and partition size controls memory (a partition of 128 MB payloads
 → one Arrow batch of the same scale; set
@@ -22,7 +22,6 @@ from __future__ import annotations
 import hashlib
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -172,68 +171,6 @@ def sample_frames(media: DataFrame, every_n: int = 8) -> DataFrame:
         .filter((F.col("second") % every_n == 0) & (F.col("second") * 1000 < F.col("duration_ms")))
         .select("media_id", "second")
     )
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("payload", StringType(), True),  # BinaryType with real codecs
-    ]
-)
-
-
-def resize_images(
-    media: DataFrame,
-    target_w: int,
-    target_h: int,
-    codec_factory=FakeCodec,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Resize stage: image rows only (planning filter stays JVM-side), bytes
-    re-encoded per Arrow batch. FakeCodec returns a deterministic tag of the
-    (payload, target) pair standing in for real pixels; a production codec
-    (PIL) slots into the same interface. Same dead-letter contract as
-    ``decode_and_featurize``: NULL-id / NULL-payload rows are dropped
-    JVM-side — a NULL id would crash Arrow against the non-nullable output
-    id field, and a NULL payload would hash as the literal string 'None',
-    colliding every junk image into one 'duplicate'."""
-    state: dict = {}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if "c" not in state:
-            state["c"] = codec_factory()
-        suffix = f"|{target_w}x{target_h}".encode()
-        for pdf in batches:
-            # zip-based columnar construction (see decode_and_featurize)
-            payloads = (
-                bytes(p) if isinstance(p, (bytes, bytearray)) else str(p).encode()
-                for p in pdf[payload_col]
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy(),
-                    "width": np.full(len(pdf), target_w, dtype="int32"),
-                    "height": np.full(len(pdf), target_h, dtype="int32"),
-                    "payload": [
-                        "resized:" + hashlib.md5(p + suffix).hexdigest()
-                        for p in payloads
-                    ],
-                }
-            )
-
-    images = media.filter(
-        (F.col("kind") == "image")
-        & F.col(id_col).isNotNull()
-        & F.col(payload_col).isNotNull()
-    )
-    schema = StructType(
-        [StructField(id_col, media.schema[id_col].dataType, False)]
-        + [f for f in RESIZED_SCHEMA.fields if f.name != "media_id"]
-    )
-    return images.mapInPandas(run, schema=schema)
 
 
 # ---------------------------------------------------------------------------

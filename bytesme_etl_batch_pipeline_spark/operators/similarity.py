@@ -55,6 +55,15 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.when(denom != 0, _dots(a, b) / denom)
 
 
+def cosine_from_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their precomputed norms, rounded to
+    1e-6 — the pair kernel of the exact verify stages. Each vector's norm
+    is folded once per vector instead of twice per pair; the doubles are
+    the same as ``cosine_similarity``'s, and a zero norm gives NULL."""
+    denom = na * nb
+    return F.round(F.when(denom != 0, _dots(a, b) / denom), 6)
+
+
 def l2_distance(a: Column, b: Column) -> Column:
     diffs = F.zip_with(
         a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2
@@ -163,13 +172,7 @@ def pairs_above_threshold(
             "cosine",
             # NULL for zero-norm operands (see cosine_similarity) — a NaN
             # here would pass the >= threshold filter below
-            F.round(
-                F.when(
-                    F.col("n_a") * F.col("n_b") != 0,
-                    _dots(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")),
-                ),
-                6,
-            ),
+            cosine_from_norms(F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b")),
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -412,19 +415,14 @@ def lsh_band_window_pairs(
         F.col(vec_col).alias("__vb"),
         _norm(F.col(vec_col)).alias("__nb"),
     )
-    denom = F.col("__na") * F.col("__nb")
     verified = (
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .select(
             "id_a",
             "id_b",
-            F.round(
-                F.when(
-                    denom != 0,
-                    _dots(F.col("__va"), F.col("__vb")) / denom,
-                ),
-                6,
+            cosine_from_norms(
+                F.col("__va"), F.col("__vb"), F.col("__na"), F.col("__nb")
             ).alias("cosine"),
         )
     )

@@ -84,9 +84,9 @@ from ..operators.sampling import (
     weighted_sample,
 )
 from ..operators.similarity import (
-    _dots,
     _hyperplane,
     _norm,
+    cosine_from_norms,
     lsh_signature,
     quantize_int8,
     topk_brute_force,
@@ -9607,9 +9607,8 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sig").alias("qsig"),
         F.col("nrm").alias("qnrm"),
     )
-    denom = F.col("nrm") * F.col("qnrm")
-    score = F.round(
-        F.when(denom != 0, _dots(F.col("embedding"), F.col("qv")) / denom), 6
+    score = cosine_from_norms(
+        F.col("embedding"), F.col("qv"), F.col("nrm"), F.col("qnrm")
     )
     w = Window.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id"))
     # both ranked lists are EVAL-BATCH-sized (≤ 20·corpus-rows before the
@@ -9984,7 +9983,8 @@ def q_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Per-SIDE norms once (|A| + |B| sqrt-folds) instead of inside
     # cosine_similarity per pair (which re-folds both norms twice per pair —
     # 5 folds/pair on the O(|A|·|B|) stage). Bit-exact: same sqrt∘fold
-    # doubles, same when(denom != 0) guard, just materialized per vector.
+    # doubles and zero-norm guard (cosine_from_norms), just materialized
+    # per vector.
     a = e.filter(F.col("label") == 0).select(
         F.col("vec_id").alias("a_id"),
         F.col("embedding").alias("va"),
@@ -9995,14 +9995,13 @@ def q_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("vb"),
         _norm(F.col("embedding")).alias("nb"),
     )
-    denom = F.col("na") * F.col("nb")
     scored = materialize(  # three ranking branches reuse it
         a.crossJoin(F.broadcast(b))
         .select(
             "a_id",
             "b_id",
-            F.round(
-                F.when(denom != 0, _dots(F.col("va"), F.col("vb")) / denom), 6
+            cosine_from_norms(
+                F.col("va"), F.col("vb"), F.col("na"), F.col("nb")
             ).alias("c"),
         )
     )
@@ -11159,12 +11158,10 @@ def q_source_overlap_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-algebra set overlap: estimated |A ∩ B| of the trigram-shingle
     vocabularies of two sources (src0/src1) by HLL inclusion-exclusion
     (|A| + |B| − |A∪B|) — the constant-memory way to size cross-source
-    contamination before an exact join, and the reason the engine
-    persists HLL sketches (``aggregate.hll_partial_sketches``): union is
-    lossless on sketch state, so the three cardinalities come from ONE
-    sketch pass per source. Declared no-oracle (estimates); the error
-    bound versus the exact intersection is property-tested
-    (``tests/test_functions.py``)."""
+    contamination before an exact join. Union is lossless on sketch
+    state, so the three cardinalities come from ONE sketch pass per
+    source. Declared no-oracle (estimates); the error bound versus the
+    exact intersection is property-tested (``tests/test_functions.py``)."""
 
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(

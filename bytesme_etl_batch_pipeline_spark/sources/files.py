@@ -136,9 +136,10 @@ def write_parquet(
     compression: str | None = None,
 ) -> None:
     """Columnar sink — the engine's preferred landing format at scale.
-    ``compression``: zstd is the 100 TB default trade (parquet's snappy
-    default costs ~30-40% more storage/scan bytes for little CPU win on
-    modern cores); pass None to keep the session default."""
+    ``compression`` names the parquet codec for this write; the default
+    None keeps the session's ``spark.sql.parquet.compression.codec``.
+    zstd is the usual choice at 100 TB (snappy costs ~30-40% more
+    storage/scan bytes for little CPU win on modern cores)."""
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -194,125 +195,6 @@ def compact_parquet(
         dst = os.path.join(dst_path, rel) if rel else dst_path
         total += _compact_flat_dir(spark, src, dst, target_file_mb)
     return total
-
-
-def write_orc(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
-    """ORC sink — second columnar landing format (Hive-ecosystem targets);
-    same partitioned layout contract as ``write_parquet``."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — predicate pushdown and column pruning apply as with
-    parquet (Spark's native vectorized ORC reader)."""
-    return spark.read.orc(path)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str,
-    schema: StructType | str | None = None,
-) -> DataFrame:
-    """XML scan (native since Spark 4): one row per ``row_tag`` element —
-    the ingest shape for sitemaps (`<urlset><url>...`), RSS/Atom feeds and
-    XML API dumps a crawl pipeline meets upstream of the HTML fetch.
-    Schema inference samples the files; pass ``schema`` on big inputs to
-    skip the extra pass (same discipline as ``read_csv``). Files split per
-    file, not within one (row boundaries need the tag scan), so shard
-    large dumps into many files upstream."""
-    reader = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
-
-
-def write_xml(
-    df: DataFrame,
-    path: str,
-    row_tag: str,
-    root_tag: str = "rows",
-    mode: str = "overwrite",
-) -> None:
-    """XML sink — interchange with XML-consuming systems; one
-    ``row_tag`` element per row under ``root_tag`` per output file."""
-    (
-        df.write.mode(mode)
-        .format("xml")
-        .option("rowTag", row_tag)
-        .option("rootTag", root_tag)
-        .save(path)
-    )
-
-
-def read_text(
-    spark: SparkSession,
-    path: str,
-    wholetext: bool = False,
-    line_sep: str | None = None,
-    with_lineage: bool = False,
-) -> DataFrame:
-    """Raw text scan — the corpus-ingest primitive for line-oriented dumps
-    (one row per line, column ``value``) or whole-file documents
-    (``wholetext=True`` — one row per file, the natural shape for a
-    file-per-document crawl drop). ``with_lineage`` tags rows with their
-    source file the same way ``read_csv(with_lineage=True)`` does, so a
-    100 TB ingest keeps file-level provenance through every downstream
-    dedup/filter stage."""
-    reader = spark.read
-    if line_sep is not None:
-        reader = reader.option("lineSep", line_sep)
-    # NB: wholetext must go through the text() argument — the DataFrameReader
-    # option of the same name is ignored by the PySpark text() entry point
-    df = reader.text(path, wholetext=wholetext)
-    if with_lineage:
-        df = df.withColumn("source_file", F.input_file_name())
-    return df
-
-
-def write_text(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Text sink: exactly one string column (Spark contract) — the JSONL /
-    plain-corpus emit path when paired with ``to_json``."""
-    df.write.mode(mode).text(path)
-
-
-def read_binary_files(
-    spark: SparkSession, path: str, path_glob: str | None = None
-) -> DataFrame:
-    """Binary-file scan (``binaryFile`` format): one row per file with
-    (path, modificationTime, length, content) — the media-ingest source
-    that feeds ``operators/multimodal`` decode/featurize stages. The
-    ``pathGlobFilter`` prunes at FILE LISTING time (no bytes read for
-    non-matching files); content bytes stream lazily per matched file, so
-    the scan parallelizes across files without loading any of them on the
-    driver."""
-    reader = spark.read.format("binaryFile")
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
-    return reader.load(path)
-
-
-def overwrite_partitions(
-    df: DataFrame, path: str, partition_by: list[str]
-) -> None:
-    """Dynamic partition overwrite: replace ONLY the partitions present in
-    ``df``, leaving every other partition untouched — the idempotent
-    incremental-batch sink (re-running one day's load never clobbers
-    history, and a retry of the same batch converges to the same state).
-    The per-write ``partitionOverwriteMode=dynamic`` option scopes the
-    behavior to this write, so the session default (STATIC — full-table
-    overwrite) stays safe for non-incremental writers."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
 
 
 def protocol_sibling(base_path: str, kind: str) -> str:

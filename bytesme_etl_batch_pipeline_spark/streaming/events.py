@@ -98,39 +98,6 @@ def sessionized_counts(
     )
 
 
-def interval_attribution_join(
-    left: DataFrame,
-    right: DataFrame,
-    user_col: str = "user_id",
-    left_ts: str = "ts_l",
-    right_ts: str = "ts_r",
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Stream-stream inner join with a time-range condition (attribution:
-    every right-event within ``horizon`` AFTER a same-user left-event).
-
-    Works identically on batch and streaming inputs — on streams BOTH sides
-    must be watermarked and the join condition must bound the time skew;
-    that pair of constraints is what lets the engine evict join state (a
-    left row can be dropped once the watermark passes ts_l + horizon). An
-    unbounded-condition stream-stream join would grow state forever at
-    100 TB/day."""
-    lw = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    rw = right.withWatermark(right_ts, watermark) if right.isStreaming else right
-    cond = (
-        (lw[user_col] == rw[user_col])
-        & (rw[right_ts] >= lw[left_ts])
-        & (rw[right_ts] <= lw[left_ts] + F.expr(f"INTERVAL {horizon}"))
-    )
-    return lw.join(rw, cond).select(
-        lw[user_col].alias(user_col),
-        F.col(left_ts),
-        F.col(right_ts),
-        ((F.unix_timestamp(right_ts) - F.unix_timestamp(left_ts))).alias("lag_sec"),
-    )
-
-
 def make_upsert_step(
     key_cols: list[str],
     target_path: str,
@@ -289,16 +256,3 @@ def run_stream_to_parquet_snapshot(
         .start()
     )
     q.awaitTermination()
-
-
-def stream_static_enrich(
-    stream: DataFrame, dim: DataFrame, on: list[str] | str, how: str = "left"
-) -> DataFrame:
-    """Stream-static dimension enrichment: every micro-batch joins against
-    the STATIC dim snapshot (broadcast — no state store, no watermark; the
-    dim is re-resolved per batch, so a dim refresh between batches is
-    picked up automatically). The production shape for enriching a Kafka
-    stream with a slowly-changing dimension when per-event freshness
-    within a batch is not required; for interval-accurate history use the
-    SCD2 table + ``interval_attribution_join`` instead."""
-    return stream.join(F.broadcast(dim), on, how)

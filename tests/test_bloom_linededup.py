@@ -13,7 +13,6 @@ from bytesme_etl_batch_pipeline_spark.operators.bloom import (
     BloomFilter,
     _sizing,
     bloom_might_contain,
-    bloom_prefiltered_anti_join,
     build_bloom,
 )
 from bytesme_etl_batch_pipeline_spark.operators.neardup import segment_dedup
@@ -54,25 +53,6 @@ def test_bloom_probe_matches_build_hashing():
             np.uint64(1) << (idx & np.uint64(63)),
         )
     assert bf.might_contain_hashes(h).all()
-
-
-def test_bloom_prefiltered_anti_join_is_exact(spark):
-    """End-to-end equivalence with the plain anti-join — false positives are
-    shed by the verification join, false negatives cannot exist."""
-    big = spark.range(0, 5000).selectExpr("concat('k', id % 700) AS k", "id AS v")
-    forbidden = spark.range(0, 150).selectExpr("concat('k', id * 3) AS k")
-
-    got = bloom_prefiltered_anti_join(big, forbidden, "k", expected_items=150)
-    want = big.join(forbidden, "k", "left_anti")
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-
-def test_bloom_empty_forbidden_set(spark):
-    big = spark.range(0, 100).selectExpr("concat('k', id) AS k")
-    empty = spark.range(0, 0).selectExpr("concat('k', id) AS k")
-    got = bloom_prefiltered_anti_join(big, empty, "k", expected_items=0)
-    assert got.count() == 100
 
 
 def test_segment_dedup_keeps_first_occurrence(spark):

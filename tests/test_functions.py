@@ -219,37 +219,6 @@ def test_approx_percentiles_error_bound(spark, sf_dir):
         assert abs(approx[k][1] - p99) / max(p99, 1) < 0.05
 
 
-def test_hll_sketch_persistence_and_merge(spark, sf_dir, tmp_path):
-    """Incremental distinct counts: per-day sketches persisted to parquet,
-    re-read, merged to a total — estimate must (a) match the estimate from
-    sketching the whole column directly (merge is state-lossless) and
-    (b) sit within 5% of the exact distinct count."""
-    from pyspark.sql import functions as F
-
-    from bytesme_etl_batch_pipeline_spark.operators.aggregate import (
-        hll_merge_estimate,
-        hll_partial_sketches,
-    )
-
-    from bytesme_etl_batch_pipeline_spark.sources.tables import load_table
-
-    events = load_table(spark, sf_dir, "events").select(
-        F.to_date("ts").alias("day"), "user_id"
-    )
-    daily = hll_partial_sketches(events, ["day"], "user_id")
-    out = str(tmp_path / "daily_sketches")
-    daily.write.parquet(out)  # the persistence step: KB per day, not raw data
-
-    merged = hll_merge_estimate(spark.read.parquet(out), [])
-    est = merged.collect()[0]["approx_distinct"]
-
-    direct = hll_merge_estimate(hll_partial_sketches(events, [], "user_id"), [])
-    assert est == direct.collect()[0]["approx_distinct"]
-
-    exact = events.select("user_id").distinct().count()
-    assert abs(est - exact) / exact < 0.05
-
-
 def test_parse_unit_price_udtf_tolerant(spark):
     """The UDTF parses the reference's single-quoted struct (apostrophes in
     values included), emits NULL price for non-numeric entries, and emits
@@ -478,24 +447,6 @@ def test_vi_tokenize_column_fallback_equals_words(spark):
     ).collect()
     assert [r["vi"] for r in rows] == [r["ws"] for r in rows]
     assert rows[0]["vi"] == ["xin", "chào", "các", "bạn", "hà", "nội"]
-
-
-def test_salted_join_handles_map_columns(spark):
-    """Salt must not content-hash the skewed side: xxhash64 rejects
-    MapType, and the position id alone already spreads identical rows."""
-    from pyspark.sql import functions as SF
-
-    from bytesme_etl_batch_pipeline_spark.operators.joins import salted_join
-
-    skewed = spark.createDataFrame(
-        [(1, {"a": 1}), (1, {"b": 2}), (2, {"c": 3})],
-        "k long, props map<string,int>",
-    )
-    dim = spark.createDataFrame([(1, "one"), (2, "two")], "k long, name string")
-    got = sorted(
-        (r["k"], r["name"]) for r in salted_join(skewed, dim, on="k").collect()
-    )
-    assert got == [(1, "one"), (1, "one"), (2, "two")]
 
 
 def test_lit_doubles_bit_identical_to_elementwise_fold(spark):

@@ -411,3 +411,51 @@ def test_no_script_shadows_a_stdlib_module() -> None:
         if p.stem in sys.stdlib_module_names
     )
     assert shadowing == []
+
+
+def _fake_checkout(root: Path, package: dict[str, str], tests: str) -> Path:
+    pkg = root / "bytesme_etl_batch_pipeline_spark"
+    for rel, text in package.items():
+        (pkg / rel).parent.mkdir(parents=True, exist_ok=True)
+        (pkg / rel).write_text(text)
+    (root / "tests").mkdir(parents=True)
+    (root / "tests" / "test_x.py").write_text(tests)
+    return root
+
+
+def test_reach_separates_query_test_and_dead_code(tmp_path: Path) -> None:
+    """``tools/reach.py``: a helper a query body calls is reached, one only
+    a test names is listed as reached by tests (a docstring mention does not
+    count), one nobody names is listed as reached by nothing, and a unit the
+    second checkout no longer defines is tagged ``deleted``."""
+    queries = (
+        "def register(name):\n    return lambda f: f\n\n\n"
+        "def helper():\n    return 1\n\n\n"
+        "def test_only():\n    '''Not helper's twin; names dead() in prose.'''\n    return 2\n\n\n"
+        "def dead():\n    return 3\n\n\n"
+        "@register('q')\ndef q_one():\n    return helper()\n"
+    )
+    tests = "from pkg import test_only\n\n\ndef test_it():\n    assert test_only() == 2\n"
+    parent = _fake_checkout(tmp_path / "parent", {"plans/queries.py": queries}, tests)
+    change = _fake_checkout(
+        tmp_path / "change",
+        {"plans/queries.py": queries.replace("def dead():\n    return 3\n\n\n", "")},
+        tests,
+    )
+    proc = subprocess.run(
+        [sys.executable, str(TOOLS / "reach.py"), str(parent), str(change)],
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    out = json.loads(proc.stdout)
+    rows = {
+        side: {(r["name"], r["reached_by"], r["tag"]) for r in out[str(path)]["rows"]}
+        for side, path in (("parent", parent), ("change", change))
+    }
+    assert rows["parent"] == {
+        ("test_only", "tests", "untagged"),
+        ("dead", "nothing", "deleted"),
+    }
+    assert rows["change"] == {("test_only", "tests", "untagged")}
+    assert out[str(parent)]["reached_only_by"]["tests"]["lines"] == 3

@@ -8,7 +8,6 @@ import os
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -294,28 +293,6 @@ def test_read_csv_corrupt_capture_and_stable_row_pos(spark, tmp_path):
     assert rows[2]["n"] == 30
 
 
-def test_orc_roundtrip_partitioned_with_pushdown(spark, sf_dir, tmp_path):
-    """ORC round-trip: schema + values survive; partition pruning applies on
-    the partition column and predicates reach the ORC scan."""
-    from bytesme_etl_batch_pipeline_spark.sources.files import read_orc, write_orc
-    from bytesme_etl_batch_pipeline_spark.sources.tables import load_table
-
-    orders = load_table(spark, sf_dir, "orders").limit(500)
-    path = str(tmp_path / "orders_orc")
-    write_orc(orders, path, partition_by=["o_orderstatus"])
-
-    back = read_orc(spark, path)
-    assert back.count() == 500
-    assert set(back.columns) == set(orders.columns)
-
-    pruned = back.filter(back["o_orderstatus"] == "F").filter(back["o_custkey"] > 0)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "o_custkey" in plan  # predicate reaches scan
-    got = pruned.count()
-    want = orders.filter("o_orderstatus = 'F' and o_custkey > 0").count()
-    assert got == want
-
-
 def test_parquet_zstd_compression_codec(spark, tmp_path):
     """The compression knob reaches the files: footers report ZSTD and the
     payload shrinks versus uncompressed."""
@@ -347,81 +324,6 @@ def test_parquet_zstd_compression_codec(spark, tmp_path):
         os.path.getsize(f) for f in glob.glob(os.path.join(p, "*.parquet"))
     )
     assert size(zstd_path) < size(raw_path)
-
-
-def test_text_roundtrip_lines_and_wholetext(spark, tmp_path):
-    from bytesme_etl_batch_pipeline_spark.sources.files import read_text, write_text
-
-    src = tmp_path / "corpus"
-    src.mkdir()
-    (src / "a.txt").write_text("line one\nline two\n", encoding="utf-8")
-    (src / "b.txt").write_text("solo", encoding="utf-8")
-
-    lines = read_text(spark, str(src), with_lineage=True)
-    got = {(r["value"], os.path.basename(r["source_file"].split("file:")[-1]))
-           for r in lines.collect()}
-    assert got == {("line one", "a.txt"), ("line two", "a.txt"), ("solo", "b.txt")}
-
-    whole = read_text(spark, str(src), wholetext=True)
-    texts = sorted(r["value"] for r in whole.collect())
-    assert texts == ["line one\nline two\n", "solo"]
-
-    out = tmp_path / "emitted"
-    write_text(lines.select("value"), str(out))
-    back = sorted(r["value"] for r in read_text(spark, str(out)).collect())
-    assert back == ["line one", "line two", "solo"]
-
-
-def test_binary_files_scan_glob_prunes(spark, tmp_path):
-    from bytesme_etl_batch_pipeline_spark.sources.files import read_binary_files
-
-    media = tmp_path / "media"
-    media.mkdir()
-    (media / "x.jpg").write_bytes(b"\xff\xd8fakejpeg")
-    (media / "y.jpg").write_bytes(b"\xff\xd8other")
-    (media / "notes.txt").write_bytes(b"not media")
-
-    df = read_binary_files(spark, str(media), path_glob="*.jpg")
-    rows = {os.path.basename(r["path"]): (r["length"], bytes(r["content"]))
-            for r in df.collect()}
-    assert set(rows) == {"x.jpg", "y.jpg"}
-    assert rows["x.jpg"] == (10, b"\xff\xd8fakejpeg")
-    # schema is the multimodal ingest contract (binary content + metadata)
-    assert [f.name for f in df.schema.fields] == [
-        "path", "modificationTime", "length", "content",
-    ]
-
-
-def test_dynamic_partition_overwrite_preserves_other_partitions(spark, tmp_path):
-    from bytesme_etl_batch_pipeline_spark.sources.files import overwrite_partitions
-
-    out = str(tmp_path / "facts")
-    base = spark.createDataFrame(
-        [("2026-01-01", 1, 10.0), ("2026-01-01", 2, 20.0), ("2026-01-02", 3, 30.0)],
-        "day string, id int, v double",
-    )
-    overwrite_partitions(base, out, ["day"])
-
-    # reprocess day 1 with corrected values — day 2 must survive untouched
-    fixed = spark.createDataFrame(
-        [("2026-01-01", 1, 11.0)], "day string, id int, v double"
-    )
-    overwrite_partitions(fixed, out, ["day"])
-
-    # partition-column inference types day as DATE on read-back
-    got = {
-        (str(r["day"]), r["id"], r["v"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == {("2026-01-01", 1, 11.0), ("2026-01-02", 3, 30.0)}
-
-    # idempotence: the same batch twice converges to the same state
-    overwrite_partitions(fixed, out, ["day"])
-    again = {
-        (str(r["day"]), r["id"], r["v"])
-        for r in spark.read.parquet(out).collect()
-    }
-    assert again == got
 
 
 def test_merge_upsert_parquet_lifecycle(spark, tmp_path):
@@ -1032,37 +934,3 @@ def test_urllib_fetcher_returns_http_error_status(monkeypatch):
     status, body = urllib_fetcher()("http://example.invalid/x")
     assert status == 404
     assert body == "soft-404 page body"
-
-
-def test_xml_roundtrip_and_sitemap_frontier(spark, tmp_path):
-    """XML source/sink (native in Spark 4): write/read round-trip, explicit
-    schema skips inference, and the crawl-relevant shape — a sitemap's
-    <urlset><url><loc> rows becoming the fetch frontier."""
-    from bytesme_etl_batch_pipeline_spark.sources.files import read_xml, write_xml
-    from bytesme_etl_batch_pipeline_spark.sources.http import fetch_pages
-
-    df = spark.createDataFrame(
-        [(1, "https://t.vn/a"), (2, "https://t.vn/b")], "id long, loc string"
-    )
-    p = str(tmp_path / "xmls")
-    write_xml(df, p, row_tag="url", root_tag="urlset")
-    back = read_xml(spark, p, row_tag="url")
-    assert sorted((r.id, r.loc) for r in back.collect()) == [
-        (1, "https://t.vn/a"),
-        (2, "https://t.vn/b"),
-    ]
-    typed = read_xml(spark, p, row_tag="url", schema="id long, loc string")
-    assert typed.schema.simpleString() == "struct<id:bigint,loc:string>"
-
-    # sitemap -> frontier -> distributed fetch, end to end
-    fetched = fetch_pages(typed.select(F.col("loc").alias("url")))
-    assert fetched.filter(F.col("status").isNotNull()).count() == 2
-
-
-def test_write_xml_append_mode(spark, tmp_path):
-    from bytesme_etl_batch_pipeline_spark.sources.files import read_xml, write_xml
-
-    p = str(tmp_path / "xa")
-    write_xml(spark.createDataFrame([(1,)], "v long"), p, row_tag="r")
-    write_xml(spark.createDataFrame([(2,)], "v long"), p, row_tag="r", mode="append")
-    assert sorted(r.v for r in read_xml(spark, p, row_tag="r").collect()) == [1, 2]

@@ -393,27 +393,6 @@ def test_collapse_first_wins_nonorderable_attrs(spark):
     assert out == {"k1": {"a": "1"}, "k2": {"b": "5"}}
 
 
-def test_resize_images_plumbing(spark):
-    from bytesme_etl_batch_pipeline_spark.operators.multimodal import resize_images
-
-    media = spark.createDataFrame(
-        [
-            (1, "image", bytearray(b"img1"), 0),
-            (2, "video", bytearray(b"vid1"), 1000),
-            (3, "image", bytearray(b"img2"), 0),
-        ],
-        "media_id long, kind string, payload binary, duration_ms long",
-    )
-    out = resize_images(media, 224, 224).collect()
-    assert {r["media_id"] for r in out} == {1, 3}  # videos skipped
-    for r in out:
-        assert (r["width"], r["height"]) == (224, 224)
-        assert r["payload"].startswith("resized:")
-    # deterministic re-encode tag
-    again = resize_images(media, 224, 224).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, again))
-
-
 def test_word_ngrams_short_text_empty(spark):
     """Regression: sequence(1,0) is descending in Spark — short texts must
     yield empty shingle sets, not bogus partial grams."""
@@ -428,18 +407,7 @@ def test_word_ngrams_short_text_empty(spark):
     assert len(by_doc[2]) == 2      # one minhash per seed
 
 
-# --- scale utilities: salted join, incremental dedup, compaction -------------
-
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    from bytesme_etl_batch_pipeline_spark.operators.joins import salted_join
-    from bytesme_etl_batch_pipeline_spark.sources.tables import load_table
-
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load_table(spark, sf_dir, "nation").withColumnRenamed("n_nationkey", "c_nationkey")
-    plain = c.join(n, "c_nationkey").select("c_custkey", "n_name")
-    salted = salted_join(c, n, on="c_nationkey", salt_buckets=8).select("c_custkey", "n_name")
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
+# --- scale utilities: incremental dedup, compaction --------------------------
 
 def test_incremental_dedup_across_batches(spark):
     from bytesme_etl_batch_pipeline_spark.operators.dedup import incremental_dedup
@@ -505,10 +473,7 @@ def test_quality_features_empty_and_whitespace_docs(spark):
 def test_connected_components_known_graph(spark):
     """Two chains + a triangle: labels must collapse to the min member of
     each component, including multi-hop propagation (chain diameter 3)."""
-    from bytesme_etl_batch_pipeline_spark.operators.graph import (
-        cluster_representatives,
-        connected_components,
-    )
+    from bytesme_etl_batch_pipeline_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         # component A: chain 1-2-3-4 (diameter 3); component B: triangle
@@ -518,12 +483,6 @@ def test_connected_components_known_graph(spark):
     )
     cc = {r["node"]: r["cluster_id"] for r in connected_components(edges).collect()}
     assert cc == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-
-    reps = {
-        r["cluster_id"]: r["keep_node"]
-        for r in cluster_representatives(connected_components(edges)).collect()
-    }
-    assert reps == {1: 1, 10: 10, 20: 20}
 
 
 def test_connected_components_nonconvergence_raises(spark):
@@ -583,16 +542,6 @@ def test_connected_components_string_node_ids(spark):
     )
     cc = {r["node"]: r["cluster_id"] for r in connected_components(edges).collect()}
     assert cc == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
-
-
-def test_salted_join_rejects_outer(spark):
-    import pytest
-
-    from bytesme_etl_batch_pipeline_spark.operators.joins import salted_join
-
-    df = spark.createDataFrame([(1, "a")], ["k", "v"])
-    with pytest.raises(ValueError, match="left-preserving"):
-        salted_join(df, df, on="k", how="full")
 
 
 def test_snowflake_split_keeps_null_dim_key_rows(spark):
@@ -1088,26 +1037,6 @@ def test_star_cc_nonconvergence_frees_checkpoint_blocks(spark):
         connected_components_star(chain, max_iter=1)
     after = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     assert after - before == set(), "error path must not pin blocks"
-
-
-def test_resize_images_dead_letters_null_rows(spark):
-    """resize_images shares the decode stage's dead-letter contract: a NULL
-    id would crash Arrow against the non-nullable output field, a NULL
-    payload would hash as the literal string 'None' and collide every junk
-    image into one 'duplicate'."""
-    from bytesme_etl_batch_pipeline_spark.operators.multimodal import resize_images
-
-    media = spark.createDataFrame(
-        [
-            (1, "image", b"aa"),
-            (None, "image", b"bb"),
-            (3, "image", None),
-            (4, "audio", b"cc"),
-        ],
-        "media_id long, kind string, payload binary",
-    )
-    got = resize_images(media, 8, 8).collect()
-    assert [r["media_id"] for r in got] == [1]
 
 
 def test_ivf_assign_pandas_null_element_matches_expression_twin(spark):

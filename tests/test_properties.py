@@ -15,10 +15,7 @@ from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
 
-from bytesme_etl_batch_pipeline_spark.operators.bloom import (
-    bloom_prefiltered_anti_join,
-    build_bloom,
-)
+from bytesme_etl_batch_pipeline_spark.operators.bloom import build_bloom
 from bytesme_etl_batch_pipeline_spark.operators.neardup import segment_dedup
 from bytesme_etl_batch_pipeline_spark.operators.textops import words
 
@@ -74,29 +71,6 @@ def test_segment_dedup_invariants(spark, texts):
         for s in segs(out[i].clean_text)
     ]
     assert len(flat) == len(set(flat))
-
-
-@given(
-    members=st.lists(st.text(alphabet="abcdef", min_size=1, max_size=6), max_size=40),
-    probes=st.lists(st.text(alphabet="abcdef", min_size=1, max_size=6), max_size=40),
-)
-@_SETTINGS
-def test_bloom_anti_join_always_exact(spark, members, probes):
-    """For ANY forbidden set and ANY probe set (overlapping or not), the
-    Bloom-prefiltered anti-join equals the plain anti-join — fpp shows up
-    only as extra verification work, never in the result."""
-    big = spark.createDataFrame([(p,) for p in probes] or [("__none__",)], "k string")
-    forbidden = spark.createDataFrame(
-        [(m,) for m in members] or [("__never__",)], "k string"
-    )
-    got = sorted(
-        r.k
-        for r in bloom_prefiltered_anti_join(
-            big, forbidden, "k", expected_items=max(1, len(members))
-        ).collect()
-    )
-    want = sorted(r.k for r in big.join(forbidden, "k", "left_anti").collect())
-    assert got == want
 
 
 @given(members=st.lists(st.text(min_size=0, max_size=8), min_size=1, max_size=50))

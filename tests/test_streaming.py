@@ -186,48 +186,6 @@ def test_multibatch_drain_of_ordered_directory_layout(spark, sf_dir, tmp_path):
     assert _sorted_rows(got) == _sorted_rows(expected)
 
 
-def test_stateful_running_totals(spark, sf_dir):
-    """applyInPandasWithState: after draining the stream, per-user totals
-    must equal the batch groupBy (state folded across micro-batches)."""
-    import tempfile
-
-    from bytesme_etl_batch_pipeline_spark.streaming.stateful import running_user_totals
-    from pyspark.sql import functions as F
-
-    stream = stream_events.read_events_stream(spark, sf_dir)
-    out = running_user_totals(stream)
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            out.writeStream.format("memory")
-            .queryName("user_totals")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    # update mode may emit a row per micro-batch; the LAST emission per user
-    # is the final state — with one input file there is exactly one batch.
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM user_totals").collect()
-    }
-    expected = {
-        r["user_id"]: (r["n"], r["t"])
-        for r in spark.read.parquet(f"{sf_dir}/events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("t"),
-        )
-        .collect()
-    }
-    assert set(got) == set(expected)
-    for uid, (n, t) in expected.items():
-        assert got[uid][0] == n
-        assert abs(got[uid][1] - t) < 0.05  # float fold vs sum tolerance
-
-
 def test_watermark_drops_late_data(spark, tmp_path):
     """Real watermark semantics: once the watermark passes a window's end,
     the window is finalized (emitted in append mode) and its state evicted —
@@ -293,58 +251,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
     # the late duplicate into the finalized hour-3 window was dropped:
     # emitted exactly once, count stayed 1 (no re-emission, no n=2)
     assert len(finalized.get(3, [])) == 1
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream inner join with watermarks + time-range condition must
-    equal the same join run in batch over the drained input (attribution:
-    purchases within 1 h after a same-user click)."""
-    import datetime
-    import tempfile
-
-    from bytesme_etl_batch_pipeline_spark.streaming.events import (
-        interval_attribution_join,
-    )
-
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    clicks = [
-        (1, t0),
-        (1, t0 + datetime.timedelta(hours=3)),
-        (2, t0 + datetime.timedelta(minutes=10)),
-        (3, t0),
-    ]
-    buys = [
-        (1, t0 + datetime.timedelta(minutes=30)),   # joins click@0h
-        (1, t0 + datetime.timedelta(hours=2)),      # outside 1h horizon
-        (1, t0 + datetime.timedelta(hours=3, minutes=59)),  # joins click@3h
-        (2, t0 + datetime.timedelta(minutes=20)),   # joins
-        (4, t0),                                    # no click user
-    ]
-    cdir, bdir = str(tmp_path / "clicks"), str(tmp_path / "buys")
-    spark.createDataFrame(clicks, "user_id long, ts_l timestamp").write.parquet(cdir)
-    spark.createDataFrame(buys, "user_id long, ts_r timestamp").write.parquet(bdir)
-
-    left_b = spark.read.parquet(cdir)
-    right_b = spark.read.parquet(bdir)
-    expected = _sorted_rows(interval_attribution_join(left_b, right_b).collect())
-    assert len(expected) == 3
-
-    left_s = spark.readStream.schema(left_b.schema).parquet(cdir)
-    right_s = spark.readStream.schema(right_b.schema).parquet(bdir)
-    joined = interval_attribution_join(left_s, right_s)
-    assert joined.isStreaming
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            joined.writeStream.format("memory")
-            .queryName("attrib")
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    got = _sorted_rows(spark.sql("SELECT * FROM attrib").collect())
-    assert got == expected
 
 
 def test_foreach_batch_upsert_keyed_merge(spark, tmp_path):
@@ -520,45 +426,6 @@ def test_foreach_batch_upsert_order_col_last_writer_wins(spark, tmp_path):
         run_foreach_batch_upsert(stream, ["k"], target, ckpt, order_col="seq")
     got = {r["k"]: r["v"] for r in spark.read.parquet(target).collect()}
     assert got == {1: "fresh", 2: "only"}
-
-
-def test_stream_static_enrich_matches_batch(spark, sf_dir, tmp_path):
-    """Stream-static broadcast join: drained availableNow result equals the
-    batch join, including events whose user has no dim row (left outer)."""
-    from pyspark.sql import functions as F
-
-    from bytesme_etl_batch_pipeline_spark.sources.tables import load_table
-    from bytesme_etl_batch_pipeline_spark.streaming.events import (
-        read_events_stream,
-        run_stream_to_memory,
-        stream_static_enrich,
-    )
-
-    dim = (
-        load_table(spark, sf_dir, "customer")
-        .select(
-            F.col("c_custkey").alias("user_id"),
-            F.col("c_mktsegment").alias("segment"),
-        )
-        .filter(F.col("user_id") % 2 == 0)  # odd users stay dim-less
-    )
-    stream = read_events_stream(spark, sf_dir)
-    enriched = stream_static_enrich(stream, dim, "user_id").select(
-        "event_id", "user_id", "segment"
-    )
-    run_stream_to_memory(
-        enriched, "enriched_mem", str(tmp_path / "ckpt"), output_mode="append"
-    )
-    got = spark.table("enriched_mem")
-    batch = (
-        load_table(spark, sf_dir, "events")
-        .join(F.broadcast(dim), "user_id", "left")
-        .select("event_id", "user_id", "segment")
-    )
-    g = {(r.event_id, r.user_id, r.segment) for r in got.collect()}
-    b = {(r.event_id, r.user_id, r.segment) for r in batch.collect()}
-    assert g == b
-    assert any(s is None for _, _, s in g)  # dim-less users survive the left join
 
 
 def test_streaming_session_restart_recovers_state(spark, sf_dir, tmp_path):
